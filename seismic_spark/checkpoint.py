@@ -273,6 +273,7 @@ class CheckpointedBuild:
         )
         # the stage snapshots ARE plain parquet scans of these dirs —
         # replica hydration can read them directly with Arrow (r6)
+        idx.storage_paths["vocab"] = self._dir("vocab")
         idx.storage_paths["forward"] = self._dir("forward")
         idx.storage_paths["postings"] = self._dir("postings")
         return idx

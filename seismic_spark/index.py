@@ -24,6 +24,41 @@ from seismic_spark import textprep, vocab as voc
 from seismic_spark.postings import IndexConfig
 
 
+# key under which Spark's parquet writer stores the DataFrame schema (JSON)
+# in every data file's footer
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str):
+    """The schema Spark wrote into the footer of a data file directly under
+    ``path``, or None when there is none: a directory-partitioned table
+    (its files sit in ``col=value/`` subdirectories, and the partition
+    column is not in the footer) or a file from another writer."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    try:
+        part = next(
+            f for f in sorted(os.listdir(path))
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+    except (OSError, StopIteration):
+        return None
+    raw = (pq.read_metadata(os.path.join(path, part)).metadata or {}).get(
+        _SPARK_SCHEMA_KEY
+    )
+    return StructType.fromJson(json.loads(raw)) if raw else None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` planned from the footer schema when
+    there is one: schema inference is a Spark job per table (footer reads
+    on the executors), the footer read here is one local file."""
+    schema = _footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def _check_missing_tokens(dropped_pairs, missing_tokens: str) -> None:
     """Shared-vocab build guard: count document (doc, token) pairs whose
     token is absent from the supplied vocab, then warn or raise.
@@ -891,10 +926,13 @@ class SeismicSparkIndex:
     def load(cls, spark: SparkSession, path: str) -> "SeismicSparkIndex":
         """S7 analogue.  A ``packed_values`` forward snapshot is unpacked
         lazily (one vectorized decode per Arrow batch) back to the standard
-        (doc_id, terms, weights) schema — search code is storage-agnostic."""
+        (doc_id, terms, weights) schema — search code is storage-agnostic.
+        Tables are planned from their footer schemas, so loading launches
+        no Spark job (except for a ``partitions_by_term_hash`` postings
+        table, whose schema is inferred)."""
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
-        forward = spark.read.parquet(os.path.join(path, "forward"))
+        forward = _read_parquet(spark, os.path.join(path, "forward"))
         if "packed_scale" in meta:
             import numpy as np
             import pandas as pd
@@ -936,24 +974,25 @@ class SeismicSparkIndex:
             )
         idx = cls(
             spark,
-            spark.read.parquet(os.path.join(path, "vocab")),
+            _read_parquet(spark, os.path.join(path, "vocab")),
             forward,
-            spark.read.parquet(os.path.join(path, "postings")),
+            _read_parquet(spark, os.path.join(path, "postings")),
             meta["n_docs"],
             meta["avgdl"],
             IndexConfig(**meta["config"]),
             term_buckets=int(meta.get("term_buckets", 0)),
         )
         if meta.get("has_docmap"):
-            idx.docmap = spark.read.parquet(os.path.join(path, "docmap"))
+            idx.docmap = _read_parquet(spark, os.path.join(path, "docmap"))
         if meta.get("has_content"):
-            idx.content = spark.read.parquet(os.path.join(path, "content"))
+            idx.content = _read_parquet(spark, os.path.join(path, "content"))
         if "space_usage" in meta:
             # snapshot carries its own byte accounting — replica hydration's
             # budget gate then costs zero Spark jobs (r6, VERDICT #5)
             idx._usage_cache = {
                 k: int(v) for k, v in meta["space_usage"].items()
             }
+        idx.storage_paths["vocab"] = os.path.join(path, "vocab")
         idx.storage_paths["postings"] = os.path.join(path, "postings")
         if "packed_scale" not in meta:  # packed forward is unpacked in-plan
             idx.storage_paths["forward"] = os.path.join(path, "forward")

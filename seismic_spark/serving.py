@@ -36,6 +36,7 @@ hydration that would not fit fails loudly instead of paging.
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 
 import numpy as np
@@ -45,6 +46,8 @@ from seismic_spark import codec
 from seismic_spark import search as srch
 
 __all__ = ["ServingReplica", "TermPostings"]
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -103,24 +106,31 @@ def _list_flat(col) -> tuple:
 
 
 def _read_snapshot(idx, table: str, columns: list[str]):
-    """Direct multithreaded Arrow read of an UNTRANSFORMED parquet snapshot
-    (``idx.storage_paths``, set by load()/CheckpointedBuild) — bypasses the
-    single-threaded Spark driver collect (r6, VERDICT #5).  Returns None
-    when no driver-readable snapshot exists; the caller falls back to
-    ``toArrow()``.  Value-safe by construction: these are the very files the
-    DataFrame scans, and the hydration groups rows by sorted (term_id, salt)
-    / doc_id keys itself, so file/row order cannot matter."""
-    path = (getattr(idx, "storage_paths", None) or {}).get(table)
-    if not path:
-        return None
-    try:
-        import pyarrow.dataset as pads
+    """``columns`` of index table ``table`` as one Arrow table.
 
-        return pads.dataset(path, format="parquet", partitioning="hive").to_table(
-            columns=columns
-        )
-    except Exception:
-        return None
+    Reads the UNTRANSFORMED parquet snapshot directly with multithreaded
+    Arrow when the index has one (``idx.storage_paths``, set by
+    load()/CheckpointedBuild), bypassing the single-threaded Spark driver
+    collect (r6, VERDICT #5) and launching no Spark job.  Without a
+    snapshot, or when the direct read fails (logged), collects the
+    DataFrame with ``toArrow()``.  Value-safe by construction: these are
+    the very files the DataFrame scans, and the hydration groups rows by
+    sorted term / (term_id, salt) / doc_id keys itself, so file/row order
+    cannot matter."""
+    path = (getattr(idx, "storage_paths", None) or {}).get(table)
+    if path:
+        try:
+            import pyarrow.dataset as pads
+
+            return pads.dataset(
+                path, format="parquet", partitioning="hive"
+            ).to_table(columns=columns)
+        except Exception as exc:
+            _log.warning(
+                "direct read of the %s snapshot at %s failed (%r); hydrating "
+                "it through Spark instead", table, path, exc, exc_info=True,
+            )
+    return getattr(idx, table).select(*columns).toArrow()
 
 
 def _binary_flat(bin_arr) -> tuple[np.ndarray, np.ndarray]:
@@ -264,12 +274,14 @@ class ServingReplica:
     def from_index(cls, idx, max_bytes: int = 4 << 30) -> "ServingReplica":
         """Hydrate from a built or loaded `SeismicSparkIndex`.
 
-        Three bounded collects (vocab, postings, forward) via Arrow; gaps
-        are varint-decoded and summaries dequantized ONCE here, so the query
-        path touches only ready numpy arrays.  Raises ``MemoryError`` when
-        the index's own space accounting (Q12, `space_usage()`) exceeds
-        ``max_bytes`` — hydration is an explicit capacity decision, exactly
-        like deploying the reference's RAM-resident index to a host.
+        Three bounded reads (vocab, postings, forward) via Arrow, straight
+        from the snapshot files when the index has them (a loaded index
+        hydrates without a Spark job); gaps are varint-decoded and summaries
+        dequantized ONCE here, so the query path touches only ready numpy
+        arrays.  Raises ``MemoryError`` when the index's own space
+        accounting (Q12, `space_usage()`) exceeds ``max_bytes`` — hydration
+        is an explicit capacity decision, exactly like deploying the
+        reference's RAM-resident index to a host.
         """
         usage = idx.space_usage()
         if usage["total"] > max_bytes:
@@ -278,10 +290,11 @@ class ServingReplica:
                 f"replica budget max_bytes={max_bytes}; shard the corpus at "
                 "build time or raise the budget"
             )
-        vocab = {
-            r["term"]: int(r["term_id"])
-            for r in idx.vocab.select("term", "term_id").collect()
-        }
+        vtbl = _read_snapshot(idx, "vocab", ["term", "term_id"])
+        vocab = dict(
+            zip(vtbl.column("term").to_pylist(),
+                vtbl.column("term_id").to_pylist())
+        )
 
         # ---- postings: one Arrow transfer, everything flat ---------------
         # The whole table lands as Arrow columns (values + offsets); gaps
@@ -296,8 +309,6 @@ class ServingReplica:
             "summary_terms", "summary_codes", "summary_min", "summary_quant",
         ]
         tbl = _read_snapshot(idx, "postings", p_cols)
-        if tbl is None:
-            tbl = idx.postings.select(*p_cols).toArrow()
         # r6 regroup strategy: flatten the table ONCE in storage order and
         # build each term's arrays as SLICES of the flats.  (term_id, salt)
         # rows are unique and a term is one row unless blocks_per_row
@@ -352,8 +363,6 @@ class ServingReplica:
         # flattened (no nested-column sort, no element permutation —
         # _score_docs gathers by slice).
         ftbl = _read_snapshot(idx, "forward", ["doc_id", "terms", "weights"])
-        if ftbl is None:
-            ftbl = idx.forward.select("doc_id", "terms", "weights").toArrow()
         doc_ids_raw = (
             ftbl.column("doc_id").combine_chunks().to_numpy().astype(np.int64)
         )

@@ -73,46 +73,8 @@ def get_spark(
     # session startup under throttled page supply while the first real UDF
     # stage got no faster (build-line medians 17.3 s with vs 16.2 s
     # without): the recurring cost is per-stage page faulting of fresh
-    # Arrow/pandas buffers, not worker forking.  tools/ab_build_leg.py.
-    spark = builder.getOrCreate()
-    _warm_session(spark)
-    return spark
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """Run one miniature end-to-end build + search at session creation.
-
-    A cold session's FIRST real build pays Catalyst rule JIT, whole-stage
-    codegen compilation, Arrow serde setup and the Python-UDF serializer
-    stack — event-log measured as ~5–7 s of between-job driver gaps plus
-    inflated first stages on this engine's cold build.  A 64-row synthetic
-    build exercises the same plan shapes (tokenize UDF, aggregates,
-    windows, posting assembly, search join/top-k) at negligible data cost,
-    moving the one-time warmup out of the first real operator (guide §4.5
-    init-once, applied to the JIT; same rationale as the preloaded worker
-    daemon).  Touches no user data and persists nothing.
-    SEISMIC_WARM_SESSION=0 disables; reused sessions skip via the flag.
-    """
-    if os.environ.get("SEISMIC_WARM_SESSION", "1") != "1":
-        return
-    if getattr(spark, "_seismic_warmed", False):
-        return
-    try:
-        from seismic_spark.index import SeismicSparkIndex
-        from seismic_spark.postings import IndexConfig
-
-        rows = [
-            (i, f"w{i % 7} w{(i * 3) % 11} w{(i * 5) % 13}") for i in range(64)
-        ]
-        docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-        idx = SeismicSparkIndex.build(
-            spark, docs, IndexConfig(n_postings=8, summary_energy=0.8)
-        )
-        idx.postings.count()
-        idx.batch_search([("w", ["w1"], [1.0])], k=3).count()
-        spark._seismic_warmed = True
-    except Exception:  # warmup must never break session creation
-        pass
+    # Arrow/pandas buffers, not worker forking.  OPTIMIZATION_r06.md §20.
+    return builder.getOrCreate()
 
 
 def ensure_min_parallelism(df, key: str | None = None):

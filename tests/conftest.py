@@ -1,16 +1,8 @@
 """Shared Spark fixture: one local session for the whole test run."""
 
-import os
-
 import pytest
 
-# The session-creation JIT warmup (session._warm_session) exists to move
-# one-time codegen/JIT cost out of the BENCH's first timed line; tests
-# measure correctness, not cold-start, so skip the ~15 s it would add to
-# every test session (callers can re-enable via the env).
-os.environ.setdefault("SEISMIC_WARM_SESSION", "0")
-
-from seismic_spark.session import get_spark  # noqa: E402
+from seismic_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")

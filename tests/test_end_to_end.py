@@ -260,3 +260,39 @@ def test_term_bucket_partition_pruning(spark, tmp_path):
         for r in loaded.batch_search(queries, k=10, heap_factor=1.0).collect()
     }
     assert got == want and got
+
+
+@pytest.mark.parametrize(
+    "save_kw",
+    [{}, {"packed_values": True}, {"partitions_by_term_hash": 4}],
+    ids=["plain", "packed", "term_buckets"],
+)
+def test_load_footer_schema_matches_inferred(spark, tmp_path, save_kw):
+    """load() plans each table from the schema Spark wrote into its parquet
+    footer instead of an inference job.  The footer's top-level
+    nullability differs from the inferred schema (``terms`` is
+    non-nullable there), so pin that the planned DataFrame's schema is
+    exactly what inference gives.  A term-bucketed postings table has no
+    footer at its root and falls back to inference."""
+    import os
+
+    from seismic_spark.index import _footer_schema, _read_parquet
+
+    pages = synth_pages(spark, 120, vocab_size=300, seed=4)
+    docs = pages.select("url", "text").withColumn(
+        "doc_id", F.abs(F.xxhash64("url"))
+    )
+    idx = SeismicSparkIndex.build(
+        spark, docs, IndexConfig(n_postings=40, value_type="fixedu8")
+    )
+    path = str(tmp_path / "idx")
+    idx.save(path, **save_kw)
+    loaded = SeismicSparkIndex.load(spark, path)
+    for table in ("forward", "vocab", "postings"):
+        tdir = os.path.join(path, table)
+        inferred = spark.read.parquet(tdir).schema
+        partitioned = table == "postings" and "partitions_by_term_hash" in save_kw
+        assert (_footer_schema(tdir) is None) == partitioned
+        assert _read_parquet(spark, tdir).schema == inferred
+        if not (table == "forward" and "packed_values" in save_kw):
+            assert getattr(loaded, table).schema == inferred

@@ -152,3 +152,54 @@ def test_replica_repeated_query_id_merges_like_engine(spark, corpus):
     # exactly one rank sequence for the merged query, no duplicate ranks
     ranks = [r[1] for r in got if r[0] == "qrep"]
     assert ranks == sorted(set(ranks))
+
+
+def test_restart_to_serving_launches_no_spark_job(spark, corpus, tmp_path):
+    """`load` → `serving_replica()` of a saved snapshot runs no Spark job:
+    tables are planned from their footer schemas and vocab, postings and
+    forward are read straight from the files.  The replica still holds the
+    vocab a Spark collect gives and answers bitwise like the replica of
+    the in-session index."""
+    cfg = IndexConfig(n_postings=30, summary_energy=0.6, blocking="kmeans")
+    queries = synth_queries(600, n_queries=8, seed=13)
+    idx = SeismicSparkIndex.build(spark, corpus, cfg)
+    path = str(tmp_path / "idx")
+    idx.save(path)
+
+    sc = spark.sparkContext
+    group = "test-restart-to-serving"
+    sc.setJobGroup(group, "load + hydrate")
+    try:
+        rep = SeismicSparkIndex.load(spark, path).serving_replica()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    collected = {
+        r["term"]: int(r["term_id"])
+        for r in idx.vocab.select("term", "term_id").collect()
+    }
+    assert rep.vocab == collected
+    live = idx.serving_replica()
+    for q in queries:
+        assert _rows(rep.batch_search([q], k=10, heap_factor=0.9)) == _rows(
+            live.batch_search([q], k=10, heap_factor=0.9)
+        )
+
+
+def test_replica_falls_back_and_logs_when_snapshot_read_fails(
+    spark, corpus, tmp_path, caplog
+):
+    """A failed direct snapshot read falls back to the Spark read with a
+    warning that names the table — never silently, never an error."""
+    idx = SeismicSparkIndex.build(
+        spark, corpus, IndexConfig(n_postings=25, summary_energy=0.6)
+    )
+    path = str(tmp_path / "idx")
+    idx.save(path)
+    loaded = SeismicSparkIndex.load(spark, path)
+    loaded.storage_paths["vocab"] = str(tmp_path / "missing")
+    with caplog.at_level("WARNING", logger="seismic_spark.serving"):
+        rep = loaded.serving_replica()
+    assert any("vocab" in r.getMessage() for r in caplog.records)
+    assert rep.vocab == idx.serving_replica().vocab
