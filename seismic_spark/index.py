@@ -11,6 +11,7 @@ writer format for "iceberg" on a cluster with the runtime catalog).
 from __future__ import annotations
 
 import json
+import logging
 import os
 from dataclasses import asdict
 
@@ -23,6 +24,21 @@ from seismic_spark import search as srch
 from seismic_spark import textprep, vocab as voc
 from seismic_spark.postings import IndexConfig
 
+
+_log = logging.getLogger(__name__)
+
+# In-process gate: an index whose forward table fits this byte budget
+# (est. n_docs·avgdl·16 B) answers batch_search, bruteforce and build_knn
+# from its one cached ServingReplica — the reference's own in-process
+# architecture (inverted_index.rs:38), applied when one process holds the
+# corpus.  Above the cap nothing is hydrated and the Spark formulations run
+# unchanged, so the gate is scale-safe.  avgdl counts TOKENS, so for
+# tokenized corpora the estimate overshoots true forward bytes ~5–10×.
+_LOCAL_SCORE_MAX_BYTES = int(
+    os.environ.get("SEISMIC_LOCAL_SCORE_MAX_BYTES", str(384 << 20))
+)
+
+_RESULTS_SCHEMA = "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
 
 # key under which Spark's parquet writer stores the DataFrame schema (JSON)
 # in every data file's footer
@@ -116,11 +132,14 @@ class SeismicSparkIndex:
         # search on this index retires this index's previous ubs cache only,
         # so interleaved searches on two indexes never thrash each other
         self._ubs_caches: list[DataFrame] = []
-        # per-INSTANCE driver CSR cache (search.batch_search local_score):
-        # the forward table collected once for driver-side rescoring of
-        # size-gated interactive batches; tables are immutable, so the copy
-        # never invalidates (convert() returns a new index)
-        self._csr_cache: dict = {}
+        # per-INSTANCE vocab cache (search.resolve_queries): the driver-side
+        # {term: term_id} map, collected once for the queries Spark answers
+        self._vocab_cache: dict = {}
+        # the in-process replica (serving_replica) and its κ-NN broadcast
+        # (knn.build_knn), each made at most once per instance; tables are
+        # immutable, so neither invalidates (convert() returns a new index)
+        self._replica = None
+        self._replica_bc = None
         # space_usage() result cache: the index tables are immutable, so the
         # byte accounting is too — load() pre-populates it from meta.json so
         # replica hydration skips the full-table pre-scan (r6, VERDICT #5)
@@ -482,38 +501,39 @@ class SeismicSparkIndex:
         ``n_knn > 0`` refines results with each hit's stored κ-NN neighbors
         (Q7) — the reference takes ``n_knn`` on every search
         (pylib/mod.rs:490-533); requires :meth:`build_knn` (or a loaded knn
-        table on ``self.knn``) first."""
+        table on ``self.knn``) first.
+
+        A size-gated index answers from its cached replica (see
+        :meth:`_in_process_replica`), bit-identical to the Spark paths; the
+        replica is not safe for concurrent calls."""
         if two_phase is None:
             two_phase = (
                 self.config.summary_energy < 1.0
                 or not self.config.quant_ceil
                 or heap_factor < 1.0
             )
-        qvecs = srch.resolve_queries(
-            self.spark, queries, self.vocab, cache=self._csr_cache
-        )
-        # driver-CSR scoring gate: interactive batches on a forward table
-        # that fits the driver budget run the fully-local fast path
-        # (search._driver_theta_local — result-identical, one Spark job);
-        # larger corpora keep the distributed formulations unchanged
-        est_fwd_bytes = int(self.n_docs * max(float(self.avgdl), 1.0) * 16)
-        local_score = (
-            os.environ.get("SEISMIC_LOCAL_SCORE", "1") == "1"
-            and 0 < est_fwd_bytes <= srch._LOCAL_SCORE_MAX_BYTES
-        )
-        base = srch.batch_search(
-            self.spark,
-            self._postings_for(qvecs),
-            self.forward,
-            qvecs,
-            k=k,
-            query_cut=query_cut,
-            heap_factor=heap_factor,
-            two_phase=two_phase,
-            cache_registry=self._ubs_caches,
-            local_score=local_score,
-            csr_cache=self._csr_cache,
-        )
+        rep = self._in_process_replica()
+        if rep is None or n_knn > 0:
+            qvecs = srch.resolve_queries(
+                self.spark, queries, self.vocab, cache=self._vocab_cache
+            )
+        if rep is not None:
+            base = self.spark.createDataFrame(
+                rep.batch_search(queries, k, query_cut, heap_factor, two_phase),
+                _RESULTS_SCHEMA,
+            )
+        else:
+            base = srch.batch_search(
+                self.spark,
+                self._postings_for(qvecs),
+                self.forward,
+                qvecs,
+                k=k,
+                query_cut=query_cut,
+                heap_factor=heap_factor,
+                two_phase=two_phase,
+                cache_registry=self._ubs_caches,
+            )
         if n_knn <= 0:
             return base
         from seismic_spark import knn as knn_mod
@@ -525,20 +545,44 @@ class SeismicSparkIndex:
         )
 
     def serving_replica(self, max_bytes: int = 4 << 30):
-        """Hydrate a RAM-resident :class:`~seismic_spark.serving.ServingReplica`
-        from this index — the reference's own serving architecture
-        (inverted_index.rs:38, pylib/mod.rs:59-291: the index lives in one
-        process's memory and every query is answered in-process).
+        """This index's RAM-resident
+        :class:`~seismic_spark.serving.ServingReplica` — the reference's own
+        serving architecture (inverted_index.rs:38, pylib/mod.rs:59-291: the
+        index lives in one process's memory and every query is answered
+        in-process).
 
-        The replica's `batch_search` is bit-identical to this index's
-        `batch_search` (tests/test_serving.py) at per-query latencies the
-        Spark scheduler cannot reach; Spark remains the build/refresh tier
-        and the bulk-query tier.  Raises ``MemoryError`` when `space_usage()`
-        exceeds ``max_bytes`` — shard the corpus at build time for indexes
-        beyond one host (doc-disjoint top-k merges exactly)."""
-        from seismic_spark.serving import ServingReplica
+        Hydrated once per index instance and cached: later calls re-check
+        `space_usage()` against ``max_bytes`` and return the same object,
+        the one size-gated `batch_search`, `bruteforce` and `build_knn`
+        answer from.  Its answers are bit-identical to the Spark
+        formulations (tests/test_serving.py).  Raises ``MemoryError`` when
+        `space_usage()` exceeds ``max_bytes`` — shard the corpus at build
+        time for indexes beyond one host (doc-disjoint top-k merges
+        exactly)."""
+        from seismic_spark.serving import ServingReplica, check_budget
 
-        return ServingReplica.from_index(self, max_bytes=max_bytes)
+        if self._replica is None:
+            self._replica = ServingReplica.from_index(self, max_bytes=max_bytes)
+        else:
+            check_budget(self, max_bytes)
+        return self._replica
+
+    def _in_process_replica(self):
+        """THE in-process-versus-Spark decision behind `batch_search`,
+        `bruteforce` and `build_knn`: the cached replica when the index is
+        under ``_LOCAL_SCORE_MAX_BYTES``, else None ("use Spark").  A
+        hydration that raises ``MemoryError`` is logged and answered by
+        Spark instead."""
+        est = int(self.n_docs * max(float(self.avgdl), 1.0) * 16)
+        if self.postings is None or not 0 < est <= _LOCAL_SCORE_MAX_BYTES:
+            return None
+        try:
+            return self.serving_replica()
+        except MemoryError as exc:
+            _log.warning(
+                "in-process replica unavailable (%s); answering with Spark", exc
+            )
+            return None
 
     def prepare_serving(self) -> "SeismicSparkIndex":
         """Pin the index for repeated-search serving (the in-session analogue
@@ -574,6 +618,10 @@ class SeismicSparkIndex:
     def unpersist_serving(self) -> None:
         for df in (self.forward, self.postings, self.vocab):
             df.unpersist()
+        if self._replica_bc is not None:
+            # unpersist, not destroy: a lazy κ-NN frame may still read it
+            self._replica_bc.unpersist(blocking=False)
+            self._replica_bc = None
 
     def _postings_for(self, qvecs) -> DataFrame:
         """Partition-pruned postings scan: for a bucket-partitioned snapshot
@@ -624,18 +672,15 @@ class SeismicSparkIndex:
         self, queries: list[tuple[str, list[str], list[float]]], k: int = 10
     ) -> DataFrame:
         """Exact full-scan ground truth (Q10)."""
+        rep = self._in_process_replica()
+        if rep is not None:
+            return self.spark.createDataFrame(
+                rep.bruteforce(queries, k), _RESULTS_SCHEMA
+            )
         qvecs = srch.resolve_queries(
-            self.spark, queries, self.vocab, cache=self._csr_cache
+            self.spark, queries, self.vocab, cache=self._vocab_cache
         )
-        est_fwd_bytes = int(self.n_docs * max(float(self.avgdl), 1.0) * 16)
-        local_score = (
-            os.environ.get("SEISMIC_LOCAL_SCORE", "1") == "1"
-            and 0 < est_fwd_bytes <= srch._LOCAL_SCORE_MAX_BYTES
-        )
-        return srch.bruteforce_search(
-            self.spark, self.forward, qvecs, k,
-            local_score=local_score, csr_cache=self._csr_cache,
-        )
+        return srch.bruteforce_search(self.spark, self.forward, qvecs, k)
 
     # --------------------------------------------------------------- knn ----
 
@@ -660,7 +705,7 @@ class SeismicSparkIndex:
         if getattr(self, "knn", None) is None:
             raise ValueError("call build_knn() first")
         qvecs = srch.resolve_queries(
-            self.spark, queries, self.vocab, cache=self._csr_cache
+            self.spark, queries, self.vocab, cache=self._vocab_cache
         )
         base = srch.batch_search(
             self.spark, self.postings, self.forward, qvecs,

@@ -23,22 +23,6 @@ from pyspark.sql import functions as F
 
 from seismic_spark import search as srch
 
-# Broadcast-CSR rescore gate for graph construction: the self-search tail
-# collects forward + query vectors (two bounded driver collects of
-# ≈ n_docs·avgdl·16 B each) and broadcasts them so candidate pairs are
-# scored WITHOUT a pair×vector join — the pair rows (the corpus × ~corpus
-# candidate set) never carry vectors through an exchange or the Arrow
-# boundary (guide §8).  Above the cap the un-collected join path runs
-# unchanged, so the gate is scale-safe: est. bytes = 2 sides × n·avgdl·16.
-# avgdl counts TOKENS, so the estimate overshoots true CSR bytes ~5–10×
-# for tokenized corpora; at the 1 GB default the worst-case per-worker
-# residency (pre-weighted vectors, avgdl == nnz) is ~1 GB across both
-# broadcast sides — ~32 GB over 32 local workers, within the 128 GB box,
-# and far less in the tokenized common case.
-_KNN_BCAST_MAX_BYTES = int(
-    os.environ.get("SEISMIC_KNN_BCAST_MAX_BYTES", str(1 << 30))
-)
-
 
 def build_knn(index, nknn: int = 10, batch_size: int | None = None,
               query_cut: int = 10, heap_factor: float = 0.7,
@@ -59,28 +43,21 @@ def build_knn(index, nknn: int = 10, batch_size: int | None = None,
         F.col("terms").alias("q_terms"),
         F.col("weights").alias("q_weights"),
     ).filter(F.size("q_terms") > 0)
-    est_vec_bytes = 2 * int(index.n_docs * max(float(index.avgdl), 1.0) * 16)
-    gated = not two_phase and 0 < est_vec_bytes <= _KNN_BCAST_MAX_BYTES
-    if gated and os.environ.get("SEISMIC_KNN_REPLICA", "1") == "1":
-        # map-only self-search (r6 pass 3): broadcast a ServingReplica —
-        # bit-identical to batch_search by test_serving's pinning — and
-        # run every query against it inside ONE map stage over the forward
-        # scan: no block-UB scan, no gap-blob exchange, no per-pair rows
-        # anywhere (guide §8 taken to its end for size-gated corpora).
-        # Above the gate (or SEISMIC_KNN_REPLICA=0) the prior paths run
-        # unchanged.
+    rep = None if two_phase else index._in_process_replica()
+    if rep is not None:
+        # map-only self-search: broadcast the index's replica —
+        # bit-identical to batch_search by test_serving's pinning — and run
+        # every query against it inside ONE map stage over the forward scan:
+        # no block-UB scan, no gap-blob exchange, no per-pair rows anywhere
+        # (guide §8 taken to its end for size-gated corpora)
         res = _replica_self_search(
-            index, queries_df, nknn + 1, query_cut, heap_factor
+            index, rep, queries_df, nknn + 1, query_cut, heap_factor
         )
     else:
-        rescore_bcast = (
-            gated and os.environ.get("SEISMIC_KNN_BCAST", "1") == "1"
-        )
         res = srch.batch_search(
             spark, index.postings, index.forward, queries_df,
             k=nknn + 1, query_cut=query_cut, heap_factor=heap_factor,
             two_phase=two_phase, broadcast_queries=False,
-            rescore_bcast=rescore_bcast,
         )
     # group on the STRING query_id so the aggregation reuses the top-k
     # window's hash(query_id) partitioning (no extra Exchange — guide §2.4);
@@ -104,14 +81,15 @@ def build_knn(index, nknn: int = 10, batch_size: int | None = None,
 
 
 def _replica_self_search(
-    index, queries_df: DataFrame, k: int, query_cut: int, heap_factor: float
+    index, rep, queries_df: DataFrame, k: int, query_cut: int,
+    heap_factor: float,
 ) -> DataFrame:
     """Score every query row against a broadcast :class:`ServingReplica` in
     one map stage — (query_id, rank, doc_id, score), bitwise-identical to
     `search.batch_search` on the same index/params (the replica IS the
     pinned bit-identical twin of batch_search, tests/test_serving.py;
-    `test_build_knn_replica_matches_join` pins this path against both prior
-    formulations on real data).
+    `test_build_knn_replica_matches_join` pins this path against the join
+    path on real data).
 
     Per-row duplicate/merge semantics match the engine's `_repair_qkey`
     batch-side repair: forward rows are duplicate-free and term-sorted by
@@ -124,8 +102,11 @@ def _replica_self_search(
     (query, term) pair's gap blob through an exchange and re-decoded it
     per task.  One narrow map over the forward scan is the entire search.
     """
-    rep = index.serving_replica()
-    bc = index.spark.sparkContext.broadcast(rep)
+    # one broadcast per index, reused by later builds and released by
+    # unpersist_serving()
+    if index._replica_bc is None:
+        index._replica_bc = index.spark.sparkContext.broadcast(rep)
+    bc = index._replica_bc
 
     def gen(it):
         import numpy as np

@@ -7,11 +7,11 @@ glibc mmap()s and munmap()s on free (default threshold: dynamic, ≤32 MB) or
 that jemalloc's decay returns to the OS is re-faulted from zero on the next
 iteration.  Event-log measured on this engine: an identical fused-rescore
 stage ran 121 s vs 2.3 s across two windows purely on "time to run Python
-workers" (page stalls), and the slicing fix in `search._score_pairs_csr`
-recovered it by keeping temporaries under the mmap threshold.
+workers" (page stalls), and slicing the scorer's temporaries under the
+mmap threshold recovered it (OPTIMIZATION_r06.md §9).
 
 This module applies the same principle to the WHOLE process, so every
-allocation site (driver-side CSR scoring, replica hydration, worker-side
+allocation site (replica scoring and hydration, worker-side
 Arrow batches, pandas frames) reuses its pages instead of re-faulting them:
 
 - glibc malloc: raise M_MMAP_THRESHOLD to 256 MB and disable trim, so

@@ -107,7 +107,7 @@ def recall_grid(
       {hf, accuracy, blocks_matched, blocks_scanned, skip_rate, candidates}
     """
     qvecs = srch.resolve_queries(
-        index.spark, queries, index.vocab, cache=index._csr_cache
+        index.spark, queries, index.vocab, cache=index._vocab_cache
     )
     exact = srch.bruteforce_search(index.spark, index.forward, qvecs, k).persist()
     exact.count()

@@ -66,10 +66,6 @@ QVec = tuple[np.ndarray, np.ndarray]  # (term_ids sorted asc int64, weights f64)
 QUERIES_SCHEMA = "query_id STRING, q_terms ARRAY<INT>, q_weights ARRAY<DOUBLE>"
 
 _KEY_SHIFT = np.int64(1) << np.int64(32)  # (row, term) → sortable combined key
-# dense query-weight LUT gate for _score_pairs_csr (one f64 slot per term id,
-# 32 MB at the 4M default — the serving replica's §13b gate, same rationale);
-# larger id spaces fall back to the value-identical searchsorted gather
-_SCORE_LUT_MAX_DIM = 1 << 22
 # driver-side vocab map gate for resolve_queries (strings + ids; ~60 MB at
 # the 1M default) — over it, token resolution stays a per-batch join
 _VOCAB_MAP_MAX_TERMS = int(os.environ.get("SEISMIC_VOCAB_MAP_MAX_TERMS", str(1 << 20)))
@@ -500,214 +496,9 @@ def _block_ubs(postings_matched: DataFrame, with_gaps: bool = True) -> DataFrame
     return cols_df.mapInArrow(scan, out_schema)
 
 
-def _vectors_csr(
-    df: DataFrame, id_col: str, t_col: str, w_col: str, with_qkey: bool = False
-):
-    """Collect an (id, terms, weights) DataFrame into flat CSR numpy arrays
-    for executor-side broadcast (guide §3.1 / §8: ship the small vector table
-    once per executor instead of once per candidate pair).
-
-    Returns ``(ids_sorted, perm, starts, lens, t_flat, w_flat)`` — ids sorted
-    for searchsorted lookup, ``perm`` mapping sorted position → original row,
-    and per-original-row (start, len) slices into the flat term/weight
-    arrays.  ``with_qkey=True`` additionally returns the prebuilt
-    ``(qkey, qw)`` pair for :func:`_gather_qw` — the same
-    row·2^32+term combined-key construction (and the same
-    :func:`_repair_qkey` duplicate merge) the join-path scorer applies per
-    Arrow batch, so gathered weights are bitwise identical.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    tbl = df.select(id_col, t_col, w_col).toArrow().combine_chunks()
-    n = tbl.num_rows
-    ids_col = tbl.column(0)
-    ids_col = ids_col.chunk(0) if ids_col.num_chunks else pa.array([], ids_col.type)
-    if pa.types.is_string(ids_col.type) or pa.types.is_large_string(ids_col.type):
-        ids = np.asarray(ids_col.to_pylist(), dtype=np.str_)
-    else:
-        ids = ids_col.to_numpy(zero_copy_only=False).astype(np.int64)
-    t_a = tbl.column(1)
-    t_a = t_a.chunk(0) if t_a.num_chunks else pa.array([], t_a.type)
-    w_a = tbl.column(2)
-    w_a = w_a.chunk(0) if w_a.num_chunks else pa.array([], w_a.type)
-    lens = pc.list_value_length(t_a).to_numpy(zero_copy_only=False).astype(np.int64)
-    starts = np.cumsum(lens) - lens
-    t_flat = t_a.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-    w_flat = w_a.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    perm = np.argsort(ids, kind="stable")
-    out = (ids[perm], perm.astype(np.int64), starts, lens, t_flat, w_flat)
-    if not with_qkey:
-        return out
-    row_rep = np.repeat(np.arange(n, dtype=np.int64), lens)
-    qkey, qw = _repair_qkey(row_rep * _KEY_SHIFT + t_flat, w_flat)
-    return out + (qkey, qw)
-
-
-def _score_pairs_csr(
-    qi_pair: np.ndarray,
-    di_v: np.ndarray,
-    f_starts: np.ndarray,
-    f_lens: np.ndarray,
-    f_t: np.ndarray,
-    f_w: np.ndarray,
-    q_key: np.ndarray,
-    q_w: np.ndarray,
-    threads: int = 1,
-) -> np.ndarray:
-    """Exact scores for (query-index, doc-position) pairs against CSR
-    vectors — the same flat f64 contribution arrays, in doc-element order,
-    as :func:`exact_score`'s Arrow batches, so every score is bitwise
-    identical.
-
-    Scored in bounded element slices: one unsliced pass allocates
-    element-length temporaries of tens-to-hundreds of MB, which glibc mmaps
-    and returns to the OS on free — every call then faults fresh pages, and
-    under a throttled host page supply the pass stalls for minutes
-    (event-log measured: 121 s vs 2.3 s python time for identical input).
-    ≤ ~12 MB temporaries stay under the allocator's dynamic mmap threshold
-    and are recycled in-heap.  Per-pair contribution arrays and their
-    segment_sums are unchanged by the slicing.
-
-    ``threads > 1`` scores the (independent, disjoint-output) slices on a
-    thread pool — the hot numpy ops release the GIL, measured ~4× at 8
-    threads.  Per-slice computation is untouched, so scores stay bitwise
-    identical at any thread count.  DRIVER callers use it; executor-side
-    callers keep 1 (their parallelism is the task grid).
-
-    Query-weight gather (r6 pass 3): the per-element ``_gather_qw``
-    binary search (log|q_key| comparisons PER ELEMENT) was this pass's
-    dominant cost — microbenched ~18× slower than a fancy-index gather at
-    the knn design point, and the fused-rescore stage's task-seconds were
-    ≈ the searchsorted cost alone.  The pair stream arrives in per-query
-    runs, so the serving replica's dense-LUT trick (§13b) applies: scatter
-    the current run's repaired weights into a per-thread dense table,
-    gather by term id, zero the run's slots.  Value-identical by
-    construction — stored (duplicate-merged) weight at hits, 0.0 at misses,
-    the same floats `_gather_qw` returns — so every score is bitwise
-    unchanged (pinned by test_r6_optimizations).  Falls back to the
-    searchsorted gather when the term-id space exceeds ``_SCORE_LUT_MAX_DIM``
-    (dense table > 32 MB) or ``SEISMIC_SCORE_LUT=0``.
-    """
-    lens = f_lens[di_v]
-    ends = np.cumsum(lens)
-    scores = np.empty(qi_pair.size, dtype=np.float64)
-    cap = 1_500_000
-    npair = qi_pair.size
-    bounds: list[tuple[int, int]] = []
-    lo = 0
-    while lo < npair:
-        base = int(ends[lo - 1]) if lo else 0
-        hi = int(np.searchsorted(ends, base + cap, side="right"))
-        hi = min(max(hi, lo + 1), npair)
-        bounds.append((lo, hi))
-        lo = hi
-
-    lut_dim = 0
-    if q_key.size and os.environ.get("SEISMIC_SCORE_LUT", "1") == "1":
-        # all gathered term ids are < _KEY_SHIFT by construction; dim covers
-        # both the forward element ids and the query term ids
-        dim = 1 + max(
-            int(f_t.max()) if f_t.size else 0,
-            int((q_key % _KEY_SHIFT).max()),
-        )
-        if dim <= _SCORE_LUT_MAX_DIM:
-            lut_dim = dim
-    _luts: dict[int, np.ndarray] = {}
-
-    def _slice(b: tuple[int, int]) -> None:
-        lo, hi = b
-        sl = slice(lo, hi)
-        l_sl = lens[sl]
-        pstarts = np.cumsum(l_sl) - l_sl
-        tot = int(pstarts[-1] + l_sl[-1]) if l_sl.size else 0
-        idx = np.repeat(f_starts[di_v[sl]] - pstarts, l_sl) + np.arange(
-            tot, dtype=np.int64
-        )
-        if lut_dim:
-            import threading
-
-            tid = threading.get_ident()
-            lut = _luts.get(tid)
-            if lut is None:
-                lut = np.zeros(lut_dim, dtype=np.float64)
-                _luts[tid] = lut
-            terms_el = f_t[idx]
-            qi_sl = qi_pair[sl]
-            qw_elem = np.empty(tot, dtype=np.float64)
-            run_s = np.flatnonzero(
-                np.concatenate(([True], qi_sl[1:] != qi_sl[:-1]))
-            )
-            run_e = np.concatenate((run_s[1:], [qi_sl.size]))
-            el_of = np.concatenate((pstarts, [tot]))
-            for rs, re_ in zip(run_s, run_e):
-                q = int(qi_sl[rs])
-                a = int(np.searchsorted(q_key, q * _KEY_SHIFT, side="left"))
-                bq = int(
-                    np.searchsorted(q_key, (q + 1) * _KEY_SHIFT, side="left")
-                )
-                es, ee = int(el_of[rs]), int(el_of[re_])
-                if a == bq:  # query absent from q_key → all misses (0.0)
-                    qw_elem[es:ee] = 0.0
-                    continue
-                qt_r = (q_key[a:bq] % _KEY_SHIFT).astype(np.int64)
-                lut[qt_r] = q_w[a:bq]
-                qw_elem[es:ee] = lut[terms_el[es:ee]]
-                lut[qt_r] = 0.0
-            scores[sl] = codec.segment_sums(qw_elem * f_w[idx], pstarts, l_sl)
-            return
-        qw_elem = _gather_qw(
-            q_key, q_w, np.repeat(qi_pair[sl], l_sl), f_t[idx]
-        )
-        scores[sl] = codec.segment_sums(qw_elem * f_w[idx], pstarts, l_sl)
-
-    if threads > 1 and len(bounds) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=threads) as ex:
-            list(ex.map(_slice, bounds))
-    else:
-        for b in bounds:
-            _slice(b)
-    return scores
-
-
-def _topk_select(
-    qi: np.ndarray, ds: np.ndarray, scores: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-query top-k selection over scored pairs by the pinned
-    (score desc, doc_id asc) total order :func:`topk`'s row_number uses.
-    Returns (selected pair indices, int32 ranks 1..k) — negating finite f64
-    scores is order-exact, so the selection equals the window's."""
-    order = np.lexsort((ds, -scores, qi))
-    qo = qi[order]
-    ostarts = np.flatnonzero(np.concatenate(([True], qo[1:] != qo[:-1])))
-    olens = np.diff(np.concatenate((ostarts, [qo.size])))
-    rank = np.arange(qo.size, dtype=np.int64) - np.repeat(ostarts, olens)
-    keepk = rank < k
-    return order[keepk], (rank[keepk] + 1).astype(np.int32)
-
-
-def _fused_candidates(
-    ubs: DataFrame, k: int, heap_factor: float, rescore=None
-) -> DataFrame:
+def _fused_candidates(ubs: DataFrame, k: int, heap_factor: float) -> DataFrame:
     """θ derivation + skip filter + gap decode + cross-list dedup in ONE
     streamed operator — the two_phase=False tail of the in-plan path.
-
-    ``rescore=(fwd_bc, q_bc)`` (broadcast CSR tuples from
-    :func:`_vectors_csr`) additionally exact-scores the decoded candidates
-    against the broadcast vectors and emits the FINAL per-query top-k rows
-    (query_id, rank, doc_id, score) — the whole rescore tail collapses into
-    this one operator: no candidate×vector join, no 10^7-pair Arrow
-    boundary, no corpus-wide top-k exchange (guide §8: every decision uses
-    broadcast metadata; only k rows per query leave).  Scores are bitwise
-    identical to :func:`exact_score` (same flat f64 contribution arrays in
-    doc-element order, same `_gather_qw`/`_repair_qkey` floats, same
-    `segment_sums`), and the per-query rank order is the same pinned
-    (score desc, doc_id asc) total order :func:`topk` uses — pinned by
-    test_r6_optimizations.py.  Pairs whose doc or query id is absent from
-    the broadcast tables are dropped, matching the inner joins they
-    replace.
 
     Replaces the window-based `_theta_survivors` → `_decode_docs` →
     `.distinct()` chain (3 exchanges, two of them sorting the gap-blob-laden
@@ -731,52 +522,6 @@ def _fused_candidates(
     co-located.
     """
     hf = float(heap_factor)
-    out_schema = (
-        "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
-        if rescore is not None
-        else "query_id STRING, doc_id BIGINT"
-    )
-
-    def _score_groups(
-        qids_g: np.ndarray, qs_m: np.ndarray, ds_m: np.ndarray
-    ) -> pd.DataFrame | None:
-        """Exact-score deduped (group, doc) pairs against the broadcast CSRs
-        and keep the per-query top-k — see the rescore contract above."""
-        f_bc, q_bc = rescore
-        f_ids, f_perm, f_starts, f_lens, f_t, f_w = f_bc.value
-        q_ids, q_perm, _qs, _ql, _qt, _qw_flat, q_key, q_w = q_bc.value
-        guids = np.asarray(qids_g, dtype=np.str_)
-        gq = np.searchsorted(q_ids, guids)
-        gq_c = np.minimum(gq, max(q_ids.size - 1, 0))
-        g_ok = (
-            q_ids[gq_c] == guids
-            if q_ids.size
-            else np.zeros(guids.size, dtype=bool)
-        )
-        qi_g = np.where(g_ok, q_perm[gq_c] if q_perm.size else 0, -1)
-        di = np.searchsorted(f_ids, ds_m)
-        di_c = np.minimum(di, max(f_ids.size - 1, 0))
-        d_ok = (
-            f_ids[di_c] == ds_m if f_ids.size else np.zeros(ds_m.size, dtype=bool)
-        )
-        ok = d_ok & (qi_g[qs_m] >= 0)
-        if not ok.all():
-            qs_m, ds_m, di_c = qs_m[ok], ds_m[ok], di_c[ok]
-        if qs_m.size == 0:
-            return None
-        di_v = f_perm[di_c]
-        scores = _score_pairs_csr(
-            qi_g[qs_m], di_v, f_starts, f_lens, f_t, f_w, q_key, q_w
-        )
-        sel, ranks = _topk_select(qs_m, ds_m, scores, k)
-        return pd.DataFrame(
-            {
-                "query_id": qids_g[qs_m[sel]],
-                "rank": ranks,
-                "doc_id": ds_m[sel],
-                "score": scores[sel],
-            }
-        )
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame | None:
         qids = pdf["query_id"].to_numpy()
@@ -823,8 +568,6 @@ def _fused_candidates(
         mask = np.concatenate(
             ([True], (qs_[1:] != qs_[:-1]) | (ds_[1:] != ds_[:-1]))
         )
-        if rescore is not None:
-            return _score_groups(qids[g_starts], qs_[mask], ds_[mask])
         return pd.DataFrame(
             {"query_id": qids[g_starts][qs_[mask]], "doc_id": ds_[mask]}
         )
@@ -855,7 +598,7 @@ def _fused_candidates(
         .repartition("query_id")
         .sortWithinPartitions("query_id")
     )
-    return parted.mapInPandas(gen, out_schema)
+    return parted.mapInPandas(gen, "query_id STRING, doc_id BIGINT")
 
 
 def _decode_docs(block_rows: DataFrame) -> DataFrame:
@@ -1103,37 +846,6 @@ def _fetch_gaps(postings: DataFrame, keys: pd.DataFrame) -> DataFrame:
 # pairs ≈ tens of MB — comfortably under executor broadcast budgets.
 _COMPACT_TAIL_MAX_BLOCKS = 4096
 
-# Local fast-path gate (r6): collect the block table WITH its gap blobs in
-# one bounded toPandas (limit(cap+1)) and decode candidates on the driver —
-# the whole θ/p1/survivor machinery then needs no persisted ubs frame, no
-# broadcast-key joins back into the cache, and no separate decode stage, so
-# an interactive batch runs 2 Spark action chains (3 with two_phase) instead
-# of the 12–18 AQE jobs the cached formulation paid (each ~0.2–0.7 s of
-# scheduling floor — event-log measured).  The transfer is bounded: cap rows
-# × (~24 B narrow + the row's gap blob, ≤ a few hundred B) ≈ tens of MB.
-# Above the cap the persisted-ubs path runs unchanged (gap blobs stay on
-# executors), so the gate is scale-safe.
-_DRIVER_GAPS_MAX_ROWS = int(
-    os.environ.get("SEISMIC_DRIVER_GAPS_MAX_ROWS", "131072")
-)
-
-# Driver-CSR scoring gate: interactive dict batches on an index whose
-# forward table fits this byte budget (est. n_docs·avgdl·16 B) are scored
-# entirely on the driver against a once-collected CSR copy of the forward
-# index — the reference's own in-process architecture, applied when the
-# corpus is small enough that one process holds it (the serving replica's
-# hydration budget, in miniature).  Above the cap nothing is collected and
-# the distributed formulations run unchanged, so the gate is scale-safe.
-# Default sizing: avgdl counts TOKENS, so for tokenized corpora the
-# estimate overshoots true forward nnz bytes ~5–10× — 384 MB estimated is
-# ≤ ~50–80 MB actually collected there, and at worst (pre-weighted
-# vectors, avgdl == nnz) a one-time 384 MB pull on an 8 GB driver.
-_LOCAL_SCORE_MAX_BYTES = int(
-    os.environ.get("SEISMIC_LOCAL_SCORE_MAX_BYTES", str(384 << 20))
-)
-
-_OVERFLOW = object()  # sentinel: local fast path exceeded its row cap
-
 
 def _theta0_from_narrow(narrow: pd.DataFrame, k: int) -> dict[str, float]:
     """Phase-0 θ per query from a collected block table: per (query, term)
@@ -1150,165 +862,6 @@ def _theta0_from_narrow(narrow: pd.DataFrame, k: int) -> dict[str, float]:
     return theta
 
 
-def _decode_rows_coded(
-    rows: pd.DataFrame,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Driver-side decode + cross-list dedup of collected block rows — the
-    same codec call `_compact_rescore` runs in its coalesced executor task,
-    deduped by the same lexsort/mask pass `_fused_candidates` uses (integer
-    codes, not pandas object rows: an exact-search batch decodes hundreds of
-    thousands of (query, doc) pairs and object-dtype drop_duplicates is
-    ~10× slower).  Dedup is set-identity, so the candidate set is unchanged.
-    Returns ``(unique_qids sorted, per-pair qid code, per-pair doc_id)``."""
-    ids, counts = codec.delta_decode_multi([bytes(b) for b in rows["gaps"]])
-    uq, qcodes = np.unique(rows["query_id"].to_numpy(), return_inverse=True)
-    qrep = np.repeat(qcodes.astype(np.int64), counts)
-    d = ids.astype(np.int64)
-    order = np.lexsort((d, qrep))
-    qs_, ds_ = qrep[order], d[order]
-    m = np.concatenate(
-        ([True], (qs_[1:] != qs_[:-1]) | (ds_[1:] != ds_[:-1]))
-    )
-    return uq, qs_[m], ds_[m]
-
-
-def _qside_from_qvecs(
-    qvecs: dict[str, QVec]
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Driver-side combined-key query table from resolved query vectors:
-    the same row·2^32+term construction (and `_repair_qkey` merge) the
-    Arrow-batch scorers apply, so `_gather_qw` returns bitwise-identical
-    weights.  Rows follow sorted-qid order; lookup by searchsorted."""
-    qids = sorted(qvecs)
-    ts = [np.asarray(qvecs[q][0], dtype=np.int64) for q in qids]
-    lens = np.fromiter((t.size for t in ts), dtype=np.int64, count=len(ts))
-    t_flat = np.concatenate(ts) if ts else np.empty(0, dtype=np.int64)
-    w_flat = (
-        np.concatenate([np.asarray(qvecs[q][1], dtype=np.float64) for q in qids])
-        if ts
-        else np.empty(0, dtype=np.float64)
-    )
-    row_rep = np.repeat(np.arange(len(ts), dtype=np.int64), lens)
-    qkey, qw = _repair_qkey(row_rep * _KEY_SHIFT + t_flat, w_flat)
-    return np.asarray(qids, dtype=np.str_), qkey, qw
-
-
-def _score_topk_driver(
-    uq: np.ndarray,
-    qs: np.ndarray,
-    ds: np.ndarray,
-    qids_sorted: np.ndarray,
-    qkey: np.ndarray,
-    qw: np.ndarray,
-    fwd_csr,
-    k: int,
-) -> pd.DataFrame:
-    """Exact-score coded candidate pairs against the collected forward CSR
-    and keep the per-query top-k — the driver twin of the fused operator's
-    `_score_groups` (same `_score_pairs_csr` floats, same `_topk_select`
-    pinned order).  Pairs whose doc id is absent from the forward table are
-    dropped, matching the inner join they replace."""
-    f_ids, f_perm, f_starts, f_lens, f_t, f_w = fwd_csr
-    qi_of_code = np.searchsorted(qids_sorted, np.asarray(uq, dtype=np.str_))
-    di = np.searchsorted(f_ids, ds)
-    di_c = np.minimum(di, max(f_ids.size - 1, 0))
-    ok = f_ids[di_c] == ds if f_ids.size else np.zeros(ds.size, dtype=bool)
-    if not ok.all():
-        qs, ds, di_c = qs[ok], ds[ok], di_c[ok]
-    if qs.size == 0:
-        return pd.DataFrame(
-            {"query_id": np.empty(0, dtype=object),
-             "rank": np.empty(0, dtype=np.int32),
-             "doc_id": np.empty(0, dtype=np.int64),
-             "score": np.empty(0, dtype=np.float64)}
-        )
-    scores = _score_pairs_csr(
-        qi_of_code[qs], f_perm[di_c], f_starts, f_lens, f_t, f_w, qkey, qw,
-        threads=min(8, os.cpu_count() or 1),
-    )
-    sel, ranks = _topk_select(qs, ds, scores, k)
-    return pd.DataFrame(
-        {
-            "query_id": uq[qs[sel]],
-            "rank": ranks,
-            "doc_id": ds[sel],
-            "score": scores[sel],
-        }
-    )
-
-
-def _driver_theta_local(
-    spark: SparkSession,
-    matched: DataFrame,
-    qvecs: dict[str, QVec],
-    k: int,
-    heap_factor: float,
-    two_phase: bool,
-    fwd_csr,
-) -> DataFrame:
-    """One-collect, fully-local fast path (see ``_DRIVER_GAPS_MAX_ROWS``):
-    block table + gap blobs arrive in a single bounded toPandas; θ (phase 0
-    and the two_phase tightening), the skip filter, candidate decode, exact
-    rescore (against the caller's size-gated forward CSR — the reference's
-    own in-process scoring architecture, inverted_index.rs:153-234) and
-    top-k ALL run on the driver.  The batch costs exactly ONE Spark job —
-    the block-UB scan feeding the collect — instead of the persisted-ubs
-    formulation's 12–18 AQE stage jobs (each ~0.2–0.7 s of scheduling
-    floor).
-
-    Value parity is exact and pinned (test_search_fastpath): θ is selected
-    from the same collected f64 ub/lb values, phase-1 scores and final
-    scores come from `_score_pairs_csr` (bitwise-identical contribution
-    arrays to `exact_score`), the skip predicate is the same IEEE
-    comparison, and ranking is `_topk_select`'s pinned total order.
-    Returns ``_OVERFLOW`` when the block table exceeds the cap — the caller
-    falls back to the persisted-ubs formulation, which keeps gap blobs on
-    the executors.
-    """
-    ubs = _block_ubs(matched)
-    tbl = ubs.limit(_DRIVER_GAPS_MAX_ROWS + 1).toPandas()
-    if len(tbl) > _DRIVER_GAPS_MAX_ROWS:
-        return _OVERFLOW
-    schema = "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
-    if tbl.empty:
-        return spark.createDataFrame([], schema)
-    neg_inf = float("-inf")
-    theta = _theta0_from_narrow(tbl, k)
-    qids_sorted, qkey, qw = _qside_from_qvecs(qvecs)
-
-    if two_phase:
-        best = tbl.sort_values(
-            ["query_id", "term_id", "ub", "salt", "block"],
-            ascending=[True, True, False, True, True],
-            kind="stable",
-        ).groupby(["query_id", "term_id"], sort=False).head(1)
-        p1 = _score_topk_driver(
-            *_decode_rows_coded(best), qids_sorted, qkey, qw, fwd_csr, k
-        )
-        kth = p1[p1["rank"] == k]
-        for qid, sc in zip(kth["query_id"], kth["score"]):
-            if sc > theta.get(qid, neg_inf):
-                theta[qid] = float(sc)
-
-    if theta:
-        th = tbl["query_id"].map(theta).to_numpy(dtype=np.float64)
-        has = ~np.isnan(th)
-        keep = np.ones(len(tbl), dtype=bool)
-        # identical IEEE f64 predicate to the in-plan filter
-        keep[has] = tbl["ub"].to_numpy(dtype=np.float64)[has] >= (
-            heap_factor * th[has]
-        )
-        survivors = tbl if keep.all() else tbl.loc[keep]
-    else:
-        survivors = tbl
-    res = _score_topk_driver(
-        *_decode_rows_coded(survivors), qids_sorted, qkey, qw, fwd_csr, k
-    )
-    if res.empty:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(res, schema)
-
-
 def _driver_theta_search(
     spark: SparkSession,
     postings: DataFrame,
@@ -1320,7 +873,6 @@ def _driver_theta_search(
     heap_factor: float,
     two_phase: bool,
     cache_registry: list[DataFrame] | None,
-    fwd_csr=None,
 ) -> DataFrame:
     """Interactive-batch fast path: θ evolves ON THE DRIVER, like the
     reference's in-process heap (inverted_index.rs:153-234), instead of
@@ -1389,18 +941,6 @@ def _driver_theta_search(
     defer = _FASTPATH_DEFER_GAPS
     if cache_registry is not None:
         retire_caches(cache_registry)
-    if fwd_csr is not None and not defer:
-        # r6 local fast path: one bounded collect (block table + gaps),
-        # then θ, decode, exact rescore (driver CSR) and top-k all local —
-        # result-identical, ONE Spark job instead of the persisted-ubs
-        # formulation's 12–18 AQE jobs.  _OVERFLOW (block table over the
-        # cap) falls through to the persisted-ubs path below (one extra run
-        # of the UB scan in that rare regime).
-        res = _driver_theta_local(
-            spark, matched, qvecs, k, heap_factor, two_phase, fwd_csr
-        )
-        if res is not _OVERFLOW:
-            return res
     ubs = _block_ubs(matched, with_gaps=not defer)
     if not defer:
         # gaps ride along in the ubs frame: persist it so the rescore tail
@@ -1532,9 +1072,6 @@ def batch_search(
     broadcast_queries: bool | None = None,
     cache_registry: list[DataFrame] | None = None,
     driver_theta: bool | None = None,
-    rescore_bcast: bool = False,
-    local_score: bool = False,
-    csr_cache: dict | None = None,
 ) -> DataFrame:
     """Dynamically-pruned batch top-k (Q1/Q9 analogue), single logical plan.
 
@@ -1558,22 +1095,6 @@ def batch_search(
     17–24).  Default (None) auto-enables for driver-side dict batches of at
     most ``$SEISMIC_DRIVER_THETA_MAX`` (1024) queries; DataFrame query sets
     always use the in-plan derivation.
-
-    ``rescore_bcast`` (two_phase=False in-plan tail only): collect forward
-    and query vectors into broadcast CSR arrays and fuse exact rescore +
-    per-query top-k into the candidate operator (:func:`_fused_candidates`)
-    — result-identical; candidate×vector pair rows never materialize.  The
-    CALLER must gate on vector-table size (see knn.build_knn — two bounded
-    collects of ≈ n·avgdl·16 B each); ungated DataFrame-scale corpora
-    belong on the default join path.
-
-    ``local_score`` (fast-path dict batches only): collect the forward
-    table once into a driver-side CSR (cached in ``csr_cache`` when the
-    caller provides one — SeismicSparkIndex passes a per-instance dict)
-    and run θ, decode, rescore and top-k entirely on the driver
-    (:func:`_driver_theta_local`) — result-identical, one Spark job per
-    batch.  The CALLER must gate on forward size (see
-    ``_LOCAL_SCORE_MAX_BYTES`` and SeismicSparkIndex.batch_search).
     """
     if not isinstance(queries, DataFrame):
         # normalize duplicate term ids ONCE, deterministically, before path
@@ -1599,16 +1120,9 @@ def batch_search(
             and len(queries) * query_cut <= _COMPACT_TAIL_MAX_BLOCKS
         )
     if driver_theta and small:
-        fwd_csr = None
-        if local_score and not _FASTPATH_DEFER_GAPS:
-            fwd_csr = csr_cache.get("forward") if csr_cache is not None else None
-            if fwd_csr is None:
-                fwd_csr = _vectors_csr(forward, "doc_id", "terms", "weights")
-                if csr_cache is not None:
-                    csr_cache["forward"] = fwd_csr
         res = _driver_theta_search(
             spark, postings, forward, queries, qdf, k, query_cut,
-            heap_factor, two_phase, cache_registry, fwd_csr=fwd_csr,
+            heap_factor, two_phase, cache_registry,
         )
         if res is not None:
             return res
@@ -1643,17 +1157,6 @@ def batch_search(
         # bitwise-identical (see _fused_candidates).
         if cache_registry is not None:
             retire_caches(cache_registry)
-        if rescore_bcast:
-            sc = spark.sparkContext
-            rs = (
-                sc.broadcast(_vectors_csr(forward, "doc_id", "terms", "weights")),
-                sc.broadcast(
-                    _vectors_csr(
-                        qdf, "query_id", "q_terms", "q_weights", with_qkey=True
-                    )
-                ),
-            )
-            return _fused_candidates(ubs, k, heap_factor, rescore=rs)
         cands = _fused_candidates(ubs, k, heap_factor)
         scored = exact_score(
             cands, forward, qdf, broadcast_queries=broadcast_queries
@@ -1802,71 +1305,14 @@ def search_stats(
     }
 
 
-# Driver bruteforce gate: total scored elements = n_queries × corpus nnz;
-# under this, the full scan is a single vectorized numpy pass on the driver
-# against the collected forward CSR — above it (or for DataFrame queries)
-# the distributed crossJoin oracle runs unchanged.
-_BRUTE_LOCAL_MAX_ELEMS = int(
-    os.environ.get("SEISMIC_BRUTE_LOCAL_MAX_ELEMS", str(50_000_000))
-)
-
-
 def bruteforce_search(
     spark: SparkSession,
     forward: DataFrame,
     queries,
     k: int = 10,
-    local_score: bool = False,
-    csr_cache: dict | None = None,
 ) -> DataFrame:
-    """Exact full-scan top-k (Q10 analogue / ground-truth oracle).
-
-    ``local_score`` (dict batches, caller-gated like batch_search's): score
-    every (query, doc) pair on the driver against the collected forward CSR
-    — the same `_score_pairs_csr` floats, the same ``score > 0`` IEEE
-    predicate, the same pinned top-k order, so results are identical to the
-    crossJoin formulation."""
+    """Exact full-scan top-k (Q10 analogue / ground-truth oracle)."""
     qdf, small = _as_queries_df(spark, queries)
-    if small and local_score and queries:
-        qvecs = {
-            q: v for q, v in queries.items()
-            if np.asarray(v[0]).size > 0
-        }
-        fwd_csr = csr_cache.get("forward") if csr_cache is not None else None
-        if fwd_csr is None:
-            fwd_csr = _vectors_csr(forward, "doc_id", "terms", "weights")
-            if csr_cache is not None:
-                csr_cache["forward"] = fwd_csr
-        f_ids, f_perm, f_starts, f_lens, f_t, f_w = fwd_csr
-        schema = "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
-        nq = len(qvecs)
-        if nq == 0 or f_ids.size == 0:
-            return spark.createDataFrame([], schema)
-        if nq * f_t.size <= _BRUTE_LOCAL_MAX_ELEMS:
-            qids_sorted, qkey, qw = _qside_from_qvecs(qvecs)
-            qs = np.repeat(np.arange(nq, dtype=np.int64), f_ids.size)
-            di = np.tile(np.arange(f_ids.size, dtype=np.int64), nq)
-            ds = f_ids[di]
-            scores = _score_pairs_csr(
-                qs, f_perm[di], f_starts, f_lens, f_t, f_w, qkey, qw,
-                threads=min(8, os.cpu_count() or 1),
-            )
-            pos = scores > 0.0
-            qs, ds, scores = qs[pos], ds[pos], scores[pos]
-            if qs.size == 0:
-                return spark.createDataFrame([], schema)
-            sel, ranks = _topk_select(qs, ds, scores, k)
-            return spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "query_id": qids_sorted[qs[sel]].astype(object),
-                        "rank": ranks,
-                        "doc_id": ds[sel],
-                        "score": scores[sel],
-                    }
-                ),
-                schema,
-            )
     qdf = qdf.filter(F.size("q_terms") > 0)
     cands = qdf.select("query_id").crossJoin(forward.select("doc_id"))
     scored = exact_score(cands, forward, qdf, broadcast_queries=small).filter(

@@ -146,6 +146,20 @@ def _binary_flat(bin_arr) -> tuple[np.ndarray, np.ndarray]:
     return data[voffs[0] : voffs[-1]], np.diff(voffs)
 
 
+def check_budget(idx, max_bytes: int) -> None:
+    """Raise ``MemoryError`` when the index's own space accounting (Q12,
+    `space_usage()`) exceeds ``max_bytes`` — hydration is an explicit
+    capacity decision, exactly like deploying the reference's RAM-resident
+    index to a host."""
+    total = idx.space_usage()["total"]
+    if total > max_bytes:
+        raise MemoryError(
+            f"index reports {total} bytes (space_usage), over the replica "
+            f"budget max_bytes={max_bytes}; shard the corpus at build time "
+            "or raise the budget"
+        )
+
+
 class ServingReplica:
     """In-memory twin of a `SeismicSparkIndex` for interactive serving.
 
@@ -278,18 +292,9 @@ class ServingReplica:
         from the snapshot files when the index has them (a loaded index
         hydrates without a Spark job); gaps are varint-decoded and summaries
         dequantized ONCE here, so the query path touches only ready numpy
-        arrays.  Raises ``MemoryError`` when the index's own space
-        accounting (Q12, `space_usage()`) exceeds ``max_bytes`` — hydration
-        is an explicit capacity decision, exactly like deploying the
-        reference's RAM-resident index to a host.
+        arrays.  Raises ``MemoryError`` over ``max_bytes`` (`check_budget`).
         """
-        usage = idx.space_usage()
-        if usage["total"] > max_bytes:
-            raise MemoryError(
-                f"index reports {usage['total']} bytes (space_usage), over the "
-                f"replica budget max_bytes={max_bytes}; shard the corpus at "
-                "build time or raise the budget"
-            )
+        check_budget(idx, max_bytes)
         vtbl = _read_snapshot(idx, "vocab", ["term", "term_id"])
         vocab = dict(
             zip(vtbl.column("term").to_pylist(),
@@ -609,16 +614,11 @@ class ServingReplica:
         heap_factor: float = 1.0,
         two_phase: bool | None = None,
     ) -> pd.DataFrame:
-        """(query_id, rank, doc_id, score) — bit-identical to
-        `SeismicSparkIndex.batch_search` on the hydrated index (same θ
+        """(query_id, rank, doc_id, score) — bit-identical to the Spark
+        formulations of `search.batch_search` on the hydrated index (same θ
         derivation as search._driver_theta_search, same skip predicate,
         same rescore floats, same (score desc, doc_id asc) tie order).
-
-        Caveat shared with the engine: a query repeating the same TOKEN
-        merges deterministically here but in Spark-collect order there
-        (resolve_queries), so the bitwise guarantee is scoped to
-        duplicate-free token lists — the engine's own documented scope.
-        """
+        Size-gated `SeismicSparkIndex.batch_search` answers through here."""
         if two_phase is None:
             # same default rule as SeismicSparkIndex.batch_search
             two_phase = (
@@ -626,13 +626,43 @@ class ServingReplica:
                 or not self.config.quant_ceil
                 or heap_factor < 1.0
             )
-        out_qid: list[str] = []
-        out_rank: list[np.ndarray] = []
-        out_doc: list[np.ndarray] = []
-        out_score: list[np.ndarray] = []
-        # The engine keys resolution on query_id (search.resolve_queries
-        # `by_q`), so a batch repeating a qid is ONE merged query there —
-        # concatenate repeated-qid tuples before resolving to match.
+        hits = []
+        for qid, qt, qw in self._resolved_queries(queries):
+            hit = self._search_resolved(qt, qw, k, query_cut, heap_factor,
+                                        two_phase)
+            if hit is not None:
+                hits.append((qid, *hit))
+        return self._results_frame(hits)
+
+    def bruteforce(
+        self, queries: list[tuple[str, list[str], list[float]]], k: int = 10
+    ) -> pd.DataFrame:
+        """Exact full-scan top-k (Q10) — bit-identical to
+        `search.bruteforce_search` on the hydrated index: every doc is
+        scored by `_score_docs` (the per-row math of `exact_score`),
+        ``score > 0`` is kept and the top k taken by (score desc, doc_id
+        asc).  Temporaries are per query (one corpus-nnz pass each)."""
+        all_pos = np.arange(self.doc_ids.size, dtype=np.int64)
+        hits = []
+        for qid, qt, qw in self._resolved_queries(queries):
+            if self._qw_lut is not None:
+                self._qw_lut[qt] = qw
+            try:
+                scores = self._score_docs(qt, qw, all_pos)
+            finally:
+                if self._qw_lut is not None:
+                    self._qw_lut[qt] = 0.0
+            pos = np.flatnonzero(scores > 0.0)
+            if pos.size:
+                top = pos[np.lexsort((pos, -scores[pos]))[:k]]
+                hits.append((qid, top, scores[top]))
+        return self._results_frame(hits)
+
+    def _resolved_queries(self, queries):
+        """(query_id, term ids, weights) per query with a known token.  The
+        engine keys resolution on query_id (search.resolve_queries `by_q`),
+        so a batch repeating a qid is ONE merged query there — repeated-qid
+        tuples are concatenated before resolving to match."""
         merged: dict[str, tuple[list[str], list[float]]] = {}
         for qid, terms, weights in queries:
             acc = merged.setdefault(qid, ([], []))
@@ -640,20 +670,13 @@ class ServingReplica:
             acc[1].extend(weights)
         for qid, (terms, weights) in merged.items():
             resolved = self._resolve(terms, weights)
-            if resolved is None:
-                continue
-            qt, qw = resolved
-            hit = self._search_resolved(qt, qw, k, query_cut, heap_factor,
-                                        two_phase)
-            if hit is None:
-                continue
-            pos_top, score_top = hit
-            out_qid.extend([qid] * pos_top.size)
-            out_rank.append(np.arange(1, pos_top.size + 1, dtype=np.int32))
-            out_doc.append(self.doc_ids[pos_top])
-            out_score.append(score_top)
+            if resolved is not None:
+                yield (qid, *resolved)
 
-        if not out_qid:
+    def _results_frame(self, hits: list) -> pd.DataFrame:
+        """(query_id, top-k positions, scores) per query → the engine's
+        (query_id, rank, doc_id, score) frame."""
+        if not hits:
             return pd.DataFrame(
                 {
                     "query_id": pd.Series([], dtype=str),
@@ -664,10 +687,15 @@ class ServingReplica:
             )
         return pd.DataFrame(
             {
-                "query_id": out_qid,
-                "rank": np.concatenate(out_rank),
-                "doc_id": np.concatenate(out_doc),
-                "score": np.concatenate(out_score),
+                "query_id": [q for q, pos, _ in hits for _ in range(pos.size)],
+                "rank": np.concatenate(
+                    [np.arange(1, pos.size + 1, dtype=np.int32)
+                     for _, pos, _ in hits]
+                ),
+                "doc_id": self.doc_ids[
+                    np.concatenate([pos for _, pos, _ in hits])
+                ],
+                "score": np.concatenate([sc for _, _, sc in hits]),
             }
         )
 

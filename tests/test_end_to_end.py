@@ -86,23 +86,19 @@ def test_prepare_serving_identical_results(spark):
     ]
     assert after == before and after
     # the InMemoryTableScan claim is about the DISTRIBUTED rescore join —
-    # the r6 driver-CSR fast path answers gated-small batches locally
-    # (LocalTableScan result), so pin the plan shape with it disabled
-    import os
+    # a size-gated index answers from its in-process replica (a
+    # LocalTableScan result), so pin the plan shape on the Spark path
+    from seismic_spark import search as srch
 
-    os.environ["SEISMIC_LOCAL_SCORE"] = "0"
-    try:
-        res_dist = idx.batch_search(q, k=5, heap_factor=1.0)
-        dist = [
-            (r.rank, r.doc_id, round(r.score, 10))
-            for r in res_dist.collect()
-        ]
-        assert dist == before
-        assert "InMemoryTableScan" in (
-            res_dist._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        os.environ.pop("SEISMIC_LOCAL_SCORE", None)
+    qvecs = srch.resolve_queries(spark, q, idx.vocab)
+    res_dist = srch.batch_search(
+        spark, idx.postings, idx.forward, qvecs, k=5, heap_factor=1.0
+    )
+    dist = [(r.rank, r.doc_id, round(r.score, 10)) for r in res_dist.collect()]
+    assert dist == before
+    assert "InMemoryTableScan" in (
+        res_dist._jdf.queryExecution().executedPlan().toString()
+    )
     idx.unpersist_serving()
 
 

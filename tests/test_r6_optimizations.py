@@ -156,128 +156,21 @@ def test_minhash_matches_stacked_formulation(spark):
     assert key(new) == key(old)
 
 
-def test_fused_bcast_rescore_matches_join_rescore(spark, idx):
-    """rescore_bcast (broadcast-CSR scoring + per-query top-k inside the
-    fused operator) == the default join-path rescore tail — exact floats,
-    same ranks, on a self-search batch with hf < 1 (knife-edge skips) and
-    approximate summaries."""
-    qdf = idx.forward.select(
-        F.col("doc_id").cast("string").alias("query_id"),
-        F.col("terms").alias("q_terms"),
-        F.col("weights").alias("q_weights"),
-    ).filter(F.size("q_terms") > 0).limit(80)
-    kw = dict(
-        k=5, query_cut=6, heap_factor=0.7, two_phase=False,
-        broadcast_queries=False,
-    )
-    joined = srch.batch_search(
-        spark, idx.postings, idx.forward, qdf, **kw
-    )
-    fused = srch.batch_search(
-        spark, idx.postings, idx.forward, qdf, rescore_bcast=True, **kw
-    )
-    assert _rows(fused) == _rows(joined)
-    assert fused.count() > 0
-
-
-def test_build_knn_bcast_gate_matches_ungated(spark, idx):
-    """knn.build_knn with the broadcast-CSR gate engaged (default) ==
-    gate forced off — the graph is identical either way."""
-    from seismic_spark import knn as knn_mod
-
-    g_on = knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7)
-    old_env = os.environ.get("SEISMIC_KNN_BCAST")
-    os.environ["SEISMIC_KNN_BCAST"] = "0"
-    try:
-        g_off = knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7)
-        key = lambda df: sorted(
-            (r.doc_id, tuple(r.neighbors)) for r in df.collect()
-        )
-        assert key(g_on) == key(g_off)
-    finally:
-        if old_env is None:
-            os.environ.pop("SEISMIC_KNN_BCAST", None)
-        else:
-            os.environ["SEISMIC_KNN_BCAST"] = old_env
-
-
-def test_score_pairs_csr_lut_matches_searchsorted():
-    """The dense-LUT query-weight gather inside _score_pairs_csr == the
-    searchsorted _gather_qw formulation — exact floats, at 1 and 4 threads,
-    including empty doc rows, queries absent from q_key, duplicate query
-    terms (pre-repair), and the forced fallback path."""
-    rng = np.random.default_rng(11)
-    ndocs, nterms, nq = 300, 2500, 40
-    f_lens = rng.integers(0, 40, ndocs).astype(np.int64)
-    f_lens[5] = 0  # empty forward row
-    f_starts = np.cumsum(f_lens) - f_lens
-    total = int(f_lens.sum())
-    f_t = np.empty(total, dtype=np.int64)
-    f_w = rng.random(total)
-    for i in range(ndocs):
-        s, l = int(f_starts[i]), int(f_lens[i])
-        f_t[s:s + l] = np.sort(rng.choice(nterms, l, replace=False))
-    keys, ws = [], []
-    for q in range(nq):
-        t = rng.integers(0, nterms, 9)  # duplicates possible pre-repair
-        keys.append(q * (1 << 32) + t)
-        ws.append(rng.random(9) * 2)
-    qkey, qw = srch._repair_qkey(
-        np.concatenate(keys).astype(np.int64), np.concatenate(ws)
-    )
-    qi = np.repeat(np.arange(nq + 3), 23)[: nq * 23 + 10]  # some absent qs
-    di = rng.integers(0, ndocs, qi.size)
-
-    old = os.environ.get("SEISMIC_SCORE_LUT")
-    try:
-        os.environ["SEISMIC_SCORE_LUT"] = "0"
-        base = srch._score_pairs_csr(
-            qi, di, f_starts, f_lens, f_t, f_w, qkey, qw, threads=1
-        )
-        os.environ["SEISMIC_SCORE_LUT"] = "1"
-        lut1 = srch._score_pairs_csr(
-            qi, di, f_starts, f_lens, f_t, f_w, qkey, qw, threads=1
-        )
-        lut4 = srch._score_pairs_csr(
-            qi, di, f_starts, f_lens, f_t, f_w, qkey, qw, threads=4
-        )
-    finally:
-        if old is None:
-            os.environ.pop("SEISMIC_SCORE_LUT", None)
-        else:
-            os.environ["SEISMIC_SCORE_LUT"] = old
-    assert np.array_equal(base, lut1)
-    assert np.array_equal(base, lut4)
-    assert base.size == qi.size and np.isfinite(base).all()
-
-
-def test_build_knn_replica_matches_join(spark, idx):
-    """The map-only replica self-search path (default under the gate) ==
-    the broadcast-CSR fused path == the ungated join path — identical
-    graphs on real data."""
+def test_build_knn_replica_matches_join(spark, idx, monkeypatch):
+    """The map-only replica self-search path (default under the in-process
+    gate) == the ungated join path — identical graphs on real data."""
+    from seismic_spark import index as index_mod
     from seismic_spark import knn as knn_mod
 
     key = lambda df: sorted(
         (r.doc_id, tuple(r.neighbors)) for r in df.collect()
     )
-    saved = {
-        k: os.environ.get(k) for k in ("SEISMIC_KNN_REPLICA", "SEISMIC_KNN_BCAST")
-    }
-    try:
-        os.environ["SEISMIC_KNN_REPLICA"] = "1"
-        g_rep = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
-        os.environ["SEISMIC_KNN_REPLICA"] = "0"
-        os.environ["SEISMIC_KNN_BCAST"] = "1"
-        g_bc = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
-        os.environ["SEISMIC_KNN_BCAST"] = "0"
-        g_join = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
-    assert g_rep == g_bc == g_join
+    g_rep = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
+    assert idx._replica_bc is not None  # the replica path did run
+    monkeypatch.setattr(index_mod, "_LOCAL_SCORE_MAX_BYTES", 0)
+    assert idx._in_process_replica() is None
+    g_join = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
+    assert g_rep == g_join
     assert len(g_rep) > 0
 
 

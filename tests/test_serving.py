@@ -1,17 +1,21 @@
 """ServingReplica ≡ engine: the RAM-resident interactive tier must reproduce
-`SeismicSparkIndex.batch_search` BITWISE on the same index — same survivor
-set, same candidates, same IEEE f64 scores, same (score desc, doc_id asc)
-tie order.  Exactness is the point: the replica exists so interactive
-serving can skip the Spark scheduler without changing a single result bit
-(seismic_spark/serving.py; the reference's own in-process serving,
-inverted_index.rs:38, pylib/mod.rs:59-291)."""
+the Spark formulations of `search.batch_search` BITWISE on the same index —
+same survivor set, same candidates, same IEEE f64 scores, same (score desc,
+doc_id asc) tie order.  A size-gated `SeismicSparkIndex` answers
+`batch_search`, `bruteforce` and `build_knn` from its cached replica, so the
+Spark side of each pin calls `search` directly.  Exactness is the point: the
+replica exists so interactive serving can skip the Spark scheduler without
+changing a single result bit (seismic_spark/serving.py; the reference's own
+in-process serving, inverted_index.rs:38, pylib/mod.rs:59-291)."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from seismic_spark import search as srch
 from seismic_spark.index import SeismicSparkIndex
 from seismic_spark.postings import IndexConfig
+from seismic_spark.serving import ServingReplica
 from seismic_spark.sources.pages import synth_pages, synth_queries
 
 
@@ -32,6 +36,25 @@ def _rows(df_or_pdf):
     )
 
 
+def _spark_rows(spark, idx, queries, driver_theta, k=10, query_cut=10,
+                heap_factor=1.0, two_phase=None):
+    """`search.batch_search` (the Spark formulations) with the index's
+    default two_phase rule."""
+    if two_phase is None:
+        cfg = idx.config
+        two_phase = (
+            cfg.summary_energy < 1.0 or not cfg.quant_ceil or heap_factor < 1.0
+        )
+    qvecs = srch.resolve_queries(spark, queries, idx.vocab)
+    return _rows(
+        srch.batch_search(
+            spark, idx.postings, idx.forward, qvecs, k=k, query_cut=query_cut,
+            heap_factor=heap_factor, two_phase=two_phase,
+            driver_theta=driver_theta,
+        )
+    )
+
+
 @pytest.mark.parametrize(
     "cfg,hf,qc,tp",
     [
@@ -46,21 +69,53 @@ def _rows(df_or_pdf):
         # quantized value storage
         (IndexConfig(n_postings=60, summary_energy=0.6, value_type="fixedu8"),
          0.9, 10, None),
+        # the benchmark's serving config (kmeans, energy 0.5, nearest-
+        # quantized summaries)
+        (IndexConfig(n_postings=1000, pruning="fixed", blocking="kmeans",
+                     centroid_fraction=0.1, min_cluster_size=2,
+                     kmeans_doc_cut=15, summary_energy=0.5, quant_ceil=False),
+         0.9, 10, None),
     ],
 )
 def test_replica_bitwise_identical_to_engine(spark, corpus, cfg, hf, qc, tp):
     queries = synth_queries(600, n_queries=10, seed=3)
     idx = SeismicSparkIndex.build(spark, corpus, cfg)
-    engine = _rows(
+    got = _rows(
+        idx.serving_replica().batch_search(
+            queries, k=10, query_cut=qc, heap_factor=hf, two_phase=tp
+        )
+    )
+    assert got  # the pin compares real answers
+    for driver_theta in (True, False):
+        engine = _spark_rows(spark, idx, queries, driver_theta, query_cut=qc,
+                             heap_factor=hf, two_phase=tp)
+        assert got == engine  # exact float equality, not approx
+    # the gated index answers from that replica, through Spark and back
+    assert _rows(
         idx.batch_search(queries, k=10, query_cut=qc, heap_factor=hf,
                          two_phase=tp)
+    ) == got
+
+
+def test_replica_bruteforce_bitwise_identical_to_crossjoin(spark, corpus):
+    """Gated `bruteforce` (the replica's full scan) == the crossJoin
+    formulation of `search.bruteforce_search`, exact floats — including an
+    unknown-token and an empty query, and k above the positive-score count
+    for a one-term query."""
+    idx = SeismicSparkIndex.build(
+        spark, corpus, IndexConfig(n_postings=25, summary_energy=0.6)
     )
-    rep = idx.serving_replica()
-    got = _rows(
-        rep.batch_search(queries, k=10, query_cut=qc, heap_factor=hf,
-                         two_phase=tp)
-    )
-    assert got == engine  # exact float equality, not approx
+    rare = idx.vocab.orderBy("df", "term").first()["term"]
+    queries = synth_queries(600, n_queries=8, seed=21) + [
+        ("q_unknown", ["zz-not-a-token"], [1.0]),
+        ("q_empty", [], []),
+        ("q_rare", [rare], [1.0]),
+    ]
+    qvecs = srch.resolve_queries(spark, queries, idx.vocab)
+    want = _rows(srch.bruteforce_search(spark, idx.forward, qvecs, k=50))
+    got = _rows(idx.bruteforce(queries, k=50))
+    assert got == want and got
+    assert got == _rows(idx.serving_replica().bruteforce(queries, k=50))
 
 
 def test_replica_from_saved_index(spark, corpus, tmp_path):
@@ -69,11 +124,14 @@ def test_replica_from_saved_index(spark, corpus, tmp_path):
     idx = SeismicSparkIndex.build(spark, corpus, cfg)
     idx.save(str(tmp_path / "idx"))
     loaded = SeismicSparkIndex.load(spark, str(tmp_path / "idx"))
-    engine = _rows(loaded.batch_search(queries, k=10, heap_factor=0.8))
     got = _rows(
         loaded.serving_replica().batch_search(queries, k=10, heap_factor=0.8)
     )
-    assert got == engine
+    assert got
+    for driver_theta in (True, False):
+        assert got == _spark_rows(
+            spark, loaded, queries, driver_theta, heap_factor=0.8
+        )
 
 
 def test_replica_budget_gate(spark, corpus):
@@ -103,9 +161,13 @@ def test_replica_search_text_matches_engine(spark, corpus):
     rep = idx.serving_replica()
     sample_text = corpus.select("text").first()["text"]
     snippet = " ".join(sample_text.split(" ")[:8])
-    engine = _rows(idx.search_text("q0", snippet, k=5, heap_factor=0.9))
+    toks = [t for t in snippet.lower().split(" ") if t]
+    uniq = sorted(set(toks))
+    query = [("q0", uniq, [float(toks.count(t)) for t in uniq])]
+    engine = _spark_rows(spark, idx, query, None, k=5, heap_factor=0.9)
     got = _rows(rep.search_text("q0", snippet, k=5, heap_factor=0.9))
-    assert got == engine
+    assert got == engine and got
+    assert _rows(idx.search_text("q0", snippet, k=5, heap_factor=0.9)) == got
 
 
 def test_replica_scores_are_true_dot_products(spark, corpus):
@@ -146,7 +208,7 @@ def test_replica_repeated_query_id_merges_like_engine(spark, corpus):
         ("qrep", terms[:half], weights[:half]),
         ("qrep", terms[half:], weights[half:]),
     ]
-    engine = _rows(idx.batch_search(queries, k=5, query_cut=10, heap_factor=0.9))
+    engine = _spark_rows(spark, idx, queries, None, k=5, heap_factor=0.9)
     got = _rows(rep.batch_search(queries, k=5, query_cut=10, heap_factor=0.9))
     assert got == engine
     # exactly one rank sequence for the merged query, no duplicate ranks
@@ -203,3 +265,95 @@ def test_replica_falls_back_and_logs_when_snapshot_read_fails(
         rep = loaded.serving_replica()
     assert any("vocab" in r.getMessage() for r in caplog.records)
     assert rep.vocab == idx.serving_replica().vocab
+
+
+def test_gated_calls_share_one_cached_replica(spark, corpus, monkeypatch):
+    """`serving_replica()` hydrates once per index and returns the same
+    object (re-checking the budget); gated `batch_search` then `bruteforce`
+    answer from it without a second hydration."""
+    calls = []
+    orig = ServingReplica.from_index
+
+    def counting(idx, max_bytes=4 << 30):
+        calls.append(idx)
+        return orig(idx, max_bytes=max_bytes)
+
+    monkeypatch.setattr(ServingReplica, "from_index", counting)
+    idx = SeismicSparkIndex.build(
+        spark, corpus, IndexConfig(n_postings=25, summary_energy=0.6)
+    )
+    queries = synth_queries(600, n_queries=3, seed=17)
+    assert idx.batch_search(queries, k=5, heap_factor=0.9).count() > 0
+    assert idx.bruteforce(queries, k=5).count() > 0
+    rep = idx.serving_replica()
+    assert rep is idx.serving_replica()
+    assert len(calls) == 1
+    with pytest.raises(MemoryError, match="space_usage"):
+        idx.serving_replica(max_bytes=1)  # cached, budget still enforced
+
+
+def test_gated_paths_fall_back_to_spark_when_hydration_fails(
+    spark, corpus, monkeypatch, caplog
+):
+    """A replica that cannot be hydrated (MemoryError) never fails a gated
+    call: `batch_search`, `bruteforce` and `build_knn` each log a warning
+    and return the Spark path's answer."""
+    from seismic_spark import index as index_mod
+    from seismic_spark import knn as knn_mod
+
+    idx = SeismicSparkIndex.build(
+        spark, corpus, IndexConfig(n_postings=25, summary_energy=0.6)
+    )
+    queries = synth_queries(600, n_queries=4, seed=19)
+    qvecs = srch.resolve_queries(spark, queries, idx.vocab)
+    want_batch = _spark_rows(spark, idx, queries, None, k=5, heap_factor=0.9)
+    want_brute = _rows(srch.bruteforce_search(spark, idx.forward, qvecs, k=5))
+    graph = lambda df: sorted(
+        (r.doc_id, tuple(r.neighbors)) for r in df.collect()
+    )
+    with monkeypatch.context() as m:
+        m.setattr(index_mod, "_LOCAL_SCORE_MAX_BYTES", 0)  # ungated: Spark
+        want_knn = graph(knn_mod.build_knn(idx, nknn=3, heap_factor=0.7))
+
+    def no_memory(idx, max_bytes=4 << 30):
+        raise MemoryError("injected")
+
+    monkeypatch.setattr(ServingReplica, "from_index", no_memory)
+    calls = [
+        lambda: _rows(idx.batch_search(queries, k=5, heap_factor=0.9)),
+        lambda: _rows(idx.bruteforce(queries, k=5)),
+        lambda: graph(knn_mod.build_knn(idx, nknn=3, heap_factor=0.7)),
+    ]
+    for call, want in zip(calls, (want_batch, want_brute, want_knn)):
+        caplog.clear()
+        with caplog.at_level("WARNING", logger="seismic_spark.index"):
+            assert call() == want and want
+        assert any("injected" in r.getMessage() for r in caplog.records)
+    assert idx._replica is None and idx._replica_bc is None
+
+
+def test_build_knn_reuses_one_replica_broadcast(spark, corpus, monkeypatch):
+    """Two gated `build_knn` calls on one index ship its replica in ONE
+    broadcast; `unpersist_serving()` releases it."""
+    from pyspark import SparkContext
+
+    from seismic_spark import knn as knn_mod
+
+    made = []
+    orig = SparkContext.broadcast
+
+    def counting(self, value):
+        made.append(value)
+        return orig(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting)
+    idx = SeismicSparkIndex.build(
+        spark, corpus, IndexConfig(n_postings=25, summary_energy=0.6)
+    )
+    first = knn_mod.build_knn(idx, nknn=3, heap_factor=0.7).collect()
+    second = knn_mod.build_knn(idx, nknn=3, heap_factor=0.7).collect()
+    assert sorted(first) == sorted(second) and first
+    assert sum(isinstance(v, ServingReplica) for v in made) == 1
+    assert idx._replica_bc is not None
+    idx.unpersist_serving()
+    assert idx._replica_bc is None
