@@ -172,6 +172,25 @@ def delta_decode_concat(
     return ids, counts
 
 
+def binary_flat(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Zero-copy (flat uint8 data in element order, per-element byte length)
+    view of a pyarrow Binary or LargeBinary array — a binary column is one
+    contiguous data buffer plus offsets (int32, or int64 when large), so
+    re-slicing replaces a per-cell ``np.frombuffer`` + concatenate.  Feeds
+    :func:`delta_decode_concat` directly."""
+    import pyarrow as pa
+
+    n = len(arr)
+    bufs = arr.buffers()
+    if n == 0 or bufs[1] is None or bufs[2] is None:
+        return np.empty(0, dtype=np.uint8), np.zeros(n, dtype=np.int64)
+    off_dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(bufs[1], dtype=off_dtype)
+    off = off[arr.offset : arr.offset + n + 1]
+    data = np.frombuffer(bufs[2], dtype=np.uint8)[off[0] : off[-1]]
+    return data, np.diff(off).astype(np.int64)
+
+
 # ----------------------------------------------------------- DotVByte -------
 
 

@@ -506,6 +506,8 @@ class SeismicSparkIndex:
         A size-gated index answers from its cached replica (see
         :meth:`_in_process_replica`), bit-identical to the Spark paths; the
         replica is not safe for concurrent calls."""
+        if n_knn > 0 and getattr(self, "knn", None) is None:
+            raise ValueError("n_knn > 0 requires build_knn() first")
         if two_phase is None:
             two_phase = (
                 self.config.summary_energy < 1.0
@@ -538,8 +540,6 @@ class SeismicSparkIndex:
             return base
         from seismic_spark import knn as knn_mod
 
-        if getattr(self, "knn", None) is None:
-            raise ValueError("n_knn > 0 requires build_knn() first")
         return knn_mod.refine(
             base, self.knn, self.forward, qvecs, k=k, n_knn=n_knn
         )
@@ -699,20 +699,11 @@ class SeismicSparkIndex:
         heap_factor: float = 1.0,
         n_knn: int = 5,
     ) -> DataFrame:
-        """Q7: dynamically-pruned search + κ-NN neighbor refinement."""
-        from seismic_spark import knn as knn_mod
-
-        if getattr(self, "knn", None) is None:
-            raise ValueError("call build_knn() first")
-        qvecs = srch.resolve_queries(
-            self.spark, queries, self.vocab, cache=self._vocab_cache
+        """Q7: dynamically-pruned search + κ-NN neighbor refinement —
+        :meth:`batch_search` with ``n_knn`` and ``two_phase=False``."""
+        return self.batch_search(
+            queries, k, query_cut, heap_factor, two_phase=False, n_knn=n_knn
         )
-        base = srch.batch_search(
-            self.spark, self.postings, self.forward, qvecs,
-            k=k, query_cut=query_cut, heap_factor=heap_factor,
-            cache_registry=self._ubs_caches,
-        )
-        return knn_mod.refine(base, self.knn, self.forward, qvecs, k=k, n_knn=n_knn)
 
     # -------------------------------------------------------- conversion ----
 

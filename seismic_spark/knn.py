@@ -97,10 +97,11 @@ def _replica_self_search(
     the merge only exists as belt-and-braces for non-forward callers.
 
     Cost model (why this wins): the replica's postings+forward arrays are
-    ≈ the index's own bytes, shipped ONCE per executor via broadcast (the
-    `__getstate__` flat-state pickle), while the prior path shipped every
-    (query, term) pair's gap blob through an exchange and re-decoded it
-    per task.  One narrow map over the forward scan is the entire search.
+    ≈ the index's own bytes, shipped ONCE per executor via broadcast (a
+    fixed set of flat numpy arrays, pickled as they are), while the prior
+    path shipped every (query, term) pair's gap blob through an exchange
+    and re-decoded it per task.  One narrow map over the forward scan is
+    the entire search.
     """
     # one broadcast per index, reused by later builds and released by
     # unpersist_serving()

@@ -234,42 +234,18 @@ def cut_terms(queries_df: DataFrame, query_cut: int) -> DataFrame:
 # ------------------------------------------------- flattened batch utils ----
 
 
-def _concat(arrays: list[np.ndarray], dtype) -> np.ndarray:
-    return np.concatenate(arrays) if arrays else np.empty(0, dtype=dtype)
-
-
-def _query_keys(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Flatten per-row query arrays → (qkey sorted asc, qw_all, qlens).
-
-    qkey = row_index·2^32 + term_id; rows ascend and q_terms are sorted
-    ascending within a row, so the concatenation is globally sorted — one
-    np.searchsorted serves every row of the batch at once.
-
-    A user-supplied queries DataFrame (QUERIES_SCHEMA) with UNSORTED q_terms
-    is repaired here (in-row sort, weights permuted identically); duplicate
-    term ids within one row are MERGED by summing their weights — for a dot
-    product `q·d` a repeated component contributes `(w1+w2)·dv`, so the merge
-    is score-identical to the caller's intent and never aborts the batch.
-    """
-    qt_list = [np.asarray(a, dtype=np.int64) for a in pdf["q_terms"]]
-    qlens = np.fromiter((a.size for a in qt_list), dtype=np.int64, count=len(qt_list))
-    qt_all = _concat(qt_list, np.int64)
-    qw_all = _concat(
-        [np.asarray(a, dtype=np.float64) for a in pdf["q_weights"]], np.float64
-    )
-    row_rep = np.repeat(np.arange(len(pdf), dtype=np.int64), qlens)
-    qkey = row_rep * _KEY_SHIFT + qt_all
-    qkey, qw_all = _repair_qkey(qkey, qw_all)
-    return qkey, qw_all, qlens
-
-
 def _repair_qkey(
     qkey: np.ndarray, qw_all: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Shared tail of :func:`_query_keys`: in-place-order repair of an
-    unsorted flattened query-key array + duplicate merge (stable argsort,
-    reduceat in original-order-within-group) — extracted so the Arrow-flat
-    scoring path reuses the exact same float behavior."""
+    """In-place-order repair of a flattened query-key array
+    (``row·2^32 + term_id``, sorted asc when every row's q_terms is) + a
+    duplicate merge.  A user-supplied queries DataFrame (QUERIES_SCHEMA)
+    with UNSORTED q_terms is repaired here (stable argsort, weights permuted
+    identically); duplicate term ids within one row are MERGED by summing
+    their weights (reduceat in original-order-within-group) — for a dot
+    product ``q·d`` a repeated component contributes ``(w1+w2)·dv``, so the
+    merge is score-identical to the caller's intent and never aborts the
+    batch."""
     if qkey.size > 1:
         d = np.diff(qkey)
         if not np.all(d > 0):
@@ -283,20 +259,6 @@ def _repair_qkey(
                 qw_all = np.add.reduceat(qw_all, starts)
                 qkey = qkey[starts]
     return qkey, qw_all
-
-
-def _binary_flat(a) -> tuple[np.ndarray, np.ndarray]:
-    """Zero-copy (flat uint8 data in element order, per-element byte length)
-    view of a pyarrow Binary array — a binary column is one contiguous data
-    buffer plus offsets (guide §4.2), so re-slicing replaces a per-cell
-    ``np.frombuffer`` + concatenate."""
-    n = len(a)
-    bufs = a.buffers()
-    if n == 0 or bufs[1] is None or bufs[2] is None:
-        return np.empty(0, dtype=np.uint8), np.zeros(n, dtype=np.int64)
-    off = np.frombuffer(bufs[1], dtype=np.int32)[a.offset : a.offset + n + 1]
-    data = np.frombuffer(bufs[2], dtype=np.uint8)[off[0] : off[-1]]
-    return data, np.diff(off).astype(np.int64)
 
 
 def _gather_qw(
@@ -398,23 +360,18 @@ def topk(scored: DataFrame, k: int) -> DataFrame:
 # ------------------------------------------------------ block UB scan -------
 
 
-def _block_ubs(postings_matched: DataFrame, with_gaps: bool = True) -> DataFrame:
+def _block_ubs(postings_matched: DataFrame) -> DataFrame:
     """Per (query, posting-row, block): summary upper-bound dot (Q2), the
-    block-max lower bound, and (``with_gaps``) the block's encoded doc ids.
+    block-max lower bound, and the block's encoded doc ids.
 
     Fully vectorized per Arrow batch: all blocks of all rows are flattened
     into concatenated summary-element arrays; one searchsorted resolves every
     (element, query) weight; per-block UBs are segment sums.  No per-row or
     per-block Python math.
-
-    ``with_gaps=False`` drops the ``doc_gaps`` column from the scan entirely
-    (Parquet column pruning — the gap blobs are never read, decoded, or
-    shipped through Arrow); the deferred-gaps fast path re-fetches gaps for
-    SURVIVING blocks only via :func:`_fetch_gaps`.
     """
     out_schema = (
         "query_id STRING, term_id INT, salt INT, block INT, ub DOUBLE, "
-        "lb DOUBLE" + (", gaps BINARY" if with_gaps else "")
+        "lb DOUBLE, gaps BINARY"
     )
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -454,7 +411,7 @@ def _block_ubs(postings_matched: DataFrame, with_gaps: bool = True) -> DataFrame
             slen = pc.list_value_length(st_inner).to_numpy().astype(np.int64)
             st_all = st_inner.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
             codes_bin = cols["summary_codes"].flatten()  # binary per block
-            codes_all, _ = _binary_flat(codes_bin)
+            codes_all, _ = codec.binary_flat(codes_bin)
             mins_all = (
                 cols["summary_min"].flatten().to_numpy(zero_copy_only=False)
             )  # float32, same values the pandas path saw
@@ -480,17 +437,16 @@ def _block_ubs(postings_matched: DataFrame, with_gaps: bool = True) -> DataFrame
                 blocks_flat,
                 pa.array(ub),
                 pa.array(lb),
+                cols["doc_gaps"].flatten(),
             ]
-            names = ["query_id", "term_id", "salt", "block", "ub", "lb"]
-            if with_gaps:
-                arrays.append(cols["doc_gaps"].flatten())
-                names.append("gaps")
+            names = [
+                "query_id", "term_id", "salt", "block", "ub", "lb", "gaps",
+            ]
             yield pa.RecordBatch.from_arrays(arrays, names)
 
     cols_df = postings_matched.select(
         "query_id", "term_id", "salt", "qw", "q_terms", "q_weights",
-        "blocks", "block_max",
-        *(("doc_gaps",) if with_gaps else ()),
+        "blocks", "block_max", "doc_gaps",
         "summary_terms", "summary_codes", "summary_min", "summary_quant",
     )
     return cols_df.mapInArrow(scan, out_schema)
@@ -648,24 +604,6 @@ _DRIVER_THETA_MAX_ROWS = int(
     os.environ.get("SEISMIC_DRIVER_THETA_MAX_ROWS", "1000000")
 )
 
-# Deferred-gaps fast path (experiment, BENCH/BASELINE.md round-5 interactive
-# floor): the block-UB scan job reads NO doc_gaps column at all (Parquet
-# column pruning), so nothing is persisted; gaps are re-fetched from the
-# postings scan for SURVIVING blocks only.  Trades the ubs persist + wide
-# scan for one extra narrow scan job.
-#
-# MEASURED AND REJECTED as a default (tools/bench_serving.py, 1M docs,
-# canary-valid interleaved ABAB, BENCH/serving_r5.json): the extra fetch
-# jobs cost more than skipping the gaps column saves at every batch size
-# (batch 10 median 6.17 s vs 4.20 s base; batch 100: 6.96 vs 4.33).  The
-# gap blobs are small relative to the summaries the UB scan must read
-# anyway, and the persisted ubs frame makes the survivor filter free.
-# Kept env-gated for storage layouts where the gaps column is genuinely
-# expensive to read (e.g. remote object storage with wide blobs).
-_FASTPATH_DEFER_GAPS = (
-    os.environ.get("SEISMIC_FASTPATH_DEFER_GAPS", "0") == "1"
-)
-
 # In-plan dict batches push the union of all query term ids into the postings
 # scan as an IN predicate (result-neutral pruning).  Above this many ids the
 # literal list itself bloats Catalyst optimization / Parquet predicate
@@ -793,54 +731,6 @@ def _compact_rescore(
     return topk(scored, k)
 
 
-def _fetch_gaps(postings: DataFrame, keys: pd.DataFrame) -> DataFrame:
-    """(query_id, gaps) rows for an explicit set of surviving block keys.
-
-    ``keys`` is a small driver-side frame (query_id, term_id, salt, block) —
-    bounded by the fast-path gate.  The postings scan reads ONLY
-    (term_id, salt, blocks, doc_gaps) for the keys' term ids (IN-pruned row
-    groups), explodes to block granularity JVM-side (arrays_zip — no Python),
-    and a broadcast join keeps exactly the requested (query, block) pairs.
-    Feeds :func:`_compact_rescore` / :func:`_decode_docs` unchanged.
-    """
-    spark = postings.sparkSession
-    term_ids = sorted({int(t) for t in keys["term_id"].unique()})
-    kdf = spark.createDataFrame(
-        keys[["query_id", "term_id", "salt", "block"]],
-        "query_id STRING, term_id INT, salt INT, block INT",
-    )
-    if len(term_ids) <= _SCAN_PRUNE_MAX_IDS:
-        # same literal-list cap as everywhere else (see _SCAN_PRUNE_MAX_IDS);
-        # the broadcast kdf join below keeps the result identical without it
-        postings = postings.filter(F.col("term_id").isin(term_ids))
-    else:
-        # above the cap, prune via a broadcast semi-join instead of dropping
-        # pruning entirely: unlike the post-explode kdf join, this term_id
-        # join sits BELOW the Generate node, so non-matching posting rows
-        # are discarded before their gap blobs are exploded to block rows
-        # (r5 ADVICE item; result-identical — the kdf join is a further
-        # subset of these term ids).
-        tdf = postings.sparkSession.createDataFrame(
-            [(int(t),) for t in term_ids], "term_id INT"
-        )
-        postings = postings.join(F.broadcast(tdf), "term_id")
-    exploded = (
-        postings
-        .select(
-            "term_id", "salt",
-            F.explode(F.arrays_zip("blocks", "doc_gaps")).alias("z"),
-        )
-        .select(
-            "term_id", "salt",
-            F.col("z.blocks").alias("block"),
-            F.col("z.doc_gaps").alias("gaps"),
-        )
-    )
-    return exploded.join(F.broadcast(kdf), ["term_id", "salt", "block"]).select(
-        "query_id", "gaps"
-    )
-
-
 # Compact-tail gate: blocks hold at most a few hundred docs, so ≤4096
 # surviving blocks keeps the broadcast candidate set ≲ 1M (query, doc)
 # pairs ≈ tens of MB — comfortably under executor broadcast budgets.
@@ -938,16 +828,13 @@ def _driver_theta_search(
         .join(F.broadcast(cterms), "term_id")
         .join(F.broadcast(qdf), "query_id")
     )
-    defer = _FASTPATH_DEFER_GAPS
     if cache_registry is not None:
         retire_caches(cache_registry)
-    ubs = _block_ubs(matched, with_gaps=not defer)
-    if not defer:
-        # gaps ride along in the ubs frame: persist it so the rescore tail
-        # filters the cached frame instead of re-running the scan
-        ubs = ubs.persist()
-        if cache_registry is not None:
-            cache_registry.append(ubs)
+    # gaps ride along in the ubs frame: persist it so the rescore tail
+    # filters the cached frame instead of re-running the scan
+    ubs = _block_ubs(matched).persist()
+    if cache_registry is not None:
+        cache_registry.append(ubs)
 
     # Collect with a hard row cap: the auto-gate bounds batch × query_cut,
     # but blocks-per-list is data-dependent, so a head-term-heavy batch on a
@@ -980,15 +867,12 @@ def _driver_theta_search(
             .groupby(["query_id", "term_id"], sort=False)
             .head(1)[["query_id", "term_id", "salt", "block"]]
         )
-        if defer:
-            best_blocks = _fetch_gaps(postings, best)
-        else:
-            best_df = spark.createDataFrame(
-                best, "query_id STRING, term_id INT, salt INT, block INT"
-            )
-            best_blocks = ubs.join(
-                F.broadcast(best_df), ["query_id", "term_id", "salt", "block"]
-            )
+        best_df = spark.createDataFrame(
+            best, "query_id STRING, term_id INT, salt INT, block INT"
+        )
+        best_blocks = ubs.join(
+            F.broadcast(best_df), ["query_id", "term_id", "salt", "block"]
+        )
         if len(best) <= _COMPACT_TAIL_MAX_BLOCKS:
             p1_topk = _compact_rescore(best_blocks, forward, qdf, k)
         else:
@@ -1019,12 +903,7 @@ def _driver_theta_search(
     else:
         keep = np.ones(len(narrow), dtype=bool)
 
-    if defer:
-        # no cached frame to filter — fetch gaps for the surviving keys
-        survivors = _fetch_gaps(
-            postings, narrow.loc[keep, ["query_id", "term_id", "salt", "block"]]
-        )
-    elif keep.all():
+    if keep.all():
         survivors = ubs
     else:
         keys = narrow.loc[keep, ["query_id", "term_id", "salt", "block"]]
@@ -1079,7 +958,7 @@ def batch_search(
     broadcast) or a DataFrame with QUERIES_SCHEMA (bulk path, e.g. every doc
     as a query for κ-NN).  ``q_terms`` SHOULD be sorted ascending per row
     with distinct ids; unsorted rows are repaired batch-side and duplicate
-    ids merged by weight sum (see _query_keys).  Returns (query_id, rank,
+    ids merged by weight sum (see _repair_qkey).  Returns (query_id, rank,
     doc_id, score); no driver-side loops or mid-plan actions.
 
     ``cache_registry``: caller-scoped lifecycle for the persisted ubs frame

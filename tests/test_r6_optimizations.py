@@ -175,27 +175,29 @@ def test_build_knn_replica_matches_join(spark, idx, monkeypatch):
 
 
 def test_serving_replica_pickle_roundtrip(spark, idx):
-    """Flat-state pickling of ServingReplica (used for the knn broadcast)
-    preserves every per-term array exactly and the query path bitwise."""
+    """Default pickling of ServingReplica (the κ-NN broadcast) preserves
+    every array exactly and the query path bitwise; the replica holds no
+    per-term objects, only a fixed set of flat arrays."""
     import pickle
 
     rep = idx.serving_replica()
+    # the non-array state is the vocab and the config alone, so the
+    # attribute set is the same whatever the vocabulary's size
+    assert {n for n, v in vars(rep).items()
+            if not isinstance(v, np.ndarray)} == {"vocab", "config"}
     rep2 = pickle.loads(pickle.dumps(rep))
-    assert set(rep.postings) == set(rep2.postings)
-    for t, tp in rep.postings.items():
-        tp2 = rep2.postings[t]
-        for f in ("salts", "blocks", "bmax", "s_terms", "s_vals", "s_starts",
-                  "s_lens", "m_pos", "m_starts", "m_lens"):
-            assert np.array_equal(getattr(tp, f), getattr(tp2, f)), (t, f)
-    assert np.array_equal(rep.doc_ids, rep2.doc_ids)
-    assert np.array_equal(rep.fwd_terms, rep2.fwd_terms)
-    assert np.array_equal(rep.fwd_weights, rep2.fwd_weights)
-    qs = [("a", ["w1", "w2"], [1.0, 2.0])]
+    assert vars(rep).keys() == vars(rep2).keys()
+    for name, v in vars(rep).items():
+        v2 = getattr(rep2, name)
+        if isinstance(v, np.ndarray):
+            assert v.dtype == v2.dtype and np.array_equal(v, v2), name
+        else:
+            assert v == v2, name
     terms = list(rep.vocab)[:4]
     qs = [("a", terms, [1.0 + i for i in range(len(terms))])]
     r1 = rep.batch_search(qs, k=5, query_cut=4, heap_factor=0.8)
     r2 = rep2.batch_search(qs, k=5, query_cut=4, heap_factor=0.8)
-    assert r1.equals(r2)
+    assert len(r1) and r1.equals(r2)
 
 
 def test_resolve_queries_cached_matches_join(spark, idx):

@@ -109,35 +109,6 @@ def test_fast_path_unknown_and_empty_queries(spark, idx_est):
     ]
 
 
-@pytest.mark.parametrize("which,hf,qc,tp", [
-    ("exact", 1.0, 50, False),
-    ("est", 0.8, 5, True),
-])
-def test_deferred_gaps_identical(
-    spark, idx_exact, idx_est, which, hf, qc, tp, monkeypatch
-):
-    """$SEISMIC_FASTPATH_DEFER_GAPS=1 (block-UB scan reads no doc_gaps;
-    _fetch_gaps re-reads survivors only) is an env-gated serving variant —
-    measured and rejected as a default (BENCH/serving_r5.json) but still
-    shipped, so it must stay result-identical to the default fast path."""
-    idx = idx_exact if which == "exact" else idx_est
-    queries = synth_queries(600, n_queries=8, seed=21)
-    qvecs = srch.resolve_queries(spark, queries, idx.vocab)
-    kw = dict(k=10, query_cut=qc, heap_factor=hf, two_phase=tp)
-    base = srch.batch_search(
-        spark, idx.postings, idx.forward, qvecs, driver_theta=True, **kw
-    ).collect()
-    monkeypatch.setattr(srch, "_FASTPATH_DEFER_GAPS", True)
-    deferred = srch.batch_search(
-        spark, idx.postings, idx.forward, qvecs, driver_theta=True, **kw
-    ).collect()
-    key = lambda rows: sorted(
-        (r.query_id, r.rank, r.doc_id, r.score) for r in rows
-    )
-    assert key(deferred) == key(base)
-    assert len(base) > 0
-
-
 def test_index_wrapper_auto_fast_path_matches_inplan(spark, idx_est):
     """index.batch_search (dict path, auto fast) vs explicit in-plan."""
     queries = synth_queries(600, n_queries=6, seed=3)

@@ -75,6 +75,10 @@ def _spark_rows(spark, idx, queries, driver_theta, k=10, query_cut=10,
                      centroid_fraction=0.1, min_cluster_size=2,
                      kmeans_doc_cut=15, summary_energy=0.5, quant_ceil=False),
          0.9, 10, None),
+        # salted terms: blocks_per_row=2 splits most lists into several
+        # postings rows, so one term spans several (term_id, salt) rows
+        (IndexConfig(n_postings=40, summary_energy=0.6, blocking="geometric",
+                     block_b0=2, block_cap=4, blocks_per_row=2), 0.8, 8, None),
     ],
 )
 def test_replica_bitwise_identical_to_engine(spark, corpus, cfg, hf, qc, tp):
