@@ -9,6 +9,7 @@ Usage:
     python bench_extra.py [line ...]        # default: all lines
     SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py
     --explain-dir plans/r06 --tag before    # write <line>_<tag>.txt plans
+    python bench_extra.py ungated [--reps 4]  # Spark paths, in-process gate off
 
 Prints one JSON line per timed line: {"line": ..., "sec": ..., "jobs": N}.
 """
@@ -46,11 +47,126 @@ class JobCounter:
         self.jobs = self.end_jobs - self.start_jobs
 
 
+def _quartiles(xs: list[float]) -> tuple[float, float, float]:
+    import numpy as np
+
+    q1, med, q3 = np.percentile(np.asarray(xs, dtype=np.float64), [25, 50, 75])
+    return float(q1), float(med), float(q3)
+
+
+# θ arms of the ungated leg: $SEISMIC_DRIVER_THETA_MAX per arm (0 sends every
+# dict batch to the in-plan derivation), toggled on the module between reps
+UNGATED_ARMS = {"driver_theta": 1024, "inplan": 0}
+
+
+def ungated(spark, docs, reps: int, batches=(10, 100, 400)) -> list[dict]:
+    """The Spark search formulations with the in-process gate forced off.
+
+    Builds the bench's unpruned (hf 1.0) and pruned kmeans e0.5 (hf 0.9)
+    indexes and times ``idx.batch_search(...).collect()`` on
+    ``bench_queries(n)`` for every batch size, one- and two-phase, k 10,
+    cut 10.  Reps and arms interleave inside each cell (ABAB), so host
+    drift hits every arm alike.  Prints one JSON line per run and one
+    summary line per cell (median and quartiles of the seconds, median
+    jobs, and whether every run returned the same answers)."""
+    import hashlib
+
+    import seismic_spark.index as index_mod
+    from bench import bench_queries
+    from seismic_spark import search as srch
+    from seismic_spark.index import SeismicSparkIndex
+    from seismic_spark.postings import IndexConfig
+
+    index_mod._LOCAL_SCORE_MAX_BYTES = 0  # every call answers with Spark
+    sc = spark.sparkContext
+    configs = {
+        "unpruned": (IndexConfig(n_postings=10**6), 1.0),
+        "pruned": (IndexConfig(
+            n_postings=1000, pruning="fixed", blocking="kmeans",
+            centroid_fraction=0.1, min_cluster_size=2, kmeans_doc_cut=15,
+            summary_energy=0.5, quant_ceil=False,
+        ), 0.9),
+    }
+    idxs = {}
+    for name, (cfg, _hf) in configs.items():
+        t0 = time.time()
+        idxs[name] = SeismicSparkIndex.build(spark, docs, cfg)
+        idxs[name].postings.count()
+        print(json.dumps({"line": "ungated_build", "index": name,
+                          "sec": round(time.time() - t0, 3)}), flush=True)
+    terms = [r["term"] for r in idxs["unpruned"].vocab.select("term").collect()]
+    qsets = {n: bench_queries(terms, n=n) for n in batches}
+
+    def run(name: str, n: int, phase: int) -> dict:
+        idx, hf = idxs[name], configs[name][1]
+        with JobCounter(sc) as jc:
+            t0 = time.time()
+            rows = idx.batch_search(qsets[n], k=10, query_cut=10,
+                                    heap_factor=hf,
+                                    two_phase=phase == 2).collect()
+            dt = time.time() - t0
+        key = sorted((r["query_id"], r["rank"], r["doc_id"], repr(r["score"]))
+                     for r in rows)
+        digest = hashlib.sha1(repr(key).encode()).hexdigest()[:12]
+        return {"sec": round(dt, 3), "jobs": jc.jobs, "digest": digest}
+
+    for arm, cap in UNGATED_ARMS.items():  # untimed warm-up, per arm
+        srch._DRIVER_THETA_MAX = cap
+        for name in idxs:
+            for phase in (1, 2):
+                run(name, min(batches), phase)
+
+    cells = [(name, n, phase) for name in idxs for n in batches
+             for phase in (1, 2)]
+    runs: dict[tuple, list[dict]] = {}
+    for rep in range(reps):
+        for name, n, phase in cells:
+            for arm, cap in UNGATED_ARMS.items():
+                srch._DRIVER_THETA_MAX = cap
+                r = run(name, n, phase)
+                runs.setdefault((name, n, phase, arm), []).append(r)
+                print(json.dumps({"line": "ungated", "index": name, "batch": n,
+                                  "phase": phase, "arm": arm, "rep": rep, **r}),
+                      flush=True)
+
+    # forward/postings pinned by prepare_serving(), against the plain scans:
+    # unpruned, batch 100, one-phase, in-plan θ
+    srch._DRIVER_THETA_MAX = 0
+    idx = idxs["unpruned"]
+    plain = (idx.forward, idx.postings, idx.vocab)
+    idx.prepare_serving()
+    pinned = (idx.forward, idx.postings, idx.vocab)
+    run("unpruned", 100, 1)  # materialize the caches, untimed
+    for rep in range(reps):
+        for arm, frames in (("plain", plain), ("prepare_serving", pinned)):
+            idx.forward, idx.postings, idx.vocab = frames
+            r = run("unpruned", 100, 1)
+            runs.setdefault(("unpruned", 100, 1, arm), []).append(r)
+            print(json.dumps({"line": "ungated_prepare", "arm": arm,
+                              "rep": rep, **r}), flush=True)
+    idx.forward, idx.postings, idx.vocab = plain
+    idx.unpersist_serving()
+
+    summary = []
+    for (name, n, phase, arm), rs in runs.items():
+        q1, med, q3 = _quartiles([r["sec"] for r in rs])
+        jobs = sorted(r["jobs"] for r in rs)[len(rs) // 2]
+        s = {"line": "ungated_cell", "index": name, "batch": n,
+             "phase": phase, "arm": arm, "reps": len(rs),
+             "median_s": round(med, 3), "q1_s": round(q1, 3),
+             "q3_s": round(q3, 3), "jobs": jobs,
+             "digests": sorted({r["digest"] for r in rs})}
+        summary.append(s)
+        print(json.dumps(s), flush=True)
+    return summary
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     explain_dir = None
     tag = "before"
+    reps = 4
     args = []
     skip = False
     for i, a in enumerate(sys.argv[1:], 1):
@@ -62,6 +178,9 @@ def main() -> None:
             skip = True
         elif a == "--tag":
             tag = sys.argv[i + 1]
+            skip = True
+        elif a == "--reps":
+            reps = int(sys.argv[i + 1])
             skip = True
         else:
             args.append(a)
@@ -102,6 +221,13 @@ def main() -> None:
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     n_docs = docs.count()
+
+    # ---- ungated: the Spark formulations, in-process gate off ---------------
+    # (its own line only: it lowers the gate for the rest of the process)
+    if lines is not None and "ungated" in lines:
+        ungated(spark, docs, reps)
+        spark.stop()
+        return
 
     # ---- build (headline, n_postings=10^6 ≈ unpruned) ----------------------
     idx = None
