@@ -584,38 +584,9 @@ class SeismicSparkIndex:
             )
             return None
 
-    def prepare_serving(self) -> "SeismicSparkIndex":
-        """Pin the index for repeated-search serving (the in-session analogue
-        of the reference holding its whole index in RAM, inverted_index.rs:38).
-
-        ``forward`` is repartitioned by hash(doc_id) to the session's shuffle
-        parallelism and persisted: the candidates→forward exact-rescore join
-        (search.exact_score) then re-reads a deserialized in-memory relation
-        instead of re-scanning parquet per search, and — because
-        InMemoryRelation preserves its HashPartitioning — the forward-side
-        exchange is elided even when the candidate set is itself
-        DataFrame-scale (κ-NN, where AQE cannot broadcast).  ``postings`` and
-        ``vocab`` persist as-is (scan-only reuse).  On a cluster the same
-        effect comes from bucketing the stored tables by doc_id / term hash
-        (see save()); this method is for a long-lived driver serving many
-        queries.  Memory cost ≈ the forward+postings working set; call
-        ``unpersist_serving()`` to release.
-
-        Measured caveat (1M docs, local[16], parquet on tmpfs, healthy-host
-        canaries 1539/1500): cold-scan 135.9 QPS vs serving 108.7 QPS — when
-        the parquet already lives in RAM, Spark's columnar cache decodes
-        array columns SLOWER than re-scanning it, and AQE's broadcast of the
-        candidate side already avoids the forward exchange.  Use this only
-        where the scan itself is expensive (object storage / remote FS); it
-        is deliberately NOT enabled in bench.py."""
-        spark = self.spark
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        self.forward = self.forward.repartition(p, F.col("doc_id")).persist()
-        self.postings = self.postings.persist()
-        self.vocab = self.vocab.persist()
-        return self
-
     def unpersist_serving(self) -> None:
+        """Release the index's cached frames and its κ-NN replica
+        broadcast."""
         for df in (self.forward, self.postings, self.vocab):
             df.unpersist()
         if self._replica_bc is not None:

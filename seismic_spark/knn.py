@@ -24,9 +24,8 @@ from pyspark.sql import functions as F
 from seismic_spark import search as srch
 
 
-def build_knn(index, nknn: int = 10, batch_size: int | None = None,
-              query_cut: int = 10, heap_factor: float = 0.7,
-              two_phase: bool = False) -> DataFrame:
+def build_knn(index, nknn: int = 10, query_cut: int = 10,
+              heap_factor: float = 0.7, two_phase: bool = False) -> DataFrame:
     """(doc_id, neighbors ARRAY<BIGINT>) — top-nknn neighbors per doc.
 
     Reference parity: self-queries with the doc's own vector, drops the doc
@@ -34,8 +33,7 @@ def build_knn(index, nknn: int = 10, batch_size: int | None = None,
 
     One distributed job: forward-as-queries ⋈ postings on term_id → block
     pruning → exact re-score ⋈ forward — no ``collect()``, no per-batch job
-    loop, so it runs at corpus scale.  ``batch_size`` is accepted for
-    backward compatibility and ignored (the old driver-batched path is gone).
+    loop, so it runs at corpus scale.
     """
     spark = index.spark
     queries_df = index.forward.select(
@@ -43,7 +41,7 @@ def build_knn(index, nknn: int = 10, batch_size: int | None = None,
         F.col("terms").alias("q_terms"),
         F.col("weights").alias("q_weights"),
     ).filter(F.size("q_terms") > 0)
-    rep = None if two_phase else index._in_process_replica()
+    rep = index._in_process_replica()
     if rep is not None:
         # map-only self-search: broadcast the index's replica —
         # bit-identical to batch_search by test_serving's pinning — and run
@@ -51,7 +49,8 @@ def build_knn(index, nknn: int = 10, batch_size: int | None = None,
         # no block-UB scan, no gap-blob exchange, no per-pair rows anywhere
         # (guide §8 taken to its end for size-gated corpora)
         res = _replica_self_search(
-            index, rep, queries_df, nknn + 1, query_cut, heap_factor
+            index, rep, queries_df, nknn + 1, query_cut, heap_factor,
+            two_phase,
         )
     else:
         res = srch.batch_search(
@@ -82,7 +81,7 @@ def build_knn(index, nknn: int = 10, batch_size: int | None = None,
 
 def _replica_self_search(
     index, rep, queries_df: DataFrame, k: int, query_cut: int,
-    heap_factor: float,
+    heap_factor: float, two_phase: bool,
 ) -> DataFrame:
     """Score every query row against a broadcast :class:`ServingReplica` in
     one map stage — (query_id, rank, doc_id, score), bitwise-identical to
@@ -131,7 +130,7 @@ def _replica_self_search(
                 w = np.asarray(w_col[i], dtype=np.float64)
                 qt, qw = srch.merge_sorted_terms(t, w)
                 hit = r._search_resolved(
-                    qt, qw, k, query_cut, heap_factor, False
+                    qt, qw, k, query_cut, heap_factor, two_phase
                 )
                 if hit is None:
                     continue

@@ -17,7 +17,7 @@ cannot reach.  The float parity is not best-effort: every upper bound and
 every exact score is a `codec.segment_sums` (np.add.reduceat) over the same
 f64 contribution arrays the executors build (search.py `_block_ubs` /
 `exact_score`), θ is selected by comparisons over the same values the
-driver-θ fast path collects, and the skip predicate `ub >= heap_factor·θ`
+in-plan θ derivation aggregates, and the skip predicate `ub >= heap_factor·θ`
 is the same IEEE f64 comparison — so the survivor set, candidate set, and
 every score agree bitwise (pinned by tests/test_serving.py at exact AND
 approximate configs, including post-save/load hydration).
@@ -223,15 +223,26 @@ class ServingReplica:
         # 4-pass searchsorted/clip/eq/where — the same value (stored
         # weight at hits, 0.0 at misses), so floats are unchanged.  All
         # gathered id spaces (summary terms, forward terms ⊆ corpus
-        # components; query ids ⊆ vocab ids) are covered by dim.
+        # components; query ids ⊆ vocab ids) are covered by dim.  `_lut()`
+        # allocates it on the first query, so a freshly hydrated replica
+        # carries none.
         dim = int(fwd_terms.max()) + 1 if fwd_terms.size else 0
         if vocab:
             dim = max(dim, max(vocab.values()) + 1)
-        self._qw_lut = (
-            np.zeros(dim, dtype=np.float64)
-            if 0 < dim <= self._LUT_MAX_DIM
-            else None
-        )
+        self._lut_dim = dim if dim <= self._LUT_MAX_DIM else 0
+        self._qw_lut = None
+
+    def __getstate__(self) -> dict:
+        # the LUT is all zeros between queries: a pickle (the κ-NN
+        # broadcast) leaves it out and the receiver allocates its own
+        return {**self.__dict__, "_qw_lut": None}
+
+    def _lut(self) -> np.ndarray | None:
+        """The dense query-weight LUT (allocated here on first use), or
+        None when the id space is over ``_LUT_MAX_DIM``."""
+        if self._qw_lut is None and self._lut_dim:
+            self._qw_lut = np.zeros(self._lut_dim, dtype=np.float64)
+        return self._qw_lut
 
     # ------------------------------------------------------- hydration ----
 
@@ -419,9 +430,10 @@ class ServingReplica:
         if not hit.any():
             return None
         ti, cw = ti[hit], cw[hit]
-        if self._qw_lut is not None:
+        lut = self._lut()
+        if lut is not None:
             # scatter this query's weights (zeroed again at every exit)
-            self._qw_lut[qt] = qw
+            lut[qt] = qw
 
         # every matched term's blocks (one segment each) and rows
         rows0, rows1 = self.term_rows[ti], self.term_rows[ti + 1]
@@ -442,8 +454,8 @@ class ServingReplica:
         st_cat = np.concatenate([self.s_terms[a:b] for a, b in spans])
         sv_cat = np.concatenate([self.s_vals[a:b] for a, b in spans])
         lens_cat = self.s_lens[blk]
-        if self._qw_lut is not None:
-            qw_st = self._qw_lut[st_cat]
+        if lut is not None:
+            qw_st = lut[st_cat]
         else:
             qw_st = _gather_qw(qt, qw, st_cat)
         ub = codec.segment_sums(
@@ -486,8 +498,8 @@ class ServingReplica:
             else np.ones(ub.size, dtype=bool)
         )
         if not keep.any():
-            if self._qw_lut is not None:
-                self._qw_lut[qt] = 0.0
+            if lut is not None:
+                lut[qt] = 0.0
             return None
         # positions are a monotone bijection of the doc ids, so the
         # unique/dedup set and the (score desc, doc asc) tie order are
@@ -498,8 +510,8 @@ class ServingReplica:
         )
         scores = self._score_docs(qt, qw, cands)
         top = np.lexsort((cands, -scores))[:k]
-        if self._qw_lut is not None:
-            self._qw_lut[qt] = 0.0
+        if lut is not None:
+            lut[qt] = 0.0
         return cands[top], scores[top]
 
     def batch_search(
@@ -512,7 +524,7 @@ class ServingReplica:
     ) -> pd.DataFrame:
         """(query_id, rank, doc_id, score) — bit-identical to the Spark
         formulations of `search.batch_search` on the hydrated index (same θ
-        derivation as search._driver_theta_search, same skip predicate,
+        derivation as search's in-plan chain, same skip predicate,
         same rescore floats, same (score desc, doc_id asc) tie order).
         Size-gated `SeismicSparkIndex.batch_search` answers through here."""
         if two_phase is None:
@@ -540,14 +552,15 @@ class ServingReplica:
         asc).  Temporaries are per query (one corpus-nnz pass each)."""
         all_pos = np.arange(self.doc_ids.size, dtype=np.int64)
         hits = []
+        lut = self._lut()
         for qid, qt, qw in self._resolved_queries(queries):
-            if self._qw_lut is not None:
-                self._qw_lut[qt] = qw
+            if lut is not None:
+                lut[qt] = qw
             try:
                 scores = self._score_docs(qt, qw, all_pos)
             finally:
-                if self._qw_lut is not None:
-                    self._qw_lut[qt] = 0.0
+                if lut is not None:
+                    lut[qt] = 0.0
             pos = np.flatnonzero(scores > 0.0)
             if pos.size:
                 top = pos[np.lexsort((pos, -scores[pos]))[:k]]

@@ -63,45 +63,6 @@ def test_unknown_and_empty_queries(tiny_index):
     assert got == []
 
 
-def test_prepare_serving_identical_results(spark):
-    """prepare_serving (pinned, doc_id-partitioned forward) must be a pure
-    physical optimization: same results, and the rescore plan reads the
-    in-memory relation instead of re-scanning storage."""
-    docs = spark.createDataFrame(
-        [(i, f"tok{i % 7} tok{(i * 3) % 11} common") for i in range(40)],
-        "doc_id BIGINT, text STRING",
-    )
-    idx = SeismicSparkIndex.build(
-        spark, docs, IndexConfig(n_postings=100, blocking="fixed", block_size=4)
-    )
-    q = [("q0", ["common", "tok3"], [1.0, 2.0])]
-    before = [
-        (r.rank, r.doc_id, round(r.score, 10))
-        for r in idx.batch_search(q, k=5, heap_factor=1.0).collect()
-    ]
-    idx.prepare_serving()
-    res = idx.batch_search(q, k=5, heap_factor=1.0)
-    after = [
-        (r.rank, r.doc_id, round(r.score, 10)) for r in res.collect()
-    ]
-    assert after == before and after
-    # the InMemoryTableScan claim is about the DISTRIBUTED rescore join —
-    # a size-gated index answers from its in-process replica (a
-    # LocalTableScan result), so pin the plan shape on the Spark path
-    from seismic_spark import search as srch
-
-    qvecs = srch.resolve_queries(spark, q, idx.vocab)
-    res_dist = srch.batch_search(
-        spark, idx.postings, idx.forward, qvecs, k=5, heap_factor=1.0
-    )
-    dist = [(r.rank, r.doc_id, round(r.score, 10)) for r in res_dist.collect()]
-    assert dist == before
-    assert "InMemoryTableScan" in (
-        res_dist._jdf.queryExecution().executedPlan().toString()
-    )
-    idx.unpersist_serving()
-
-
 def test_duplicate_query_terms_merge_by_sum(tiny_index):
     """A repeated token in a query must not crash the batch; it merges by
     summing weights (dot-product-identical: q·d with a repeated component

@@ -121,28 +121,29 @@ def small_idx(spark):
 
 def test_duplicate_term_query_bitwise_identity(spark, small_idx):
     """A query repeating a term 3+ times merges ONCE (pinned order) before
-    path selection — fast-path and in-plan scores compare with ==."""
-    any_tids = sorted(
-        r["term_id"] for r in small_idx.vocab.limit(4).collect()
-    )
-    t0, t1 = any_tids[0], any_tids[1]
+    it enters the plan — in-plan and serving-replica scores compare with
+    ==."""
+    tok_of = {r["term_id"]: r["term"] for r in small_idx.vocab.limit(4).collect()}
+    t0, t1 = sorted(tok_of)[:2]
+    tok0, tok1 = tok_of[t0], tok_of[t1]
     qvecs = {
         "qdup": (
             np.array([t0, t1, t0, t0], dtype=np.int64),
             np.array([0.3, 1.0, 0.1, 0.2], dtype=np.float64),
         )
     }
-    fast = srch.batch_search(
-        spark, small_idx.postings, small_idx.forward, qvecs,
-        k=10, query_cut=5, heap_factor=0.8, two_phase=True, driver_theta=True,
-    ).collect()
+    kw = dict(k=10, query_cut=5, heap_factor=0.8, two_phase=True)
     plan = srch.batch_search(
-        spark, small_idx.postings, small_idx.forward, qvecs,
-        k=10, query_cut=5, heap_factor=0.8, two_phase=True, driver_theta=False,
+        spark, small_idx.postings, small_idx.forward, qvecs, **kw
     ).collect()
-    key = lambda rows: sorted((r.query_id, r.rank, r.doc_id, r.score) for r in rows)
-    assert key(fast) == key(plan)
-    assert len(fast) > 0
+    rep = small_idx.serving_replica().batch_search(
+        [("qdup", [tok0, tok1, tok0, tok0], [0.3, 1.0, 0.1, 0.2])], **kw
+    )
+    key = lambda rows: sorted(
+        (r.query_id, int(r.rank), int(r.doc_id), float(r.score)) for r in rows
+    )
+    assert key(plan) == key(rep.itertuples(index=False))
+    assert len(plan) > 0
 
 
 def test_merge_dup_qvecs_deterministic_order():
@@ -161,35 +162,6 @@ def test_merge_dup_qvecs_deterministic_order():
     # order feeds one reduceat — deterministic, association unspecified)
     assert outs[0] == outs[1] == outs[2]
     assert outs[0] == pytest.approx(0.6)
-
-
-# ------------------------------------------------------ fast-path row cap --
-
-
-def test_fast_path_row_cap_falls_back(spark, small_idx, monkeypatch):
-    queries = synth_queries(400, n_queries=4, seed=3)
-    qvecs = srch.resolve_queries(spark, queries, small_idx.vocab)
-    ref = srch.batch_search(
-        spark, small_idx.postings, small_idx.forward, qvecs,
-        k=10, query_cut=8, heap_factor=0.8, driver_theta=False,
-    ).collect()
-    monkeypatch.setattr(srch, "_DRIVER_THETA_MAX_ROWS", 2)
-    # the fast path itself must signal abort ...
-    qdf = srch.queries_df_from_qvecs(spark, qvecs)
-    assert (
-        srch._driver_theta_search(
-            spark, small_idx.postings, small_idx.forward, qvecs, qdf,
-            10, 8, 0.8, False, None,
-        )
-        is None
-    )
-    # ... and batch_search must transparently serve the in-plan result
-    got = srch.batch_search(
-        spark, small_idx.postings, small_idx.forward, qvecs,
-        k=10, query_cut=8, heap_factor=0.8, driver_theta=True,
-    ).collect()
-    key = lambda rows: sorted((r.query_id, r.rank, r.doc_id, r.score) for r in rows)
-    assert key(got) == key(ref)
 
 
 # -------------------------------------------------- default cache registry --
@@ -413,7 +385,7 @@ def test_scan_prune_in_cap(spark, small_idx, monkeypatch):
     def plan_of(**kw):
         df = srch.batch_search(
             spark, small_idx.postings, small_idx.forward, qvecs,
-            k=5, query_cut=5, heap_factor=0.8, driver_theta=False, **kw,
+            k=5, query_cut=5, heap_factor=0.8, **kw,
         )
         return df, df._jdf.queryExecution().optimizedPlan().toString()
 

@@ -156,20 +156,23 @@ def test_minhash_matches_stacked_formulation(spark):
     assert key(new) == key(old)
 
 
-def test_build_knn_replica_matches_join(spark, idx, monkeypatch):
+@pytest.mark.parametrize("two_phase", [False, True])
+def test_build_knn_replica_matches_join(spark, idx, monkeypatch, two_phase):
     """The map-only replica self-search path (default under the in-process
-    gate) == the ungated join path — identical graphs on real data."""
+    gate, both phases) == the ungated join path — identical graphs on real
+    data."""
     from seismic_spark import index as index_mod
     from seismic_spark import knn as knn_mod
 
     key = lambda df: sorted(
         (r.doc_id, tuple(r.neighbors)) for r in df.collect()
     )
-    g_rep = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
+    kw = dict(nknn=4, query_cut=6, heap_factor=0.7, two_phase=two_phase)
+    g_rep = key(knn_mod.build_knn(idx, **kw))
     assert idx._replica_bc is not None  # the replica path did run
     monkeypatch.setattr(index_mod, "_LOCAL_SCORE_MAX_BYTES", 0)
     assert idx._in_process_replica() is None
-    g_join = key(knn_mod.build_knn(idx, nknn=4, query_cut=6, heap_factor=0.7))
+    g_join = key(knn_mod.build_knn(idx, **kw))
     assert g_rep == g_join
     assert len(g_rep) > 0
 
@@ -177,14 +180,21 @@ def test_build_knn_replica_matches_join(spark, idx, monkeypatch):
 def test_serving_replica_pickle_roundtrip(spark, idx):
     """Default pickling of ServingReplica (the κ-NN broadcast) preserves
     every array exactly and the query path bitwise; the replica holds no
-    per-term objects, only a fixed set of flat arrays."""
+    per-term objects, only a fixed set of flat arrays.  The query-weight
+    LUT is scratch: a freshly hydrated replica has none, and a pickle never
+    carries one."""
     import pickle
 
-    rep = idx.serving_replica()
-    # the non-array state is the vocab and the config alone, so the
-    # attribute set is the same whatever the vocabulary's size
+    from seismic_spark.serving import ServingReplica
+
+    rep = ServingReplica.from_index(idx)
+    assert rep._qw_lut is None and rep._lut_dim > 0
+    # the non-array state is the vocab, the config and the LUT's size, so
+    # the attribute set is the same whatever the vocabulary's size
     assert {n for n, v in vars(rep).items()
-            if not isinstance(v, np.ndarray)} == {"vocab", "config"}
+            if not isinstance(v, np.ndarray)} == {
+        "vocab", "config", "_lut_dim", "_qw_lut",
+    }
     rep2 = pickle.loads(pickle.dumps(rep))
     assert vars(rep).keys() == vars(rep2).keys()
     for name, v in vars(rep).items():
@@ -196,8 +206,12 @@ def test_serving_replica_pickle_roundtrip(spark, idx):
     terms = list(rep.vocab)[:4]
     qs = [("a", terms, [1.0 + i for i in range(len(terms))])]
     r1 = rep.batch_search(qs, k=5, query_cut=4, heap_factor=0.8)
+    assert rep._qw_lut is not None and not rep._qw_lut.any()
+    rep3 = pickle.loads(pickle.dumps(rep))  # after a query: still no LUT
+    assert rep3._qw_lut is None
     r2 = rep2.batch_search(qs, k=5, query_cut=4, heap_factor=0.8)
-    assert len(r1) and r1.equals(r2)
+    r3 = rep3.batch_search(qs, k=5, query_cut=4, heap_factor=0.8)
+    assert len(r1) and r1.equals(r2) and r1.equals(r3)
 
 
 def test_resolve_queries_cached_matches_join(spark, idx):

@@ -1,11 +1,10 @@
-"""Driver-θ fast path (search._driver_theta_search) must be RESULT-IDENTICAL
-to the in-plan θ derivation — same survivors, bitwise-equal scores, same
-ranks — across exact and estimate-summary configs, both phases, and edge
-cases (unknown terms, k larger than the corpus, empty batches).
-
-The fast path exists purely to cut per-batch job-scheduling fixed cost
-(BENCH/BASELINE.md round-4 batch-size section); any semantic divergence is
-a bug, so scores are compared with == (not approx)."""
+"""The in-plan θ derivation (search.batch_search, the one Spark path for
+dict batches) must be RESULT-IDENTICAL to the serving replica (and to the
+index wrapper that answers from it) — same survivors, bitwise-equal
+scores, same ranks — across exact and estimate-summary configs, both
+phases, and edge cases (unknown terms, k larger than the matches, empty
+batches).  Any divergence is a bug, so scores are compared with == (not
+approx)."""
 
 import pytest
 
@@ -40,18 +39,20 @@ def idx_est(spark, corpus):
     )
 
 
-def _both(spark, idx, queries, **kw):
-    qvecs = srch.resolve_queries(spark, queries, idx.vocab)
-    fast = srch.batch_search(
-        spark, idx.postings, idx.forward, qvecs, driver_theta=True, **kw
-    ).collect()
-    plan = srch.batch_search(
-        spark, idx.postings, idx.forward, qvecs, driver_theta=False, **kw
-    ).collect()
-    key = lambda rows: sorted(
-        (r.query_id, r.rank, r.doc_id, r.score) for r in rows
+def _key(rows):
+    return sorted(
+        (r.query_id, int(r.rank), int(r.doc_id), float(r.score)) for r in rows
     )
-    return key(fast), key(plan)
+
+
+def _both(spark, idx, queries, **kw):
+    """(in-plan rows, replica rows) for one batch on one index."""
+    qvecs = srch.resolve_queries(spark, queries, idx.vocab)
+    plan = srch.batch_search(
+        spark, idx.postings, idx.forward, qvecs, **kw
+    ).collect()
+    rep = idx.serving_replica().batch_search(queries, **kw)
+    return _key(plan), _key(rep.itertuples(index=False))
 
 
 @pytest.mark.parametrize(
@@ -67,20 +68,20 @@ def _both(spark, idx, queries, **kw):
 def test_fast_path_identical(spark, idx_exact, idx_est, which, hf, qc, tp):
     idx = idx_exact if which == "exact" else idx_est
     queries = synth_queries(600, n_queries=10, seed=5)
-    fast, plan = _both(
+    plan, rep = _both(
         spark, idx, queries, k=10, query_cut=qc, heap_factor=hf, two_phase=tp
     )
-    assert fast == plan
-    assert len(fast) > 0
+    assert plan == rep
+    assert len(plan) > 0
 
 
 def test_fast_path_k_exceeds_matches(spark, idx_est):
     queries = synth_queries(600, n_queries=4, seed=9)
-    fast, plan = _both(
+    plan, rep = _both(
         spark, idx_est, queries, k=500, query_cut=8, heap_factor=0.8,
         two_phase=True,
     )
-    assert fast == plan
+    assert plan == rep and plan
 
 
 def test_fast_path_unknown_and_empty_queries(spark, idx_est):
@@ -89,28 +90,33 @@ def test_fast_path_unknown_and_empty_queries(spark, idx_est):
         ("q_known", ["term_3", "term_17"], [1.0, 0.5]),
         ("q_ghost", ["zzz_not_in_vocab"], [1.0]),
     ]
-    qvecs = srch.resolve_queries(spark, queries, idx_est.vocab)
-    res = srch.batch_search(
-        spark, idx_est.postings, idx_est.forward, qvecs,
-        k=5, query_cut=5, heap_factor=0.9, driver_theta=True,
-    ).collect()
+    plan, rep = _both(
+        spark, idx_est, queries, k=5, query_cut=5, heap_factor=0.9,
+        two_phase=False,
+    )
     # the known query MUST answer (synth_pages tokens are term_{j}; an
     # earlier revision used w3/w17 which never resolved, making this check
     # vacuous) and the ghost query must drop out without erroring
-    assert {r.query_id for r in res} == {"q_known"}
-    # fully-empty resolved batch → empty frame with the search schema
-    empty = srch.batch_search(
-        spark, idx_est.postings, idx_est.forward, {},
-        k=5, driver_theta=True,
-    )
-    assert empty.count() == 0
-    assert [f.name for f in empty.schema.fields] == [
-        "query_id", "rank", "doc_id", "score",
-    ]
+    assert {r[0] for r in plan} == {"q_known"}
+    assert plan == rep
+    # fully-empty resolved batch → empty frame with the search schema, in
+    # both phases
+    for two_phase in (False, True):
+        empty = srch.batch_search(
+            spark, idx_est.postings, idx_est.forward, {}, k=5,
+            two_phase=two_phase,
+        )
+        assert empty.collect() == []
+        assert [(f.name, f.dataType.simpleString())
+                for f in empty.schema.fields] == [
+            ("query_id", "string"), ("rank", "int"), ("doc_id", "bigint"),
+            ("score", "double"),
+        ]
 
 
 def test_index_wrapper_auto_fast_path_matches_inplan(spark, idx_est):
-    """index.batch_search (dict path, auto fast) vs explicit in-plan."""
+    """index.batch_search (dict path, answered by the gated index's
+    replica) vs explicit in-plan."""
     queries = synth_queries(600, n_queries=6, seed=3)
     via_idx = sorted(
         (r.query_id, r.rank, r.doc_id, r.score)
@@ -125,37 +131,6 @@ def test_index_wrapper_auto_fast_path_matches_inplan(spark, idx_est):
             spark, idx_est.postings, idx_est.forward, qvecs,
             k=10, query_cut=8, heap_factor=0.9,
             two_phase=True,  # idx_est cfg ⇒ wrapper default ON
-            driver_theta=False,
         ).collect()
     )
     assert via_idx == inplan
-
-
-def test_row_cap_fallthrough_retires_fast_path_cache(
-    spark, idx_exact, monkeypatch
-):
-    """When the block-table row cap aborts the fast path, its persisted ubs
-    must be retired immediately — even for callers that pin
-    broadcast_queries/two_phase off (the in-plan tail's conditional
-    retirement never runs for them)."""
-    monkeypatch.setattr(srch, "_DRIVER_THETA_MAX_ROWS", 0)  # force abort
-    queries = synth_queries(600, n_queries=2, seed=5)
-    qvecs = srch.resolve_queries(spark, queries, idx_exact.vocab)
-    registry = []
-    res = srch.batch_search(
-        spark, idx_exact.postings, idx_exact.forward, qvecs,
-        k=5, query_cut=50, heap_factor=1.0, driver_theta=True,
-        broadcast_queries=False, two_phase=False, cache_registry=registry,
-    ).collect()
-    assert res  # fell through to in-plan and still answered
-    assert registry == []  # abandoned fast-path ubs retired, nothing leaked
-    # and the fall-through answer matches a plain in-plan run
-    plan = srch.batch_search(
-        spark, idx_exact.postings, idx_exact.forward, qvecs,
-        k=5, query_cut=50, heap_factor=1.0, driver_theta=False,
-        broadcast_queries=False, two_phase=False,
-    ).collect()
-    key = lambda rows: sorted(
-        (r.query_id, r.rank, r.doc_id, r.score) for r in rows
-    )
-    assert key(res) == key(plan)

@@ -36,8 +36,8 @@ def _rows(df_or_pdf):
     )
 
 
-def _spark_rows(spark, idx, queries, driver_theta, k=10, query_cut=10,
-                heap_factor=1.0, two_phase=None):
+def _spark_rows(spark, idx, queries, k=10, query_cut=10, heap_factor=1.0,
+                two_phase=None):
     """`search.batch_search` (the Spark formulations) with the index's
     default two_phase rule."""
     if two_phase is None:
@@ -50,7 +50,6 @@ def _spark_rows(spark, idx, queries, driver_theta, k=10, query_cut=10,
         srch.batch_search(
             spark, idx.postings, idx.forward, qvecs, k=k, query_cut=query_cut,
             heap_factor=heap_factor, two_phase=two_phase,
-            driver_theta=driver_theta,
         )
     )
 
@@ -90,10 +89,9 @@ def test_replica_bitwise_identical_to_engine(spark, corpus, cfg, hf, qc, tp):
         )
     )
     assert got  # the pin compares real answers
-    for driver_theta in (True, False):
-        engine = _spark_rows(spark, idx, queries, driver_theta, query_cut=qc,
-                             heap_factor=hf, two_phase=tp)
-        assert got == engine  # exact float equality, not approx
+    engine = _spark_rows(spark, idx, queries, query_cut=qc, heap_factor=hf,
+                         two_phase=tp)
+    assert got == engine  # exact float equality, not approx
     # the gated index answers from that replica, through Spark and back
     assert _rows(
         idx.batch_search(queries, k=10, query_cut=qc, heap_factor=hf,
@@ -132,10 +130,7 @@ def test_replica_from_saved_index(spark, corpus, tmp_path):
         loaded.serving_replica().batch_search(queries, k=10, heap_factor=0.8)
     )
     assert got
-    for driver_theta in (True, False):
-        assert got == _spark_rows(
-            spark, loaded, queries, driver_theta, heap_factor=0.8
-        )
+    assert got == _spark_rows(spark, loaded, queries, heap_factor=0.8)
 
 
 def test_replica_budget_gate(spark, corpus):
@@ -168,7 +163,7 @@ def test_replica_search_text_matches_engine(spark, corpus):
     toks = [t for t in snippet.lower().split(" ") if t]
     uniq = sorted(set(toks))
     query = [("q0", uniq, [float(toks.count(t)) for t in uniq])]
-    engine = _spark_rows(spark, idx, query, None, k=5, heap_factor=0.9)
+    engine = _spark_rows(spark, idx, query, k=5, heap_factor=0.9)
     got = _rows(rep.search_text("q0", snippet, k=5, heap_factor=0.9))
     assert got == engine and got
     assert _rows(idx.search_text("q0", snippet, k=5, heap_factor=0.9)) == got
@@ -212,7 +207,7 @@ def test_replica_repeated_query_id_merges_like_engine(spark, corpus):
         ("qrep", terms[:half], weights[:half]),
         ("qrep", terms[half:], weights[half:]),
     ]
-    engine = _spark_rows(spark, idx, queries, None, k=5, heap_factor=0.9)
+    engine = _spark_rows(spark, idx, queries, k=5, heap_factor=0.9)
     got = _rows(rep.batch_search(queries, k=5, query_cut=10, heap_factor=0.9))
     assert got == engine
     # exactly one rank sequence for the merged query, no duplicate ranks
@@ -310,7 +305,7 @@ def test_gated_paths_fall_back_to_spark_when_hydration_fails(
     )
     queries = synth_queries(600, n_queries=4, seed=19)
     qvecs = srch.resolve_queries(spark, queries, idx.vocab)
-    want_batch = _spark_rows(spark, idx, queries, None, k=5, heap_factor=0.9)
+    want_batch = _spark_rows(spark, idx, queries, k=5, heap_factor=0.9)
     want_brute = _rows(srch.bruteforce_search(spark, idx.forward, qvecs, k=5))
     graph = lambda df: sorted(
         (r.doc_id, tuple(r.neighbors)) for r in df.collect()
