@@ -54,20 +54,29 @@ def _quartiles(xs: list[float]) -> tuple[float, float, float]:
     return float(q1), float(med), float(q3)
 
 
+# θ arms of the ungated leg: search._DRIVER_THETA_MAX per arm, toggled on
+# the module between runs ("driver_theta": the shipped routing, where
+# two-phase dict batches derive θ on the driver; "inplan": 0 sends every
+# batch to the in-plan derivation, so one-phase cells are an A/A pair)
+UNGATED_ARMS = {"driver_theta": 1024, "inplan": 0}
+
+
 def ungated(spark, docs, reps: int, batches=(10, 100, 400)) -> None:
     """The Spark search formulations with the in-process gate forced off.
 
     Builds the bench's unpruned (hf 1.0) and pruned kmeans e0.5 (hf 0.9)
     indexes and times ``idx.batch_search(...).collect()`` on
     ``bench_queries(n)`` for every batch size, one- and two-phase, k 10,
-    cut 10.  Each rep walks every cell once, so host drift spreads over
-    all cells alike.  Prints one JSON line per run and one summary line per
-    cell (median and quartiles of the seconds, median jobs, and the digests
-    of the answers, one when every run returned the same rows)."""
+    cut 10.  Reps and arms interleave inside each cell (ABAB), so host
+    drift hits every arm alike.  Prints one JSON line per run and one
+    summary line per cell and arm (median and quartiles of the seconds,
+    median jobs, and the digests of the answers, one when every run
+    returned the same rows)."""
     import hashlib
 
     import seismic_spark.index as index_mod
     from bench import bench_queries
+    from seismic_spark import search as srch
     from seismic_spark.index import SeismicSparkIndex
     from seismic_spark.postings import IndexConfig
 
@@ -104,25 +113,30 @@ def ungated(spark, docs, reps: int, batches=(10, 100, 400)) -> None:
         digest = hashlib.sha1(repr(key).encode()).hexdigest()[:12]
         return {"sec": round(dt, 3), "jobs": jc.jobs, "digest": digest}
 
-    for name in idxs:  # untimed warm-up
-        for phase in (1, 2):
-            run(name, min(batches), phase)
+    for cap in UNGATED_ARMS.values():  # untimed warm-up, per arm
+        srch._DRIVER_THETA_MAX = cap
+        for name in idxs:
+            for phase in (1, 2):
+                run(name, min(batches), phase)
 
     cells = [(name, n, phase) for name in idxs for n in batches
              for phase in (1, 2)]
     runs: dict[tuple, list[dict]] = {}
     for rep in range(reps):
         for name, n, phase in cells:
-            r = run(name, n, phase)
-            runs.setdefault((name, n, phase), []).append(r)
-            print(json.dumps({"line": "ungated", "index": name, "batch": n,
-                              "phase": phase, "rep": rep, **r}), flush=True)
+            for arm, cap in UNGATED_ARMS.items():
+                srch._DRIVER_THETA_MAX = cap
+                r = run(name, n, phase)
+                runs.setdefault((name, n, phase, arm), []).append(r)
+                print(json.dumps({"line": "ungated", "index": name, "batch": n,
+                                  "phase": phase, "arm": arm, "rep": rep, **r}),
+                      flush=True)
 
-    for (name, n, phase), rs in runs.items():
+    for (name, n, phase, arm), rs in runs.items():
         q1, med, q3 = _quartiles([r["sec"] for r in rs])
         jobs = sorted(r["jobs"] for r in rs)[len(rs) // 2]
         s = {"line": "ungated_cell", "index": name, "batch": n,
-             "phase": phase, "reps": len(rs),
+             "phase": phase, "arm": arm, "reps": len(rs),
              "median_s": round(med, 3), "q1_s": round(q1, 3),
              "q3_s": round(q3, 3), "jobs": jobs,
              "digests": sorted({r["digest"] for r in rs})}

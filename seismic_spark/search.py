@@ -588,6 +588,21 @@ def _decode_docs(block_rows: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------- batch search ----
 
+# Two-phase dict batches of up to this many queries (and, below, at most
+# _COMPACT_TAIL_MAX_BLOCKS queries × query_cut) derive θ on the driver
+# (_driver_theta_search).  Bound: the driver holds one narrow row per
+# matched block — batch × query_cut × blocks-per-list rows of six scalars —
+# plus the surviving-keys literal it ships back.
+_DRIVER_THETA_MAX = 1024
+
+# Hard row cap on the narrow block table the driver-θ path collects: the
+# gate above bounds batch × query_cut, but blocks-per-list is
+# data-dependent (a head-term-heavy batch on a many-block index can
+# multiply it arbitrarily).  The collect is issued as limit(cap+1); hitting
+# the cap aborts to the in-plan θ derivation (result-identical), so driver
+# memory is bounded by construction: cap rows × 6 scalars ≈ 50 MB.
+_DRIVER_THETA_MAX_ROWS = 1_000_000
+
 # In-plan dict batches push the union of all query term ids into the postings
 # scan as an IN predicate (result-neutral pruning).  Above this many ids the
 # literal list itself bloats Catalyst optimization / Parquet predicate
@@ -614,13 +629,13 @@ _DEFAULT_CACHE_REGISTRY: list[DataFrame] = []
 
 def merge_sorted_terms(t, w) -> QVec:
     """THE pinned duplicate-term merge — single source of truth for the
-    in-plan / serving-replica bitwise-identity contract.
+    driver-θ / in-plan / serving-replica bitwise-identity contract.
 
     (term asc, weight asc) lexsort, then one reduceat per duplicate group:
     the summation order is a pure function of the (term, weight) multiset,
     so the merged float is reproducible regardless of input order.  Every
     caller that merges duplicate query terms MUST route through here
-    (_merge_dup_qvecs, resolve_queries, serving.ServingReplica._resolve) — a
+    (_merge_dup_qvecs, _cut_qvecs, serving.ServingReplica._resolve) — a
     divergent copy silently breaks the documented bitwise guarantees.
     """
     t = np.asarray(t, dtype=np.int64)
@@ -637,17 +652,262 @@ def merge_sorted_terms(t, w) -> QVec:
 def _merge_dup_qvecs(qvecs: dict[str, QVec]) -> dict[str, QVec]:
     """Deterministically merge duplicate term ids within each query vector.
 
-    Dict batches are normalized ONCE here, before they enter the plan, so
-    the in-plan derivation and the serving replica both see duplicate-free,
-    term-sorted queries — which is what makes their documented bitwise
-    identity hold even for queries that repeat a term: any float summation
-    the two would otherwise do independently (Python insertion-order vs
-    Spark aggregation-order) happens exactly once, over a pinned element
-    order (term id asc, then weight asc within a duplicate group) — the
-    reduceat's association is numpy's but the inputs are a pure function of
-    the multiset, so the merged float is reproducible.
+    Dict batches are normalized ONCE here, before path selection, so the
+    driver-θ path, the in-plan derivation and the serving replica all see
+    duplicate-free, term-sorted queries — which is what makes their
+    documented bitwise identity hold even for queries that repeat a term:
+    any float summation the paths would otherwise do independently (Python
+    insertion-order vs Spark aggregation-order) happens exactly once, over
+    a pinned element order (term id asc, then weight asc within a
+    duplicate group) — the reduceat's association is numpy's but the
+    inputs are a pure function of the multiset, so the merged float is
+    reproducible.
     """
     return {qid: merge_sorted_terms(t, w) for qid, (t, w) in qvecs.items()}
+
+
+def _cut_qvecs(qvecs: dict[str, QVec], query_cut: int) -> list[tuple]:
+    """Driver-side cut_terms over resolved query vectors: top-``query_cut``
+    terms per query by (weight desc, term_id asc), duplicate ids merged by
+    weight sum — value-identical to the window in :func:`cut_terms`, zero
+    Spark jobs."""
+    rows: list[tuple] = []
+    for qid, (t, w) in qvecs.items():
+        t = np.asarray(t, dtype=np.int64)
+        w = np.asarray(w, dtype=np.float64)
+        if t.size == 0:
+            continue
+        if np.unique(t).size != t.size:
+            t, w = merge_sorted_terms(t, w)
+        order = np.lexsort((t, -w))[:query_cut]
+        rows.extend(
+            (qid, int(t[i]), float(w[i])) for i in order.tolist()
+        )
+    return rows
+
+
+def _compact_rescore(
+    block_rows: DataFrame, forward: DataFrame, qdf: DataFrame, k: int
+) -> DataFrame:
+    """Low-latency rescore tail for SMALL surviving-block sets: decode and
+    dedup candidates in ONE task (replacing _decode_docs' `.distinct()`
+    shuffle with an in-partition np.unique), then broadcast the candidate
+    ids into the forward join — the forward scan stays parallel, but the
+    only exchange left in the chain is the final tiny top-k window.
+
+    Callers gate on block count (``_COMPACT_TAIL_MAX_BLOCKS``): candidates
+    are broadcast, so this path is for interactive batches where the
+    distributed tail's 5–6 AQE stage jobs are pure scheduling overhead
+    (measured ~2 s per chain at 1M docs regardless of data size).
+    """
+
+    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # one coalesced partition → a partition-wide dedup is a full dedup
+        frames = []
+        for pdf in it:
+            if pdf.empty:
+                continue
+            ids, counts = codec.delta_decode_multi(
+                [bytes(b) for b in pdf["gaps"]]
+            )
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "query_id": np.repeat(pdf["query_id"].to_numpy(), counts),
+                        "doc_id": ids.astype(np.int64),
+                    }
+                )
+            )
+        if frames:
+            yield pd.concat(frames, ignore_index=True).drop_duplicates()
+
+    cands = (
+        block_rows.select("query_id", "gaps")
+        .coalesce(1)
+        .mapInPandas(decode, "query_id STRING, doc_id BIGINT")
+        .hint("broadcast")
+    )
+    scored = exact_score(cands, forward, qdf, broadcast_queries=True)
+    return topk(scored, k)
+
+
+# Compact-tail gate: blocks hold at most a few hundred docs, so ≤4096
+# surviving blocks keeps the broadcast candidate set ≲ 1M (query, doc)
+# pairs ≈ tens of MB — comfortably under executor broadcast budgets.
+_COMPACT_TAIL_MAX_BLOCKS = 4096
+
+
+def _theta0_from_narrow(narrow: pd.DataFrame, k: int) -> dict[str, float]:
+    """Phase-0 θ per query from a collected block table: per (query, term)
+    k-th largest block-max lower bound, maxed over the query's matched terms
+    — the same f64 values the in-plan window aggregates select."""
+    neg_inf = float("-inf")
+    theta: dict[str, float] = {}
+    for (qid, _tid), grp in narrow.groupby(["query_id", "term_id"], sort=False):
+        lb = grp["lb"].to_numpy(dtype=np.float64)
+        if lb.size >= k:
+            kth = float(np.partition(lb, lb.size - k)[lb.size - k])
+            if kth > theta.get(qid, neg_inf):
+                theta[qid] = kth
+    return theta
+
+
+def _driver_theta_search(
+    spark: SparkSession,
+    postings: DataFrame,
+    forward: DataFrame,
+    qvecs: dict[str, QVec],
+    qdf: DataFrame,
+    k: int,
+    query_cut: int,
+    heap_factor: float,
+    cache_registry: list[DataFrame],
+) -> DataFrame:
+    """Two-phase interactive-batch path: θ evolves ON THE DRIVER, like the
+    reference's in-process heap (inverted_index.rs:153-234), instead of
+    inside the plan.
+
+    Why it stays for two-phase only (BENCH/BASELINE.md "Ungated leg"): the
+    in-plan two-phase chain reads θ₀ and the phase-1 best blocks off the
+    ubs frame through window and distinct exchanges (18 jobs a batch), and
+    at 50k docs it lost every interleaved pair to this path (14 jobs).
+    One-phase, the fused in-plan tail (6 jobs) was as fast or faster in
+    every cell, so one-phase batches never come here.  For a driver-side
+    dict the narrow block table (query_id, term_id, salt, block, ub, lb —
+    no gap blobs) is a few hundred rows per query at most, so the θ
+    aggregation is a numpy pass:
+
+      job 1   materialize + cache the block-UB scan, collect narrow columns
+      job 2   exact-score the best-ub block per matched list, collect the
+              per-query k-th best (phase-1 tightening,
+              posting_list.rs:149-185)
+      job 3   filter the CACHED ubs frame to the surviving block keys
+              (broadcast literal), decode, exact re-score, top-k — the gap
+              blobs never leave the executors
+
+    Float parity with the in-plan path is exact: θ is selected by
+    comparisons over the same f64 values the plan would aggregate (k-th
+    largest lb, k-th best phase-1 score), and the skip predicate
+    ``ub >= heap_factor × θ`` is evaluated in IEEE f64 either way, so the
+    survivor set — and therefore every downstream score — is bitwise
+    identical (tested: test_search_fastpath.py, test_serving.py).
+
+    DataFrame-scale query sets (κ-NN graph: millions of queries) keep the
+    in-plan windowed derivation — collecting their block table would be a
+    driver bottleneck, which is exactly why the in-plan variant exists.
+
+    Returns None when the narrow block table exceeds
+    ``_DRIVER_THETA_MAX_ROWS`` (collected via limit(cap+1), so the transfer
+    itself is bounded) — the caller then falls back to the in-plan path.
+    """
+    cut_rows = _cut_qvecs(qvecs, query_cut)
+    empty = spark.createDataFrame(
+        [], "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
+    )
+    if not cut_rows:
+        return empty
+    cterms = spark.createDataFrame(
+        cut_rows, "query_id STRING, term_id INT, qw DOUBLE"
+    )
+    # Result-neutral scan pruning: the join keeps only these term_ids anyway,
+    # but an explicit IN predicate reaches the postings SCAN — Parquet
+    # row-group stats skip non-matching groups (postings files are
+    # term-sorted, postings.py stream builder) and InMemoryTableScan skips
+    # cached batches.  Measured ~0.2-0.3 s off the UB scan at 1M docs
+    # locally; the real payoff is bucket-partitioned snapshots at scale,
+    # where it stacks with _postings_for's file-level bucket pruning.
+    term_ids = sorted({int(r[1]) for r in cut_rows})
+    if len(term_ids) <= _SCAN_PRUNE_MAX_IDS:
+        # same cap as the in-plan path: above it the literal list costs
+        # Catalyst more than the scan pruning saves (measured, see
+        # _SCAN_PRUNE_MAX_IDS)
+        postings = postings.filter(F.col("term_id").isin(term_ids))
+    matched = (
+        postings
+        .join(F.broadcast(cterms), "term_id")
+        .join(F.broadcast(qdf), "query_id")
+    )
+    retire_caches(cache_registry)
+    # gaps ride along in the ubs frame: persist it so the rescore tail
+    # filters the cached frame instead of re-running the scan
+    ubs = _block_ubs(matched).persist()
+    cache_registry.append(ubs)
+
+    # Collect with a hard row cap: the auto-gate bounds batch × query_cut,
+    # but blocks-per-list is data-dependent, so a head-term-heavy batch on a
+    # many-block index could otherwise collect an unexpectedly wide table.
+    # limit(cap+1) bounds the transfer itself; hitting the cap returns None
+    # and the caller falls back to the in-plan θ derivation.
+    narrow = (
+        ubs.select("query_id", "term_id", "salt", "block", "ub", "lb")
+        .limit(_DRIVER_THETA_MAX_ROWS + 1)
+        .toPandas()
+    )
+    if len(narrow) > _DRIVER_THETA_MAX_ROWS:
+        return None
+    if narrow.empty:
+        return empty
+
+    neg_inf = float("-inf")
+    # phase 0: per (query, term) k-th largest block-max lower bound, maxed
+    # over the query's matched terms (same value as the wt window + rank-k
+    # filter — the k-th largest VALUE is order-independent)
+    theta = _theta0_from_narrow(narrow, k)
+
+    # phase 1: exact-score the best-ub block of every matched list (the
+    # caller's gate keeps their count under the compact-tail bound)
+    best = (
+        narrow.sort_values(
+            ["query_id", "term_id", "ub", "salt", "block"],
+            ascending=[True, True, False, True, True],
+            kind="stable",
+        )
+        .groupby(["query_id", "term_id"], sort=False)
+        .head(1)[["query_id", "term_id", "salt", "block"]]
+    )
+    best_df = spark.createDataFrame(
+        best, "query_id STRING, term_id INT, salt INT, block INT"
+    )
+    best_blocks = ubs.join(
+        F.broadcast(best_df), ["query_id", "term_id", "salt", "block"]
+    )
+    for r in (
+        _compact_rescore(best_blocks, forward, qdf, k)
+        .filter(F.col("rank") == k)
+        .select("query_id", "score")
+        .collect()
+    ):
+        if r["score"] > theta.get(r["query_id"], neg_inf):
+            theta[r["query_id"]] = r["score"]
+
+    if theta:
+        th = narrow["query_id"].map(theta).to_numpy(dtype=np.float64)
+        has = ~np.isnan(th)
+        keep = np.ones(len(narrow), dtype=bool)
+        # identical IEEE f64 predicate to the in-plan filter
+        keep[has] = narrow["ub"].to_numpy(dtype=np.float64)[has] >= (
+            heap_factor * th[has]
+        )
+    else:
+        keep = np.ones(len(narrow), dtype=bool)
+
+    if keep.all():
+        survivors = ubs
+    else:
+        keys = narrow.loc[keep, ["query_id", "term_id", "salt", "block"]]
+        survivors = ubs.join(
+            F.broadcast(
+                spark.createDataFrame(
+                    keys, "query_id STRING, term_id INT, salt INT, block INT"
+                )
+            ),
+            ["query_id", "term_id", "salt", "block"],
+        )
+    if int(keep.sum()) <= _COMPACT_TAIL_MAX_BLOCKS:
+        return _compact_rescore(survivors, forward, qdf, k)
+    cands = _decode_docs(survivors)
+    scored = exact_score(cands, forward, qdf, broadcast_queries=True)
+    return topk(scored, k)
 
 
 def retire_caches(cache_registry: list[DataFrame]) -> None:
@@ -696,29 +956,54 @@ def batch_search(
     call retire the previous call's cache instead of accumulating persisted
     RDDs until LRU/disk pressure.
 
-    Every query shape takes this one in-plan chain: θ is derived inside
-    the plan (:func:`_fused_candidates` one-phase, :func:`_theta_survivors`
-    two-phase), never round-tripped through the driver.  An interleaved
-    A/B against a driver-side θ heap found the in-plan chain faster
-    one-phase and level two-phase (BENCH/BASELINE.md, "Ungated leg").
+    θ is derived inside the plan (:func:`_fused_candidates` one-phase,
+    :func:`_theta_survivors` two-phase), except for two-phase dict batches
+    of at most ``_DRIVER_THETA_MAX`` queries and ``_COMPACT_TAIL_MAX_BLOCKS``
+    queries × query_cut, which derive it on the driver
+    (:func:`_driver_theta_search`, result-identical).  The ungated leg's
+    interleaved A/B picked that split: in-plan was as fast or faster in
+    every one-phase cell, driver-θ won every two-phase pair at 50k docs
+    (BENCH/BASELINE.md, "Ungated leg").
     """
     if not isinstance(queries, DataFrame):
-        # normalize duplicate term ids ONCE, deterministically — the merged
-        # floats are then the ones the serving replica computes (the
-        # documented in-plan/replica bitwise identity)
+        # normalize duplicate term ids ONCE, deterministically, before path
+        # selection — both θ paths and the serving replica then see
+        # identical duplicate-free floats (their bitwise identity)
         queries = _merge_dup_qvecs(queries)
     if cache_registry is None:
         cache_registry = _DEFAULT_CACHE_REGISTRY
     qdf, small = _as_queries_df(spark, queries)
     if broadcast_queries is None:
         broadcast_queries = small
+    # Engage only where the compact rescore tail can engage too: phase 1
+    # decodes one block per matched list, and the batch has at most
+    # len(queries) × query_cut lists.  Above the compact-tail bound the
+    # driver-θ path degenerates to the same distributed chains as the
+    # in-plan derivation PLUS serial job barriers — measured SLOWER at
+    # batch 1000 × cut 10 in a same-window interleaved ABAB (1M docs,
+    # BENCH/BASELINE.md).
+    if (
+        two_phase
+        and small
+        and 0 < len(queries) <= _DRIVER_THETA_MAX
+        and len(queries) * query_cut <= _COMPACT_TAIL_MAX_BLOCKS
+    ):
+        res = _driver_theta_search(
+            spark, postings, forward, queries, qdf, k, query_cut,
+            heap_factor, cache_registry,
+        )
+        if res is not None:
+            return res
+        # block-table row cap hit: the in-plan two-phase tail below retires
+        # the abandoned persisted ubs before it persists its own
     qdf = qdf.filter(F.size("q_terms") > 0)
     if small:
-        # Dict batches know their term union on the driver; an IN predicate
-        # on the SUPERSET of all query terms is result-neutral (the
-        # cut-terms join restricts further) and reaches the postings scan
-        # for row-group / cached-batch / bucket-file pruning.  Above the
-        # cap the literal list costs Catalyst more than the pruning saves.
+        # Dict batches routed in-plan still know their term union on the
+        # driver; an IN predicate on the SUPERSET of all query terms is
+        # result-neutral (the cut-terms join restricts further) and reaches
+        # the postings scan for row-group / cached-batch / bucket-file
+        # pruning, same as the driver-θ path's filter.  Above the cap the
+        # literal list costs Catalyst more than the pruning saves — skip.
         all_ids = sorted({int(t) for ts, _ in queries.values() for t in ts})
         if all_ids and len(all_ids) <= _SCAN_PRUNE_MAX_IDS:
             postings = postings.filter(F.col("term_id").isin(all_ids))

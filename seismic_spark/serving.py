@@ -17,7 +17,7 @@ cannot reach.  The float parity is not best-effort: every upper bound and
 every exact score is a `codec.segment_sums` (np.add.reduceat) over the same
 f64 contribution arrays the executors build (search.py `_block_ubs` /
 `exact_score`), θ is selected by comparisons over the same values the
-in-plan θ derivation aggregates, and the skip predicate `ub >= heap_factor·θ`
+driver-θ fast path collects, and the skip predicate `ub >= heap_factor·θ`
 is the same IEEE f64 comparison — so the survivor set, candidate set, and
 every score agree bitwise (pinned by tests/test_serving.py at exact AND
 approximate configs, including post-save/load hydration).
@@ -524,7 +524,7 @@ class ServingReplica:
     ) -> pd.DataFrame:
         """(query_id, rank, doc_id, score) — bit-identical to the Spark
         formulations of `search.batch_search` on the hydrated index (same θ
-        derivation as search's in-plan chain, same skip predicate,
+        derivation as search._driver_theta_search, same skip predicate,
         same rescore floats, same (score desc, doc_id asc) tie order).
         Size-gated `SeismicSparkIndex.batch_search` answers through here."""
         if two_phase is None:

@@ -119,10 +119,11 @@ def small_idx(spark):
     )
 
 
-def test_duplicate_term_query_bitwise_identity(spark, small_idx):
+def test_duplicate_term_query_bitwise_identity(spark, small_idx,
+                                              monkeypatch):
     """A query repeating a term 3+ times merges ONCE (pinned order) before
-    it enters the plan — in-plan and serving-replica scores compare with
-    ==."""
+    path selection — driver-θ, in-plan and serving-replica scores compare
+    with ==."""
     tok_of = {r["term_id"]: r["term"] for r in small_idx.vocab.limit(4).collect()}
     t0, t1 = sorted(tok_of)[:2]
     tok0, tok1 = tok_of[t0], tok_of[t1]
@@ -133,17 +134,21 @@ def test_duplicate_term_query_bitwise_identity(spark, small_idx):
         )
     }
     kw = dict(k=10, query_cut=5, heap_factor=0.8, two_phase=True)
-    plan = srch.batch_search(
-        spark, small_idx.postings, small_idx.forward, qvecs, **kw
-    ).collect()
-    rep = small_idx.serving_replica().batch_search(
-        [("qdup", [tok0, tok1, tok0, tok0], [0.3, 1.0, 0.1, 0.2])], **kw
-    )
     key = lambda rows: sorted(
         (r.query_id, int(r.rank), int(r.doc_id), float(r.score)) for r in rows
     )
-    assert key(plan) == key(rep.itertuples(index=False))
-    assert len(plan) > 0
+    fast = key(srch.batch_search(
+        spark, small_idx.postings, small_idx.forward, qvecs, **kw
+    ).collect())
+    monkeypatch.setattr(srch, "_DRIVER_THETA_MAX", 0)  # in-plan θ
+    plan = key(srch.batch_search(
+        spark, small_idx.postings, small_idx.forward, qvecs, **kw
+    ).collect())
+    rep = small_idx.serving_replica().batch_search(
+        [("qdup", [tok0, tok1, tok0, tok0], [0.3, 1.0, 0.1, 0.2])], **kw
+    )
+    assert fast == plan == key(rep.itertuples(index=False))
+    assert len(fast) > 0
 
 
 def test_merge_dup_qvecs_deterministic_order():
@@ -162,6 +167,38 @@ def test_merge_dup_qvecs_deterministic_order():
     # order feeds one reduceat — deterministic, association unspecified)
     assert outs[0] == outs[1] == outs[2]
     assert outs[0] == pytest.approx(0.6)
+
+
+# ------------------------------------------------------ fast-path row cap --
+
+
+def test_fast_path_row_cap_falls_back(spark, small_idx, monkeypatch):
+    queries = synth_queries(400, n_queries=4, seed=3)
+    qvecs = srch.resolve_queries(spark, queries, small_idx.vocab)
+    kw = dict(k=10, query_cut=8, heap_factor=0.8, two_phase=True)
+    with monkeypatch.context() as m:
+        m.setattr(srch, "_DRIVER_THETA_MAX", 0)  # in-plan θ
+        ref = srch.batch_search(
+            spark, small_idx.postings, small_idx.forward, qvecs, **kw
+        ).collect()
+    monkeypatch.setattr(srch, "_DRIVER_THETA_MAX_ROWS", 2)
+    # the driver-θ path itself must signal abort ...
+    qdf = srch.queries_df_from_qvecs(spark, qvecs)
+    registry = []
+    assert (
+        srch._driver_theta_search(
+            spark, small_idx.postings, small_idx.forward, qvecs, qdf,
+            10, 8, 0.8, registry,
+        )
+        is None
+    )
+    srch.retire_caches(registry)
+    # ... and batch_search must transparently serve the in-plan result
+    got = srch.batch_search(
+        spark, small_idx.postings, small_idx.forward, qvecs, **kw
+    ).collect()
+    key = lambda rows: sorted((r.query_id, r.rank, r.doc_id, r.score) for r in rows)
+    assert key(got) == key(ref)
 
 
 # -------------------------------------------------- default cache registry --

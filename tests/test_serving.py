@@ -80,7 +80,8 @@ def _spark_rows(spark, idx, queries, k=10, query_cut=10, heap_factor=1.0,
                      block_b0=2, block_cap=4, blocks_per_row=2), 0.8, 8, None),
     ],
 )
-def test_replica_bitwise_identical_to_engine(spark, corpus, cfg, hf, qc, tp):
+def test_replica_bitwise_identical_to_engine(spark, monkeypatch, corpus, cfg,
+                                             hf, qc, tp):
     queries = synth_queries(600, n_queries=10, seed=3)
     idx = SeismicSparkIndex.build(spark, corpus, cfg)
     got = _rows(
@@ -89,9 +90,12 @@ def test_replica_bitwise_identical_to_engine(spark, corpus, cfg, hf, qc, tp):
         )
     )
     assert got  # the pin compares real answers
-    engine = _spark_rows(spark, idx, queries, query_cut=qc, heap_factor=hf,
-                         two_phase=tp)
-    assert got == engine  # exact float equality, not approx
+    # default (driver-θ for two-phase batches), then in-plan θ
+    for cap in (srch._DRIVER_THETA_MAX, 0):
+        monkeypatch.setattr(srch, "_DRIVER_THETA_MAX", cap)
+        engine = _spark_rows(spark, idx, queries, query_cut=qc,
+                             heap_factor=hf, two_phase=tp)
+        assert got == engine  # exact float equality, not approx
     # the gated index answers from that replica, through Spark and back
     assert _rows(
         idx.batch_search(queries, k=10, query_cut=qc, heap_factor=hf,
@@ -120,7 +124,7 @@ def test_replica_bruteforce_bitwise_identical_to_crossjoin(spark, corpus):
     assert got == _rows(idx.serving_replica().bruteforce(queries, k=50))
 
 
-def test_replica_from_saved_index(spark, corpus, tmp_path):
+def test_replica_from_saved_index(spark, monkeypatch, corpus, tmp_path):
     cfg = IndexConfig(n_postings=30, summary_energy=0.7, blocking="geometric")
     queries = synth_queries(600, n_queries=6, seed=9)
     idx = SeismicSparkIndex.build(spark, corpus, cfg)
@@ -130,7 +134,9 @@ def test_replica_from_saved_index(spark, corpus, tmp_path):
         loaded.serving_replica().batch_search(queries, k=10, heap_factor=0.8)
     )
     assert got
-    assert got == _spark_rows(spark, loaded, queries, heap_factor=0.8)
+    for cap in (srch._DRIVER_THETA_MAX, 0):  # driver-θ, then in-plan θ
+        monkeypatch.setattr(srch, "_DRIVER_THETA_MAX", cap)
+        assert got == _spark_rows(spark, loaded, queries, heap_factor=0.8)
 
 
 def test_replica_budget_gate(spark, corpus):
