@@ -124,7 +124,9 @@ def test_duplicate_term_query_bitwise_identity(spark, small_idx,
     """A query repeating a term 3+ times merges ONCE (pinned order) before
     path selection — driver-θ, in-plan and serving-replica scores compare
     with ==."""
-    tok_of = {r["term_id"]: r["term"] for r in small_idx.vocab.limit(4).collect()}
+    tok_of = {
+        r["term_id"]: r["term"] for r in small_idx.vocab.limit(4).collect()
+    }
     t0, t1 = sorted(tok_of)[:2]
     tok0, tok1 = tok_of[t0], tok_of[t1]
     qvecs = {
