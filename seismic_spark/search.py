@@ -770,7 +770,7 @@ def _driver_theta_search(
     Why it stays for two-phase only (BENCH/BASELINE.md "Ungated leg"): the
     in-plan two-phase chain reads θ₀ and the phase-1 best blocks off the
     ubs frame through window and distinct exchanges (18 jobs a batch), and
-    at 50k docs it lost every interleaved pair to this path (14 jobs).
+    at 50k docs it lost 47 of 48 interleaved pairs to this path (14 jobs).
     One-phase, the fused in-plan tail (6 jobs) was as fast or faster in
     every cell, so one-phase batches never come here.  For a driver-side
     dict the narrow block table (query_id, term_id, salt, block, ub, lb —
@@ -962,7 +962,7 @@ def batch_search(
     queries × query_cut, which derive it on the driver
     (:func:`_driver_theta_search`, result-identical).  The ungated leg's
     interleaved A/B picked that split: in-plan was as fast or faster in
-    every one-phase cell, driver-θ won every two-phase pair at 50k docs
+    every one-phase cell, driver-θ won 47 of 48 two-phase pairs at 50k docs
     (BENCH/BASELINE.md, "Ungated leg").
     """
     if not isinstance(queries, DataFrame):
