@@ -9,7 +9,8 @@ Usage:
     python bench_extra.py [line ...]        # default: all lines
     SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py
     --explain-dir plans/r06 --tag before    # write <line>_<tag>.txt plans
-    python bench_extra.py ungated [--reps 4]  # Spark paths, in-process gate off
+    python bench_extra.py ungated [--reps 4] [--index DIR]
+                                            # Spark path, in-process gate off
 
 Prints one JSON line per timed line: {"line": ..., "sec": ..., "jobs": N}.
 """
@@ -54,29 +55,23 @@ def _quartiles(xs: list[float]) -> tuple[float, float, float]:
     return float(q1), float(med), float(q3)
 
 
-# θ arms of the ungated leg: search._DRIVER_THETA_MAX per arm, toggled on
-# the module between runs ("driver_theta": the shipped routing, where
-# two-phase dict batches derive θ on the driver; "inplan": 0 sends every
-# batch to the in-plan derivation, so one-phase cells are an A/A pair)
-UNGATED_ARMS = {"driver_theta": 1024, "inplan": 0}
+def ungated(spark, docs, reps: int, index_dir: str | None = None,
+            batches=(10, 100, 400)) -> None:
+    """The Spark search formulation with the in-process gate forced off.
 
-
-def ungated(spark, docs, reps: int, batches=(10, 100, 400)) -> None:
-    """The Spark search formulations with the in-process gate forced off.
-
-    Builds the bench's unpruned (hf 1.0) and pruned kmeans e0.5 (hf 0.9)
-    indexes and times ``idx.batch_search(...).collect()`` on
-    ``bench_queries(n)`` for every batch size, one- and two-phase, k 10,
-    cut 10.  Reps and arms interleave inside each cell (ABAB), so host
-    drift hits every arm alike.  Prints one JSON line per run and one
-    summary line per cell and arm (median and quartiles of the seconds,
-    median jobs, and the digests of the answers, one when every run
-    returned the same rows)."""
+    Times ``idx.batch_search(...).collect()`` on ``bench_queries(n)`` for
+    the bench's unpruned (hf 1.0) and pruned kmeans e0.5 (hf 0.9) indexes,
+    every batch size, one- and two-phase, k 10, cut 10; cells interleave
+    inside every rep.  With ``index_dir`` the two indexes are loaded from
+    ``<index_dir>/{unpruned,pruned}``, built and saved there on the first
+    run — so runs of two commits, in alternating processes, search the
+    same snapshots.  Prints one JSON line per run and one summary line per
+    cell (median and quartiles of the seconds, median jobs, and the
+    digests of the answers, one when every run returned the same rows)."""
     import hashlib
 
     import seismic_spark.index as index_mod
     from bench import bench_queries
-    from seismic_spark import search as srch
     from seismic_spark.index import SeismicSparkIndex
     from seismic_spark.postings import IndexConfig
 
@@ -92,10 +87,16 @@ def ungated(spark, docs, reps: int, batches=(10, 100, 400)) -> None:
     }
     idxs = {}
     for name, (cfg, _hf) in configs.items():
+        path = os.path.join(index_dir, name) if index_dir else None
         t0 = time.time()
-        idxs[name] = SeismicSparkIndex.build(spark, docs, cfg)
-        idxs[name].postings.count()
-        print(json.dumps({"line": "ungated_build", "index": name,
+        if path and os.path.exists(os.path.join(path, "meta.json")):
+            how, idxs[name] = "load", SeismicSparkIndex.load(spark, path)
+        else:
+            how, idxs[name] = "build", SeismicSparkIndex.build(spark, docs, cfg)
+            idxs[name].postings.count()
+            if path:
+                idxs[name].save(path)
+        print(json.dumps({"line": f"ungated_{how}", "index": name,
                           "sec": round(time.time() - t0, 3)}), flush=True)
     terms = [r["term"] for r in idxs["unpruned"].vocab.select("term").collect()]
     qsets = {n: bench_queries(terms, n=n) for n in batches}
@@ -113,32 +114,26 @@ def ungated(spark, docs, reps: int, batches=(10, 100, 400)) -> None:
         digest = hashlib.sha1(repr(key).encode()).hexdigest()[:12]
         return {"sec": round(dt, 3), "jobs": jc.jobs, "digest": digest}
 
-    for cap in UNGATED_ARMS.values():  # untimed warm-up, per arm
-        srch._DRIVER_THETA_MAX = cap
-        for name in idxs:
-            for phase in (1, 2):
-                run(name, min(batches), phase)
+    for name in idxs:  # untimed warm-up
+        for phase in (1, 2):
+            run(name, min(batches), phase)
 
     cells = [(name, n, phase) for name in idxs for n in batches
              for phase in (1, 2)]
     runs: dict[tuple, list[dict]] = {}
     for rep in range(reps):
         for name, n, phase in cells:
-            for arm, cap in UNGATED_ARMS.items():
-                srch._DRIVER_THETA_MAX = cap
-                r = run(name, n, phase)
-                runs.setdefault((name, n, phase, arm), []).append(r)
-                print(json.dumps({"line": "ungated", "index": name, "batch": n,
-                                  "phase": phase, "arm": arm, "rep": rep, **r}),
-                      flush=True)
+            r = run(name, n, phase)
+            runs.setdefault((name, n, phase), []).append(r)
+            print(json.dumps({"line": "ungated", "index": name, "batch": n,
+                              "phase": phase, "rep": rep, **r}), flush=True)
 
-    for (name, n, phase, arm), rs in runs.items():
+    for (name, n, phase), rs in runs.items():
         q1, med, q3 = _quartiles([r["sec"] for r in rs])
         jobs = sorted(r["jobs"] for r in rs)[len(rs) // 2]
         s = {"line": "ungated_cell", "index": name, "batch": n,
-             "phase": phase, "arm": arm, "reps": len(rs),
-             "median_s": round(med, 3), "q1_s": round(q1, 3),
-             "q3_s": round(q3, 3), "jobs": jobs,
+             "phase": phase, "reps": len(rs), "median_s": round(med, 3),
+             "q1_s": round(q1, 3), "q3_s": round(q3, 3), "jobs": jobs,
              "digests": sorted({r["digest"] for r in rs})}
         print(json.dumps(s), flush=True)
 
@@ -149,6 +144,7 @@ def main() -> None:
     explain_dir = None
     tag = "before"
     reps = 4
+    index_dir = None
     args = []
     skip = False
     for i, a in enumerate(sys.argv[1:], 1):
@@ -163,6 +159,9 @@ def main() -> None:
             skip = True
         elif a == "--reps":
             reps = int(sys.argv[i + 1])
+            skip = True
+        elif a == "--index":
+            index_dir = sys.argv[i + 1]
             skip = True
         else:
             args.append(a)
@@ -207,7 +206,7 @@ def main() -> None:
     # ---- ungated: the Spark formulations, in-process gate off ---------------
     # (its own line only: it lowers the gate for the rest of the process)
     if lines is not None and "ungated" in lines:
-        ungated(spark, docs, reps)
+        ungated(spark, docs, reps, index_dir)
         spark.stop()
         return
 

@@ -128,10 +128,6 @@ class SeismicSparkIndex:
         # (doc_id, content) ride-along — the reference's document_content
         # store (inverted_index_wrapper.rs:93-107, load_content=True default)
         self.content: DataFrame | None = None
-        # per-INSTANCE ubs cache lifecycle (search.retire_caches): a new
-        # search on this index retires this index's previous ubs cache only,
-        # so interleaved searches on two indexes never thrash each other
-        self._ubs_caches: list[DataFrame] = []
         # per-INSTANCE vocab cache (search.resolve_queries): the driver-side
         # {term: term_id} map, collected once for the queries Spark answers
         self._vocab_cache: dict = {}
@@ -534,7 +530,6 @@ class SeismicSparkIndex:
                 query_cut=query_cut,
                 heap_factor=heap_factor,
                 two_phase=two_phase,
-                cache_registry=self._ubs_caches,
             )
         if n_knn <= 0:
             return base

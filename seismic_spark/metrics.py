@@ -4,31 +4,37 @@ The reference's primary quality metric is Accuracy@k — the overlap of the
 engine's top-k with the exact brute-force top-k, averaged over queries
 (scripts/run_experiments.py:287-309, scripts/recall.py:17-33).  This module
 re-exposes it for the Spark engine, together with the block skip-rate
-instrumentation (search.search_stats) that quantifies what dynamic pruning
-actually buys at a given (heap_factor, query_cut, config).
+counters (serving.ServingReplica.search_stats) that quantify what dynamic
+pruning actually buys at a given (heap_factor, query_cut, config).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from seismic_spark import search as srch
 
-
-def accuracy_at_k(got: DataFrame, exact: DataFrame, k: int) -> float:
+def accuracy_at_k(got, exact, k: int) -> float:
     """|got top-k ∩ exact top-k| / (n_queries · k) — run_experiments.py:287-309.
 
     Queries with fewer than k exact results contribute their exact count to
     the denominator (same as the reference: denominator is total exact
-    result pairs, capped at k per query).
+    result pairs, capped at k per query).  ``got`` and ``exact`` are both
+    Spark DataFrames or both pandas frames (the serving replica's answers).
     """
-    g = got.filter(F.col("rank") <= k).select("query_id", "doc_id")
-    e = exact.filter(F.col("rank") <= k).select("query_id", "doc_id")
-    n_exact = e.count()
+    if isinstance(got, pd.DataFrame):
+        g = got.loc[got["rank"] <= k, ["query_id", "doc_id"]]
+        e = exact.loc[exact["rank"] <= k, ["query_id", "doc_id"]]
+        n_exact = len(e)
+        n_hit = len(g.merge(e, on=["query_id", "doc_id"]))
+    else:
+        g = got.filter(F.col("rank") <= k).select("query_id", "doc_id")
+        e = exact.filter(F.col("rank") <= k).select("query_id", "doc_id")
+        n_exact = e.count()
+        n_hit = g.join(e, ["query_id", "doc_id"]).count() if n_exact else 0
     if n_exact == 0:
         return 1.0
-    n_hit = g.join(e, ["query_id", "doc_id"]).count()
     return round(n_hit / n_exact, 4)
 
 
@@ -103,26 +109,21 @@ def recall_grid(
     """Accuracy@k + skip-rate for a heap_factor sweep against the exact
     brute-force ground truth — the Guidelines.md:41-70 tuning table analogue.
 
+    Answers, ground truth and pruning counters all come from the index's
+    serving replica (``batch_search``, ``bruteforce``, ``search_stats``),
+    whose answers are bitwise those of the Spark formulations.
+
     Returns one dict per heap_factor:
       {hf, accuracy, blocks_matched, blocks_scanned, skip_rate, candidates}
     """
-    qvecs = srch.resolve_queries(
-        index.spark, queries, index.vocab, cache=index._vocab_cache
-    )
-    exact = srch.bruteforce_search(index.spark, index.forward, qvecs, k).persist()
-    exact.count()
+    rep = index.serving_replica()
+    exact = rep.bruteforce(queries, k)
     rows = []
     for hf in heap_factors:
-        got = srch.batch_search(
-            index.spark, index.postings, index.forward, qvecs,
-            k=k, query_cut=query_cut, heap_factor=hf, two_phase=two_phase,
-        )
-        stats = srch.search_stats(
-            index.spark, index.postings, index.forward, qvecs,
-            k=k, query_cut=query_cut, heap_factor=hf, two_phase=two_phase,
-        )
+        kw = dict(k=k, query_cut=query_cut, heap_factor=hf, two_phase=two_phase)
+        got = rep.batch_search(queries, **kw)
         rows.append(
-            {"hf": hf, "accuracy": accuracy_at_k(got, exact, k), **stats}
+            {"hf": hf, "accuracy": accuracy_at_k(got, exact, k),
+             **rep.search_stats(queries, **kw)}
         )
-    exact.unpersist()
     return rows

@@ -17,16 +17,20 @@ ONE Spark job:
   witnessed by k distinct docs → it lower-bounds the final k-th best score.
   θ_q = max over matched terms of that per-term k-th largest.
 
-  Phase-1 tightening (``two_phase=True`` — the first_sorted analogue,
-  posting_list.rs:149-185): exactly score the single best-ub block of every
-  matched list (a bounded candidate set), take the per-query k-th best exact
-  score θ', and use θ_q ← max(θ_q, θ').  Like the reference's evolving heap
-  after the first sorted list, this tightens θ before the main scan — still
-  one logical plan, no driver action.
-
   Blocks with ``summary_ub < heap_factor × θ_q`` are skipped; survivors are
   decoded, deduped across lists (the reference's `visited` set), exactly
   re-scored against full doc vectors, and top-k'ed per query.
+
+  Phase-1 tightening (``two_phase=True`` — the first_sorted analogue,
+  posting_list.rs:149-185): θ₂ = the k-th best exact score among the docs
+  of every matched list's best-ub block, and θ_q ← max(θ_q, θ₂).  Because
+  the tighter θ only removes blocks from the phase-0 kept set, the same
+  pass decodes the phase-0 survivors plus the best blocks, tags each
+  (query, doc) with the largest ub of its decoded blocks (``dub``) and
+  whether it lies in a best block (``p1``), and the ONE exact-score pass
+  serves both: θ₂ is read off the scored p1 rows per query, and a doc
+  survives iff ``dub >= heap_factor × θ_q`` — still one logical plan, no
+  driver action, no second scan.
 
 With upper-bound summaries (summary_energy=1.0, quant_ceil) and
 heap_factor=1.0 this is EXACT w.r.t. scanning the cut-term posting lists.
@@ -58,6 +62,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType, LongType, StringType, StructField, StructType,
+)
 
 from seismic_spark import codec
 
@@ -286,7 +293,8 @@ def exact_score(
 
     cands(query_id, doc_id) ⋈ forward ⋈ queries → one vectorized CSR pass
     per Arrow batch (combined-key searchsorted + per-doc segment sums — Q5
-    analogue).  Returns (query_id, doc_id, score DOUBLE).  Scores are
+    analogue).  Returns (query_id, doc_id, score DOUBLE), followed by any
+    other columns of ``cands``, passed through.  Scores are
     bitwise-reproducible across partitionings (segment_sums is a pure
     function of the doc's own contribution array).
     """
@@ -294,10 +302,12 @@ def exact_score(
     if broadcast_queries is None:
         broadcast_queries = small
     qj = F.broadcast(qdf) if broadcast_queries else qdf
+    extra = [f for f in cands.schema.fields if f.name not in ("query_id", id_col)]
     joined = (
         cands.join(forward, id_col)
         .join(qj, "query_id")
-        .select("query_id", id_col, "terms", "weights", "q_terms", "q_weights")
+        .select("query_id", id_col, "terms", "weights", "q_terms", "q_weights",
+                *[f.name for f in extra])
     )
 
     import pyarrow as pa
@@ -335,13 +345,18 @@ def exact_score(
                     cols["query_id"],
                     pc.cast(cols[id_col], pa.int64()),
                     pa.array(scores),
+                    *[cols[f.name] for f in extra],
                 ],
-                ["query_id", "doc_id", "score"],
+                ["query_id", "doc_id", "score", *[f.name for f in extra]],
             )
 
-    return joined.mapInArrow(
-        score_batches, "query_id STRING, doc_id BIGINT, score DOUBLE"
-    )
+    schema = StructType([
+        StructField("query_id", StringType()),
+        StructField("doc_id", LongType()),
+        StructField("score", DoubleType()),
+        *extra,
+    ])
+    return joined.mapInArrow(score_batches, schema)
 
 
 def topk(scored: DataFrame, k: int) -> DataFrame:
@@ -452,30 +467,29 @@ def _block_ubs(postings_matched: DataFrame) -> DataFrame:
     return cols_df.mapInArrow(scan, out_schema)
 
 
-def _fused_candidates(ubs: DataFrame, k: int, heap_factor: float) -> DataFrame:
+def _fused_candidates(
+    ubs: DataFrame, k: int, heap_factor: float, two_phase: bool
+) -> DataFrame:
     """θ derivation + skip filter + gap decode + cross-list dedup in ONE
-    streamed operator — the two_phase=False tail of the in-plan path.
+    streamed operator over query-co-located block rows.
 
-    Replaces the window-based `_theta_survivors` → `_decode_docs` →
-    `.distinct()` chain (3 exchanges, two of them sorting the gap-blob-laden
-    ubs rows) with a single repartition("query_id") — guide §2.4 (remove
-    shuffles outright) + §2.3 (don't move heavy payloads through exchanges
-    they don't need): the gap blobs cross exactly one exchange, and the θ
-    aggregation/filter/decode/dedup all happen in one vectorized pass over
-    each query's co-located block rows.
+    One repartition("query_id") is the only exchange the gap blobs cross
+    (guide §2.4 + §2.3); the θ aggregation, filter, decode and dedup all
+    happen in one vectorized pass over each query's rows.
 
-    Value-parity with the windowed derivation (and the serving replica):
-    θ_q = max over matched terms of the k-th largest per-(query, term) lb —
+    θ₀ = max over matched terms of the k-th largest per-(query, term) lb —
     the k-th largest VALUE is tie-order independent, so np.lexsort + segment
-    ranks select exactly the lb the `wt` window's row_number()==k row held;
-    the skip predicate ``ub >= heap_factor × θ`` is the same IEEE-f64
-    comparison, so the surviving block set — and every downstream score — is
-    bitwise identical (test_parity_r4/r5 and test_serving pin this).
+    ranks select exactly the lb the replica's np.partition selects, and the
+    skip predicate ``ub >= heap_factor × θ₀`` is the same IEEE-f64
+    comparison.  Queries with NO term reaching k blocks keep all their
+    blocks (θ₀ = −∞).  Dedup is per query group, which is a full dedup
+    because one query's rows are fully co-located.
 
-    Queries with NO term reaching k blocks keep all their blocks (the
-    windowed path's `theta IS NULL` arm).  Dedup is per query group, which
-    equals the old global `.distinct()` because one query's rows are fully
-    co-located.
+    ``two_phase`` also decodes the best-ub block of each (query, term) —
+    tie order (ub desc, salt asc, block asc), the replica's first argmax —
+    and emits, per (query, doc), ``theta0``, ``dub`` (the largest ub of the
+    doc's decoded blocks) and ``p1`` (whether one of them is a best block),
+    for :func:`_phase1_filter` after the exact-score pass.
     """
     hf = float(heap_factor)
 
@@ -509,6 +523,19 @@ def _fused_candidates(ubs: DataFrame, k: int, heap_factor: float) -> DataFrame:
         keep = np.ones(len(pdf), dtype=bool)
         hasrow = theta[q_of] > -np.inf
         keep[hasrow] = ub[hasrow] >= hf * theta[q_of][hasrow]
+        if two_phase:
+            # best-ub block per (query, term): (ub desc, salt asc, block asc)
+            ob = np.lexsort((
+                pdf["block"].to_numpy(dtype=np.int64),
+                pdf["salt"].to_numpy(dtype=np.int64),
+                -ub, term, q_of,
+            ))
+            qb, tb = q_of[ob], term[ob]
+            best = np.zeros(len(pdf), dtype=bool)
+            best[ob[np.concatenate(
+                ([True], (qb[1:] != qb[:-1]) | (tb[1:] != tb[:-1]))
+            )]] = True
+            keep |= best
 
         gaps_col = pdf["gaps"].to_numpy()
         kept_idx = np.flatnonzero(keep)
@@ -521,12 +548,19 @@ def _fused_candidates(ubs: DataFrame, k: int, heap_factor: float) -> DataFrame:
         ids = ids.astype(np.int64)
         order2 = np.lexsort((ids, qrep))
         qs_, ds_ = qrep[order2], ids[order2]
-        mask = np.concatenate(
+        starts = np.flatnonzero(np.concatenate(
             ([True], (qs_[1:] != qs_[:-1]) | (ds_[1:] != ds_[:-1]))
-        )
-        return pd.DataFrame(
-            {"query_id": qids[g_starts][qs_[mask]], "doc_id": ds_[mask]}
-        )
+        ))
+        out = {"query_id": qids[g_starts][qs_[starts]], "doc_id": ds_[starts]}
+        if two_phase:
+            out["theta0"] = theta[qs_[starts]]
+            out["dub"] = np.maximum.reduceat(
+                np.repeat(ub[kept_idx], counts)[order2], starts
+            )
+            out["p1"] = np.logical_or.reduceat(
+                np.repeat(best[kept_idx], counts)[order2], starts
+            )
+        return pd.DataFrame(out)
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
@@ -550,19 +584,55 @@ def _fused_candidates(ubs: DataFrame, k: int, heap_factor: float) -> DataFrame:
                 yield out
 
     parted = (
-        ubs.select("query_id", "term_id", "ub", "lb", "gaps")
+        ubs.select("query_id", "term_id", "salt", "block", "ub", "lb", "gaps")
         .repartition("query_id")
         .sortWithinPartitions("query_id")
     )
-    return parted.mapInPandas(gen, "query_id STRING, doc_id BIGINT")
+    schema = "query_id STRING, doc_id BIGINT"
+    if two_phase:
+        schema += ", theta0 DOUBLE, dub DOUBLE, p1 BOOLEAN"
+    return parted.mapInPandas(gen, schema)
+
+
+def _phase1_filter(scored: DataFrame, k: int, heap_factor: float) -> DataFrame:
+    """Two-phase survivor filter over exactly scored (query, doc) rows that
+    carry ``theta0``/``dub``/``p1`` (:func:`_fused_candidates`).
+
+    θ₂ = the k-th best score among the query's ``p1`` rows (when it has at
+    least k), θ = max(θ₀, θ₂), and a doc survives iff θ = −∞ or
+    ``dub >= heap_factor × θ``.  That is exactly the block skip at θ: since
+    θ ≥ θ₀ and hf ≥ 0, every block with ``ub >= hf·θ`` was decoded, so a doc
+    lies in such a block iff the largest ub of its decoded blocks passes.
+    The windows share :func:`topk`'s partitioning and order, so no exchange
+    is added.
+    """
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("doc_id").asc()
+    )
+    n_p1 = F.sum(F.col("p1").cast("int")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    theta2 = F.max(F.when(F.col("p1") & (F.col("_n") == k), F.col("score"))).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    neg_inf = F.lit(float("-inf"))
+    theta = F.greatest(F.col("theta0"), F.coalesce(theta2, neg_inf))
+    return (
+        scored.withColumn("_n", n_p1)
+        .withColumn("_theta", theta)
+        .filter(
+            (F.col("_theta") == neg_inf)
+            | (F.col("dub") >= F.lit(float(heap_factor)) * F.col("_theta"))
+        )
+    )
 
 
 def _decode_docs(block_rows: DataFrame) -> DataFrame:
-    """(query_id, gaps) → distinct (query_id, doc_id) candidates (the
-    reference's cross-list `visited` dedup, posting_list.rs:206-214).
+    """(query_id, gaps) → distinct (query_id, doc_id) — every doc id of the
+    gap buffers (index.get_doc_ids_in_postings).
 
     One vectorized continuation-bit pass decodes ALL gap buffers of an Arrow
-    batch (codec.delta_decode_multi) — no per-row Python on the query path.
+    batch (codec.delta_decode_multi) — no per-row Python.
     """
 
     def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -588,23 +658,8 @@ def _decode_docs(block_rows: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------- batch search ----
 
-# Two-phase dict batches of up to this many queries (and, below, at most
-# _COMPACT_TAIL_MAX_BLOCKS queries × query_cut) derive θ on the driver
-# (_driver_theta_search).  Bound: the driver holds one narrow row per
-# matched block — batch × query_cut × blocks-per-list rows of six scalars —
-# plus the surviving-keys literal it ships back.
-_DRIVER_THETA_MAX = 1024
-
-# Hard row cap on the narrow block table the driver-θ path collects: the
-# gate above bounds batch × query_cut, but blocks-per-list is
-# data-dependent (a head-term-heavy batch on a many-block index can
-# multiply it arbitrarily).  The collect is issued as limit(cap+1); hitting
-# the cap aborts to the in-plan θ derivation (result-identical), so driver
-# memory is bounded by construction: cap rows × 6 scalars ≈ 50 MB.
-_DRIVER_THETA_MAX_ROWS = 1_000_000
-
-# In-plan dict batches push the union of all query term ids into the postings
-# scan as an IN predicate (result-neutral pruning).  Above this many ids the
+# Dict batches push the union of all query term ids into the postings scan
+# as an IN predicate (result-neutral pruning).  Above this many ids the
 # literal list itself bloats Catalyst optimization / Parquet predicate
 # conversion more than the scan pruning saves, so skip it (the cut-terms
 # join already restricts the scan output).  The cost is NOT marginal: at the
@@ -617,26 +672,19 @@ _DRIVER_THETA_MAX_ROWS = 1_000_000
 # pruning belongs to the term-bucket partitioned snapshot path
 # (SeismicSparkIndex._postings_for: <= n_buckets literals), so the generic
 # id-literal list only stays where it is provably cheap.
-_SCAN_PRUNE_MAX_IDS = int(os.environ.get("SEISMIC_SCAN_PRUNE_MAX_IDS", "2048"))
-
-# Fallback ubs-cache lifecycle for direct batch_search callers that pass no
-# registry: previous caches are retired here on the next call, so a
-# long-lived session never accumulates dead persisted RDDs.
-# SeismicSparkIndex passes its per-instance registry instead, keeping
-# interleaved searches on different indexes from thrashing each other.
-_DEFAULT_CACHE_REGISTRY: list[DataFrame] = []
+_SCAN_PRUNE_MAX_IDS = 2048
 
 
 def merge_sorted_terms(t, w) -> QVec:
     """THE pinned duplicate-term merge — single source of truth for the
-    driver-θ / in-plan / serving-replica bitwise-identity contract.
+    Spark / serving-replica bitwise-identity contract.
 
     (term asc, weight asc) lexsort, then one reduceat per duplicate group:
     the summation order is a pure function of the (term, weight) multiset,
     so the merged float is reproducible regardless of input order.  Every
     caller that merges duplicate query terms MUST route through here
-    (_merge_dup_qvecs, _cut_qvecs, serving.ServingReplica._resolve) — a
-    divergent copy silently breaks the documented bitwise guarantees.
+    (_merge_dup_qvecs, resolve_queries, serving.ServingReplica._resolve) —
+    a divergent copy silently breaks the documented bitwise guarantees.
     """
     t = np.asarray(t, dtype=np.int64)
     w = np.asarray(w, dtype=np.float64)
@@ -652,279 +700,17 @@ def merge_sorted_terms(t, w) -> QVec:
 def _merge_dup_qvecs(qvecs: dict[str, QVec]) -> dict[str, QVec]:
     """Deterministically merge duplicate term ids within each query vector.
 
-    Dict batches are normalized ONCE here, before path selection, so the
-    driver-θ path, the in-plan derivation and the serving replica all see
-    duplicate-free, term-sorted queries — which is what makes their
-    documented bitwise identity hold even for queries that repeat a term:
-    any float summation the paths would otherwise do independently (Python
-    insertion-order vs Spark aggregation-order) happens exactly once, over
-    a pinned element order (term id asc, then weight asc within a
-    duplicate group) — the reduceat's association is numpy's but the
-    inputs are a pure function of the multiset, so the merged float is
-    reproducible.
+    Dict batches are normalized ONCE here, so the Spark path and the serving
+    replica both see duplicate-free, term-sorted queries — which is what
+    makes their documented bitwise identity hold even for queries that
+    repeat a term: any float summation the paths would otherwise do
+    independently (Python insertion-order vs Spark aggregation-order)
+    happens exactly once, over a pinned element order (term id asc, then
+    weight asc within a duplicate group) — the reduceat's association is
+    numpy's but the inputs are a pure function of the multiset, so the
+    merged float is reproducible.
     """
     return {qid: merge_sorted_terms(t, w) for qid, (t, w) in qvecs.items()}
-
-
-def _cut_qvecs(qvecs: dict[str, QVec], query_cut: int) -> list[tuple]:
-    """Driver-side cut_terms over resolved query vectors: top-``query_cut``
-    terms per query by (weight desc, term_id asc), duplicate ids merged by
-    weight sum — value-identical to the window in :func:`cut_terms`, zero
-    Spark jobs."""
-    rows: list[tuple] = []
-    for qid, (t, w) in qvecs.items():
-        t = np.asarray(t, dtype=np.int64)
-        w = np.asarray(w, dtype=np.float64)
-        if t.size == 0:
-            continue
-        if np.unique(t).size != t.size:
-            t, w = merge_sorted_terms(t, w)
-        order = np.lexsort((t, -w))[:query_cut]
-        rows.extend(
-            (qid, int(t[i]), float(w[i])) for i in order.tolist()
-        )
-    return rows
-
-
-def _compact_rescore(
-    block_rows: DataFrame, forward: DataFrame, qdf: DataFrame, k: int
-) -> DataFrame:
-    """Low-latency rescore tail for SMALL surviving-block sets: decode and
-    dedup candidates in ONE task (replacing _decode_docs' `.distinct()`
-    shuffle with an in-partition np.unique), then broadcast the candidate
-    ids into the forward join — the forward scan stays parallel, but the
-    only exchange left in the chain is the final tiny top-k window.
-
-    Callers gate on block count (``_COMPACT_TAIL_MAX_BLOCKS``): candidates
-    are broadcast, so this path is for interactive batches where the
-    distributed tail's 5–6 AQE stage jobs are pure scheduling overhead
-    (measured ~2 s per chain at 1M docs regardless of data size).
-    """
-
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one coalesced partition → a partition-wide dedup is a full dedup
-        frames = []
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids, counts = codec.delta_decode_multi(
-                [bytes(b) for b in pdf["gaps"]]
-            )
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(pdf["query_id"].to_numpy(), counts),
-                        "doc_id": ids.astype(np.int64),
-                    }
-                )
-            )
-        if frames:
-            yield pd.concat(frames, ignore_index=True).drop_duplicates()
-
-    cands = (
-        block_rows.select("query_id", "gaps")
-        .coalesce(1)
-        .mapInPandas(decode, "query_id STRING, doc_id BIGINT")
-        .hint("broadcast")
-    )
-    scored = exact_score(cands, forward, qdf, broadcast_queries=True)
-    return topk(scored, k)
-
-
-# Compact-tail gate: blocks hold at most a few hundred docs, so ≤4096
-# surviving blocks keeps the broadcast candidate set ≲ 1M (query, doc)
-# pairs ≈ tens of MB — comfortably under executor broadcast budgets.
-_COMPACT_TAIL_MAX_BLOCKS = 4096
-
-
-def _theta0_from_narrow(narrow: pd.DataFrame, k: int) -> dict[str, float]:
-    """Phase-0 θ per query from a collected block table: per (query, term)
-    k-th largest block-max lower bound, maxed over the query's matched terms
-    — the same f64 values the in-plan window aggregates select."""
-    neg_inf = float("-inf")
-    theta: dict[str, float] = {}
-    for (qid, _tid), grp in narrow.groupby(["query_id", "term_id"], sort=False):
-        lb = grp["lb"].to_numpy(dtype=np.float64)
-        if lb.size >= k:
-            kth = float(np.partition(lb, lb.size - k)[lb.size - k])
-            if kth > theta.get(qid, neg_inf):
-                theta[qid] = kth
-    return theta
-
-
-def _driver_theta_search(
-    spark: SparkSession,
-    postings: DataFrame,
-    forward: DataFrame,
-    qvecs: dict[str, QVec],
-    qdf: DataFrame,
-    k: int,
-    query_cut: int,
-    heap_factor: float,
-    cache_registry: list[DataFrame],
-) -> DataFrame:
-    """Two-phase interactive-batch path: θ evolves ON THE DRIVER, like the
-    reference's in-process heap (inverted_index.rs:153-234), instead of
-    inside the plan.
-
-    Why it stays for two-phase only (BENCH/BASELINE.md "Ungated leg"): the
-    in-plan two-phase chain reads θ₀ and the phase-1 best blocks off the
-    ubs frame through window and distinct exchanges (18 jobs a batch), and
-    at 50k docs it lost 47 of 48 interleaved pairs to this path (14 jobs).
-    One-phase, the fused in-plan tail (6 jobs) was as fast or faster in
-    every cell, so one-phase batches never come here.  For a driver-side
-    dict the narrow block table (query_id, term_id, salt, block, ub, lb —
-    no gap blobs) is a few hundred rows per query at most, so the θ
-    aggregation is a numpy pass:
-
-      job 1   materialize + cache the block-UB scan, collect narrow columns
-      job 2   exact-score the best-ub block per matched list, collect the
-              per-query k-th best (phase-1 tightening,
-              posting_list.rs:149-185)
-      job 3   filter the CACHED ubs frame to the surviving block keys
-              (broadcast literal), decode, exact re-score, top-k — the gap
-              blobs never leave the executors
-
-    Float parity with the in-plan path is exact: θ is selected by
-    comparisons over the same f64 values the plan would aggregate (k-th
-    largest lb, k-th best phase-1 score), and the skip predicate
-    ``ub >= heap_factor × θ`` is evaluated in IEEE f64 either way, so the
-    survivor set — and therefore every downstream score — is bitwise
-    identical (tested: test_search_fastpath.py, test_serving.py).
-
-    DataFrame-scale query sets (κ-NN graph: millions of queries) keep the
-    in-plan windowed derivation — collecting their block table would be a
-    driver bottleneck, which is exactly why the in-plan variant exists.
-
-    Returns None when the narrow block table exceeds
-    ``_DRIVER_THETA_MAX_ROWS`` (collected via limit(cap+1), so the transfer
-    itself is bounded) — the caller then falls back to the in-plan path.
-    """
-    cut_rows = _cut_qvecs(qvecs, query_cut)
-    empty = spark.createDataFrame(
-        [], "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
-    )
-    if not cut_rows:
-        return empty
-    cterms = spark.createDataFrame(
-        cut_rows, "query_id STRING, term_id INT, qw DOUBLE"
-    )
-    # Result-neutral scan pruning: the join keeps only these term_ids anyway,
-    # but an explicit IN predicate reaches the postings SCAN — Parquet
-    # row-group stats skip non-matching groups (postings files are
-    # term-sorted, postings.py stream builder) and InMemoryTableScan skips
-    # cached batches.  Measured ~0.2-0.3 s off the UB scan at 1M docs
-    # locally; the real payoff is bucket-partitioned snapshots at scale,
-    # where it stacks with _postings_for's file-level bucket pruning.
-    term_ids = sorted({int(r[1]) for r in cut_rows})
-    if len(term_ids) <= _SCAN_PRUNE_MAX_IDS:
-        # same cap as the in-plan path: above it the literal list costs
-        # Catalyst more than the scan pruning saves (measured, see
-        # _SCAN_PRUNE_MAX_IDS)
-        postings = postings.filter(F.col("term_id").isin(term_ids))
-    matched = (
-        postings
-        .join(F.broadcast(cterms), "term_id")
-        .join(F.broadcast(qdf), "query_id")
-    )
-    retire_caches(cache_registry)
-    # gaps ride along in the ubs frame: persist it so the rescore tail
-    # filters the cached frame instead of re-running the scan
-    ubs = _block_ubs(matched).persist()
-    cache_registry.append(ubs)
-
-    # Collect with a hard row cap: the auto-gate bounds batch × query_cut,
-    # but blocks-per-list is data-dependent, so a head-term-heavy batch on a
-    # many-block index could otherwise collect an unexpectedly wide table.
-    # limit(cap+1) bounds the transfer itself; hitting the cap returns None
-    # and the caller falls back to the in-plan θ derivation.
-    narrow = (
-        ubs.select("query_id", "term_id", "salt", "block", "ub", "lb")
-        .limit(_DRIVER_THETA_MAX_ROWS + 1)
-        .toPandas()
-    )
-    if len(narrow) > _DRIVER_THETA_MAX_ROWS:
-        return None
-    if narrow.empty:
-        return empty
-
-    neg_inf = float("-inf")
-    # phase 0: per (query, term) k-th largest block-max lower bound, maxed
-    # over the query's matched terms (same value as the wt window + rank-k
-    # filter — the k-th largest VALUE is order-independent)
-    theta = _theta0_from_narrow(narrow, k)
-
-    # phase 1: exact-score the best-ub block of every matched list (the
-    # caller's gate keeps their count under the compact-tail bound)
-    best = (
-        narrow.sort_values(
-            ["query_id", "term_id", "ub", "salt", "block"],
-            ascending=[True, True, False, True, True],
-            kind="stable",
-        )
-        .groupby(["query_id", "term_id"], sort=False)
-        .head(1)[["query_id", "term_id", "salt", "block"]]
-    )
-    best_df = spark.createDataFrame(
-        best, "query_id STRING, term_id INT, salt INT, block INT"
-    )
-    best_blocks = ubs.join(
-        F.broadcast(best_df), ["query_id", "term_id", "salt", "block"]
-    )
-    for r in (
-        _compact_rescore(best_blocks, forward, qdf, k)
-        .filter(F.col("rank") == k)
-        .select("query_id", "score")
-        .collect()
-    ):
-        if r["score"] > theta.get(r["query_id"], neg_inf):
-            theta[r["query_id"]] = r["score"]
-
-    if theta:
-        th = narrow["query_id"].map(theta).to_numpy(dtype=np.float64)
-        has = ~np.isnan(th)
-        keep = np.ones(len(narrow), dtype=bool)
-        # identical IEEE f64 predicate to the in-plan filter
-        keep[has] = narrow["ub"].to_numpy(dtype=np.float64)[has] >= (
-            heap_factor * th[has]
-        )
-    else:
-        keep = np.ones(len(narrow), dtype=bool)
-
-    if keep.all():
-        survivors = ubs
-    else:
-        keys = narrow.loc[keep, ["query_id", "term_id", "salt", "block"]]
-        survivors = ubs.join(
-            F.broadcast(
-                spark.createDataFrame(
-                    keys, "query_id STRING, term_id INT, salt INT, block INT"
-                )
-            ),
-            ["query_id", "term_id", "salt", "block"],
-        )
-    if int(keep.sum()) <= _COMPACT_TAIL_MAX_BLOCKS:
-        return _compact_rescore(survivors, forward, qdf, k)
-    cands = _decode_docs(survivors)
-    scored = exact_score(cands, forward, qdf, broadcast_queries=True)
-    return topk(scored, k)
-
-
-def retire_caches(cache_registry: list[DataFrame]) -> None:
-    """Unpersist every DataFrame in a caller-scoped cache registry.
-
-    ubs frames persisted by previous batch_search calls are retired at the
-    caller's next call so a long-lived session issuing many searches never
-    accumulates dead cached RDDs in executor storage memory.  A result
-    DataFrame collected AFTER the retirement recomputes its subtree —
-    correct, just un-cached.
-    """
-    while cache_registry:
-        df = cache_registry.pop()
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass
 
 
 def batch_search(
@@ -937,7 +723,6 @@ def batch_search(
     heap_factor: float = 1.0,
     two_phase: bool = False,
     broadcast_queries: bool | None = None,
-    cache_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Dynamically-pruned batch top-k (Q1/Q9 analogue), single logical plan.
 
@@ -948,61 +733,26 @@ def batch_search(
     ids merged by weight sum (see _repair_qkey).  Returns (query_id, rank,
     doc_id, score); no driver-side loops or mid-plan actions.
 
-    ``cache_registry``: caller-scoped lifecycle for the persisted ubs frame
-    (SeismicSparkIndex passes a per-instance list, so interleaved searches on
-    DIFFERENT indexes never thrash each other's cache).  Previous entries are
-    retired, the new cache appended.  With None a module-level default
-    registry is used, so direct callers in a long session still have each
-    call retire the previous call's cache instead of accumulating persisted
-    RDDs until LRU/disk pressure.
-
-    θ is derived inside the plan (:func:`_fused_candidates` one-phase,
-    :func:`_theta_survivors` two-phase), except for two-phase dict batches
-    of at most ``_DRIVER_THETA_MAX`` queries and ``_COMPACT_TAIL_MAX_BLOCKS``
-    queries × query_cut, which derive it on the driver
-    (:func:`_driver_theta_search`, result-identical).  The ungated leg's
-    interleaved A/B picked that split: in-plan was as fast or faster in
-    every one-phase cell, driver-θ won 47 of 48 two-phase pairs at 50k docs
-    (BENCH/BASELINE.md, "Ungated leg").
+    Both phases and both query shapes run one formulation: block-UB scan →
+    :func:`_fused_candidates` → :func:`exact_score` → (two-phase only)
+    :func:`_phase1_filter` → :func:`topk`.  Each block-UB row is consumed
+    once, so nothing is persisted.  Results are bitwise those of
+    ``ServingReplica.batch_search`` (tests/test_serving.py).
     """
     if not isinstance(queries, DataFrame):
-        # normalize duplicate term ids ONCE, deterministically, before path
-        # selection — both θ paths and the serving replica then see
-        # identical duplicate-free floats (their bitwise identity)
+        # normalize duplicate term ids ONCE, deterministically — the Spark
+        # path and the serving replica then see identical duplicate-free
+        # floats (their bitwise identity)
         queries = _merge_dup_qvecs(queries)
-    if cache_registry is None:
-        cache_registry = _DEFAULT_CACHE_REGISTRY
     qdf, small = _as_queries_df(spark, queries)
     if broadcast_queries is None:
         broadcast_queries = small
-    # Engage only where the compact rescore tail can engage too: phase 1
-    # decodes one block per matched list, and the batch has at most
-    # len(queries) × query_cut lists.  Above the compact-tail bound the
-    # driver-θ path degenerates to the same distributed chains as the
-    # in-plan derivation PLUS serial job barriers — measured SLOWER at
-    # batch 1000 × cut 10 in a same-window interleaved ABAB (1M docs,
-    # BENCH/BASELINE.md).
-    if (
-        two_phase
-        and small
-        and 0 < len(queries) <= _DRIVER_THETA_MAX
-        and len(queries) * query_cut <= _COMPACT_TAIL_MAX_BLOCKS
-    ):
-        res = _driver_theta_search(
-            spark, postings, forward, queries, qdf, k, query_cut,
-            heap_factor, cache_registry,
-        )
-        if res is not None:
-            return res
-        # block-table row cap hit: the in-plan two-phase tail below retires
-        # the abandoned persisted ubs before it persists its own
     qdf = qdf.filter(F.size("q_terms") > 0)
     if small:
-        # Dict batches routed in-plan still know their term union on the
-        # driver; an IN predicate on the SUPERSET of all query terms is
-        # result-neutral (the cut-terms join restricts further) and reaches
-        # the postings scan for row-group / cached-batch / bucket-file
-        # pruning, same as the driver-θ path's filter.  Above the cap the
+        # Dict batches know their term union on the driver; an IN predicate
+        # on the SUPERSET of all query terms is result-neutral (the cut-terms
+        # join restricts further) and reaches the postings scan for
+        # row-group / cached-batch / bucket-file pruning.  Above the cap the
         # literal list costs Catalyst more than the pruning saves — skip.
         all_ids = sorted({int(t) for ts, _ in queries.values() for t in ts})
         if all_ids and len(all_ids) <= _SCAN_PRUNE_MAX_IDS:
@@ -1012,157 +762,11 @@ def batch_search(
     matched = postings.join(qj, "term_id")
     qvec_j = F.broadcast(qdf) if broadcast_queries else qdf
     matched = matched.join(qvec_j, "query_id")
-    ubs = _block_ubs(matched)
-    if not two_phase:
-        # Fused tail (r6): θ + skip filter + decode + dedup in one streamed
-        # operator over query-co-located block rows — one exchange instead
-        # of the wt/wq windows + distinct (guide §2.4), no persist needed
-        # (single consumer), gap blobs cross exactly one shuffle.  Result
-        # bitwise-identical (see _fused_candidates).
-        retire_caches(cache_registry)
-        cands = _fused_candidates(ubs, k, heap_factor)
-        scored = exact_score(
-            cands, forward, qdf, broadcast_queries=broadcast_queries
-        )
-        return topk(scored, k)
-    # two-phase: cache the block scan — θ and the phase-1 best blocks are
-    # both read off ubs, and without the cache Catalyst executes the whole
-    # postings-join→block-scan subtree once per consumer
-    retire_caches(cache_registry)
-    ubs = ubs.persist()
-    cache_registry.append(ubs)
-
-    survivors = _theta_survivors(
-        ubs, forward, qdf, k, heap_factor, two_phase, broadcast_queries
-    )
-    cands = _decode_docs(survivors)
+    cands = _fused_candidates(_block_ubs(matched), k, heap_factor, two_phase)
     scored = exact_score(cands, forward, qdf, broadcast_queries=broadcast_queries)
-    return topk(scored, k)
-
-
-def _theta_survivors(
-    ubs: DataFrame,
-    forward: DataFrame,
-    qdf: DataFrame,
-    k: int,
-    heap_factor: float,
-    two_phase: bool,
-    broadcast_queries: bool,
-) -> DataFrame:
-    """θ derivation + skip filter over the ubs frame.
-
-    θ_q (phase 0) = max over matched terms of the k-th largest per-term
-    block-max lower bound.  Two physical strategies, same value:
-
-    - broadcast (small) query batches: ubs is persisted by the caller, θ is
-      a narrow aggregate of the cache joined back as a per-query broadcast —
-      no shuffle of the gap blobs.
-    - DataFrame-scale query sets (κ-NN: the ubs frame is too big to cache):
-      WINDOW functions over the ubs frame itself (rank within (query, term),
-      then a per-query max of the rank-k values) — one pass, no self-join,
-      so the postings-join→block-scan subtree is never executed twice.
-
-    two_phase adds the first_sorted-style tightening: exact-score the
-    best-ub block per matched list; the per-query k-th best exact score is
-    broadcast back and maxed into θ.
-    """
-    wt = Window.partitionBy("query_id", "term_id").orderBy(F.col("lb").desc())
-    if broadcast_queries:
-        theta0 = (
-            ubs.select("query_id", "term_id", "lb")
-            .withColumn("_r", F.row_number().over(wt))
-            .filter(F.col("_r") == k)
-            .groupBy("query_id")
-            .agg(F.max("lb").alias("theta"))
-        )
-        ubs = ubs.join(F.broadcast(theta0), "query_id", "left")
-    else:
-        wq = Window.partitionBy("query_id")
-        ubs = ubs.withColumn("_r", F.row_number().over(wt)).withColumn(
-            "theta",
-            F.max(F.when(F.col("_r") == k, F.col("lb"))).over(wq),
-        )
-
     if two_phase:
-        wb = Window.partitionBy("query_id", "term_id").orderBy(
-            F.col("ub").desc(), F.col("salt").asc(), F.col("block").asc()
-        )
-        best = (
-            ubs.select("query_id", "term_id", "salt", "block", "ub", "gaps")
-            .withColumn("_rb", F.row_number().over(wb))
-            .filter(F.col("_rb") == 1)
-        )
-        p1 = exact_score(
-            _decode_docs(best), forward, qdf, broadcast_queries=broadcast_queries
-        )
-        wqs = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        )
-        theta2 = (
-            p1.withColumn("_r", F.row_number().over(wqs))
-            .filter(F.col("_r") == k)
-            .groupBy("query_id")
-            .agg(F.max("score").alias("theta2"))
-        )
-        # θ2 is one row per query — always broadcast (stats are unknown to
-        # AQE because it hangs off a Python UDF output)
-        ubs = ubs.join(F.broadcast(theta2), "query_id", "left").withColumn(
-            "theta",
-            F.greatest(
-                F.coalesce("theta", F.lit(float("-inf"))),
-                F.coalesce("theta2", F.lit(float("-inf"))),
-            ),
-        ).withColumn(
-            "theta",
-            F.when(F.col("theta") == float("-inf"), F.lit(None)).otherwise(
-                F.col("theta")
-            ),
-        )
-
-    return ubs.filter(
-        F.col("theta").isNull() | (F.col("ub") >= F.lit(heap_factor) * F.col("theta"))
-    )
-
-
-def search_stats(
-    spark: SparkSession,
-    postings: DataFrame,
-    forward: DataFrame,
-    queries,
-    k: int = 10,
-    query_cut: int = 10,
-    heap_factor: float = 1.0,
-    two_phase: bool = False,
-) -> dict[str, float]:
-    """Skip-rate instrumentation for a query batch: how many matched blocks
-    the dynamic pruning skipped, and how many candidate docs survived.
-
-    Mirrors batch_search's candidate selection exactly (same θ derivation);
-    used by the accuracy/efficiency harness — the analogue of the
-    reference's per-run reporting (scripts/run_experiments.py:287-309).
-    """
-    qdf, _ = _as_queries_df(spark, queries)
-    qdf = qdf.filter(F.size("q_terms") > 0)
-    cterms = cut_terms(qdf, query_cut)
-    matched = postings.join(F.broadcast(cterms), "term_id").join(
-        F.broadcast(qdf), "query_id"
-    )
-    ubs = _block_ubs(matched).persist()
-    survivors = _theta_survivors(
-        ubs, forward, qdf, k, heap_factor, two_phase, broadcast_queries=True
-    ).persist()
-    matched_n = ubs.count()
-    scanned = survivors.count()
-    n_cands = _decode_docs(survivors).count()
-    survivors.unpersist()
-    ubs.unpersist()
-    return {
-        "blocks_matched": matched_n,
-        "blocks_scanned": scanned,
-        "blocks_skipped": matched_n - scanned,
-        "skip_rate": round(1.0 - scanned / matched_n, 4) if matched_n else 0.0,
-        "candidates": int(n_cands),
-    }
+        scored = _phase1_filter(scored, k, heap_factor)
+    return topk(scored, k)
 
 
 def bruteforce_search(

@@ -16,9 +16,9 @@ interactive batches with pure numpy — **bit-identical results** to
 cannot reach.  The float parity is not best-effort: every upper bound and
 every exact score is a `codec.segment_sums` (np.add.reduceat) over the same
 f64 contribution arrays the executors build (search.py `_block_ubs` /
-`exact_score`), θ is selected by comparisons over the same values the
-driver-θ fast path collects, and the skip predicate `ub >= heap_factor·θ`
-is the same IEEE f64 comparison — so the survivor set, candidate set, and
+`exact_score`), θ is selected by comparisons over the same f64 values the
+Spark plan aggregates, and the skip predicate `ub >= heap_factor·θ` is the
+same IEEE f64 comparison — so the survivor set, candidate set, and
 every score agree bitwise (pinned by tests/test_serving.py at exact AND
 approximate configs, including post-save/load hydration).
 
@@ -413,12 +413,15 @@ class ServingReplica:
         query_cut: int,
         heap_factor: float,
         two_phase: bool,
+        stats: np.ndarray | None = None,
     ) -> tuple[np.ndarray, np.ndarray] | None:
         """One resolved query (term ids asc, merged weights) → (top-k
         forward POSITIONS, scores) or None when nothing matches — the exact
         per-query body `batch_search` always ran (pure refactor, r6 pass 3,
         so the executor-side κ-NN map can reuse it on already-resolved
-        rows); `self.doc_ids[pos]` maps positions back to doc ids."""
+        rows); `self.doc_ids[pos]` maps positions back to doc ids.
+        ``stats`` (int64[3]), when given, accumulates the query's matched
+        blocks, kept blocks and candidates (:meth:`search_stats`)."""
         if self.terms.size == 0:
             return None
         # cut_terms: top-query_cut by (weight desc, term_id asc), then the
@@ -461,6 +464,8 @@ class ServingReplica:
         ub = codec.segment_sums(
             qw_st * sv_cat, np.cumsum(lens_cat) - lens_cat, lens_cat
         )
+        if stats is not None:
+            stats[0] += ub.size
 
         # phase 0: per term, the k-th largest block-max lower bound
         theta = -np.inf
@@ -497,6 +502,8 @@ class ServingReplica:
             if theta != -np.inf
             else np.ones(ub.size, dtype=bool)
         )
+        if stats is not None:
+            stats[1] += int(keep.sum())
         if not keep.any():
             if lut is not None:
                 lut[qt] = 0.0
@@ -508,6 +515,8 @@ class ServingReplica:
         cands = np.unique(
             self.m_pos[_flat_slices(self.m_starts[kept], self.m_lens[kept])]
         )
+        if stats is not None:
+            stats[2] += cands.size
         scores = self._score_docs(qt, qw, cands)
         top = np.lexsort((cands, -scores))[:k]
         if lut is not None:
@@ -522,11 +531,11 @@ class ServingReplica:
         heap_factor: float = 1.0,
         two_phase: bool | None = None,
     ) -> pd.DataFrame:
-        """(query_id, rank, doc_id, score) — bit-identical to the Spark
-        formulations of `search.batch_search` on the hydrated index (same θ
-        derivation as search._driver_theta_search, same skip predicate,
-        same rescore floats, same (score desc, doc_id asc) tie order).
-        Size-gated `SeismicSparkIndex.batch_search` answers through here."""
+        """(query_id, rank, doc_id, score) — bit-identical to
+        `search.batch_search` on the hydrated index (same θ values, same
+        skip predicate, same rescore floats, same (score desc, doc_id asc)
+        tie order).  Size-gated `SeismicSparkIndex.batch_search` answers
+        through here."""
         if two_phase is None:
             # same default rule as SeismicSparkIndex.batch_search
             two_phase = (
@@ -541,6 +550,33 @@ class ServingReplica:
             if hit is not None:
                 hits.append((qid, *hit))
         return self._results_frame(hits)
+
+    def search_stats(
+        self,
+        queries: list[tuple[str, list[str], list[float]]],
+        k: int = 10,
+        query_cut: int = 10,
+        heap_factor: float = 1.0,
+        two_phase: bool = False,
+    ) -> dict[str, float]:
+        """What the dynamic pruning of one `batch_search` call did, summed
+        over its queries: matched blocks (every block of the cut terms'
+        lists), scanned blocks (those the skip kept), and candidates (the
+        distinct docs of the scanned blocks, exactly scored) — the counters
+        of the kernel itself, the analogue of the reference's per-run
+        reporting (scripts/run_experiments.py:287-309)."""
+        counts = np.zeros(3, dtype=np.int64)
+        for _qid, qt, qw in self._resolved_queries(queries):
+            self._search_resolved(qt, qw, k, query_cut, heap_factor,
+                                  two_phase, counts)
+        matched, scanned, cands = (int(c) for c in counts)
+        return {
+            "blocks_matched": matched,
+            "blocks_scanned": scanned,
+            "blocks_skipped": matched - scanned,
+            "skip_rate": round(1.0 - scanned / matched, 4) if matched else 0.0,
+            "candidates": cands,
+        }
 
     def bruteforce(
         self, queries: list[tuple[str, list[str], list[float]]], k: int = 10

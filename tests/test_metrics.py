@@ -57,6 +57,36 @@ def test_accuracy_at_recall95_config(spark, corpus_index):
         assert 0.0 < g["skip_rate"] < 1.0
 
 
+# search.search_stats (a Spark re-run of the θ selection, since deleted) on
+# this corpus and _zipf_queries(), k 10, cut 10, keyed (heap_factor,
+# two_phase): (blocks_matched, blocks_scanned, skip_rate, candidates)
+_SEARCH_STATS_BEFORE = {
+    (1.0, False): (4466, 1941, 0.5654, 5795),
+    (0.9, False): (4466, 2134, 0.5222, 6096),
+    (0.8, False): (4466, 2244, 0.4975, 6261),
+    (1.0, True): (4466, 636, 0.8576, 2909),
+    (0.9, True): (4466, 772, 0.8271, 3307),
+    (0.8, True): (4466, 940, 0.7895, 3803),
+}
+
+
+def test_replica_search_stats_match_spark_counts(spark, corpus_index):
+    """The replica kernel's own pruning counters equal what the Spark-side
+    instrumentation counted on the same index and queries."""
+    rep = corpus_index.serving_replica()
+    queries = _zipf_queries()
+    for (hf, tp), (matched, scanned, rate, cands) in _SEARCH_STATS_BEFORE.items():
+        assert rep.search_stats(
+            queries, k=10, query_cut=10, heap_factor=hf, two_phase=tp
+        ) == {
+            "blocks_matched": matched,
+            "blocks_scanned": scanned,
+            "blocks_skipped": matched - scanned,
+            "skip_rate": rate,
+            "candidates": cands,
+        }
+
+
 def test_stopword_query_exact_under_upper_bound_summaries(spark):
     """The estimate-summary blind spot (stopword-only queries) disappears
     under the exactness contract: energy=1.0 + ceil quantization + hf=1.0."""

@@ -8,12 +8,8 @@ ADVICE.md round-4 findings):
   exceed this corpus's n_docs — negative weights would break the pruning
   bounds' non-negativity assumption);
 - duplicate-term queries merge deterministically ONCE (term asc, weight
-  asc) before path selection, so the fast-path/in-plan bitwise identity
-  holds for them too;
-- driver-θ fast path aborts to the in-plan derivation above a hard
-  block-table row cap (collected via limit(cap+1) — bounded transfer);
-- direct batch_search callers with cache_registry=None fall back to a
-  module-level registry (previous ubs caches retired per call);
+  asc) before the search, so the Spark/replica bitwise identity holds for
+  them too;
 - LV/u32 component ids: read_seismic_bin(high_ids="bigint") +
   compact_term_ids remap (pylib/mod.rs:1159-1166, index_traits.rs:14);
 - get(id) vector accessor (pylib/mod.rs:59-291);
@@ -119,11 +115,9 @@ def small_idx(spark):
     )
 
 
-def test_duplicate_term_query_bitwise_identity(spark, small_idx,
-                                              monkeypatch):
+def test_duplicate_term_query_bitwise_identity(spark, small_idx):
     """A query repeating a term 3+ times merges ONCE (pinned order) before
-    path selection — driver-θ, in-plan and serving-replica scores compare
-    with ==."""
+    the search — Spark and serving-replica scores compare with ==."""
     tok_of = {
         r["term_id"]: r["term"] for r in small_idx.vocab.limit(4).collect()
     }
@@ -139,18 +133,14 @@ def test_duplicate_term_query_bitwise_identity(spark, small_idx,
     key = lambda rows: sorted(
         (r.query_id, int(r.rank), int(r.doc_id), float(r.score)) for r in rows
     )
-    fast = key(srch.batch_search(
-        spark, small_idx.postings, small_idx.forward, qvecs, **kw
-    ).collect())
-    monkeypatch.setattr(srch, "_DRIVER_THETA_MAX", 0)  # in-plan θ
-    plan = key(srch.batch_search(
+    got = key(srch.batch_search(
         spark, small_idx.postings, small_idx.forward, qvecs, **kw
     ).collect())
     rep = small_idx.serving_replica().batch_search(
         [("qdup", [tok0, tok1, tok0, tok0], [0.3, 1.0, 0.1, 0.2])], **kw
     )
-    assert fast == plan == key(rep.itertuples(index=False))
-    assert len(fast) > 0
+    assert got == key(rep.itertuples(index=False))
+    assert len(got) > 0
 
 
 def test_merge_dup_qvecs_deterministic_order():
@@ -169,54 +159,6 @@ def test_merge_dup_qvecs_deterministic_order():
     # order feeds one reduceat — deterministic, association unspecified)
     assert outs[0] == outs[1] == outs[2]
     assert outs[0] == pytest.approx(0.6)
-
-
-# ------------------------------------------------------ fast-path row cap --
-
-
-def test_fast_path_row_cap_falls_back(spark, small_idx, monkeypatch):
-    queries = synth_queries(400, n_queries=4, seed=3)
-    qvecs = srch.resolve_queries(spark, queries, small_idx.vocab)
-    kw = dict(k=10, query_cut=8, heap_factor=0.8, two_phase=True)
-    with monkeypatch.context() as m:
-        m.setattr(srch, "_DRIVER_THETA_MAX", 0)  # in-plan θ
-        ref = srch.batch_search(
-            spark, small_idx.postings, small_idx.forward, qvecs, **kw
-        ).collect()
-    monkeypatch.setattr(srch, "_DRIVER_THETA_MAX_ROWS", 2)
-    # the driver-θ path itself must signal abort ...
-    qdf = srch.queries_df_from_qvecs(spark, qvecs)
-    registry = []
-    assert (
-        srch._driver_theta_search(
-            spark, small_idx.postings, small_idx.forward, qvecs, qdf,
-            10, 8, 0.8, registry,
-        )
-        is None
-    )
-    srch.retire_caches(registry)
-    # ... and batch_search must transparently serve the in-plan result
-    got = srch.batch_search(
-        spark, small_idx.postings, small_idx.forward, qvecs, **kw
-    ).collect()
-    key = lambda rows: sorted((r.query_id, r.rank, r.doc_id, r.score) for r in rows)
-    assert key(got) == key(ref)
-
-
-# -------------------------------------------------- default cache registry --
-
-
-def test_default_cache_registry_retires(spark, small_idx):
-    queries = synth_queries(400, n_queries=2, seed=5)
-    qvecs = srch.resolve_queries(spark, queries, small_idx.vocab)
-    srch.retire_caches(srch._DEFAULT_CACHE_REGISTRY)
-    for _ in range(3):
-        srch.batch_search(
-            spark, small_idx.postings, small_idx.forward, qvecs,
-            k=5, query_cut=5, cache_registry=None,
-        ).collect()
-        # each call retires the previous call's ubs cache: never >1 live
-        assert len(srch._DEFAULT_CACHE_REGISTRY) <= 1
 
 
 # ------------------------------------------------------------- LV / u32 ----

@@ -1,8 +1,8 @@
 """Round-6 optimization closures — each restructure pinned against the
 formulation it replaced (results must be identical, not just close):
 
-- fused θ/decode/dedup tail (search._fused_candidates) vs the windowed
-  _theta_survivors → _decode_docs → distinct chain;
+- the DataFrame-query path (search._fused_candidates, one-phase and
+  two-phase) vs the serving replica's kernel;
 - narrow per-row cut_terms vs the explode → groupBy → window formulation;
 - topk_per_term's adaptive first-level skip (output-invariant by
   construction — asserted on data where the condition flips it off);
@@ -38,29 +38,33 @@ def _rows(df):
 
 
 def test_fused_tail_matches_windowed_tail(spark, idx):
-    """DataFrame-path batch_search (fused tail) == the r5 windowed chain,
-    exact floats, on a self-search batch with hf < 1 (knife-edge skips)."""
+    """DataFrame-path batch_search (broadcast off, as κ-NN runs it) == the
+    serving replica's kernel on the same rows, exact floats, on a
+    self-search batch with hf < 1 (knife-edge skips), in both phases."""
     qdf = idx.forward.select(
         F.col("doc_id").cast("string").alias("query_id"),
         F.col("terms").alias("q_terms"),
         F.col("weights").alias("q_weights"),
-    ).filter(F.size("q_terms") > 0).limit(80)
+    ).filter(F.size("q_terms") > 0).limit(80).persist()
     k, qc, hf = 5, 6, 0.7
-    fused = srch.batch_search(
-        spark, idx.postings, idx.forward, qdf,
-        k=k, query_cut=qc, heap_factor=hf, broadcast_queries=False,
-    )
-    cterms = srch.cut_terms(qdf, qc)
-    matched = idx.postings.join(cterms, "term_id").join(qdf, "query_id")
-    ubs = srch._block_ubs(matched)
-    survivors = srch._theta_survivors(
-        ubs, idx.forward, qdf, k, hf, False, False
-    )
-    cands = srch._decode_docs(survivors)
-    scored = srch.exact_score(cands, idx.forward, qdf, broadcast_queries=False)
-    windowed = srch.topk(scored, k)
-    assert _rows(fused) == _rows(windowed)
-    assert fused.count() > 0
+    rep = idx.serving_replica()
+    for two_phase in (False, True):
+        fused = srch.batch_search(
+            spark, idx.postings, idx.forward, qdf, k=k, query_cut=qc,
+            heap_factor=hf, two_phase=two_phase, broadcast_queries=False,
+        )
+        want = []
+        for r in qdf.collect():
+            qt, qw = srch.merge_sorted_terms(r["q_terms"], r["q_weights"])
+            hit = rep._search_resolved(qt, qw, k, qc, hf, two_phase)
+            if hit is not None:
+                want += [
+                    (r["query_id"], i + 1, int(rep.doc_ids[p]), float(sc))
+                    for i, (p, sc) in enumerate(zip(*hit))
+                ]
+        assert _rows(fused) == sorted(want)
+        assert want
+    qdf.unpersist()
 
 
 def test_cut_terms_matches_windowed_formulation(spark, idx):

@@ -14,7 +14,7 @@ Guidelines.md:41-70) against the exact-contract config on the SAME corpus:
 Reported per config: median QPS over `--reps` 1000-query batches,
 Accuracy@10 vs the exact config's results (ground truth: the bench queries
 have ≤7 terms < query_cut, so the exact config IS full exact BM25), and the
-block skip rate (search.search_stats) on a 100-query sample.
+block skip rate (ServingReplica.search_stats) on a 100-query sample.
 
 Usage: python tools/bench_pruning_1m.py [--docs 1000000] [--vocab 100000]
        [--cores 16] [--reps 3]
@@ -46,7 +46,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from bench import bench_queries
-    from seismic_spark import search as srch
     from seismic_spark.checkpoint import CheckpointedBuild
     from seismic_spark.metrics import accuracy_at_k
     from seismic_spark.postings import IndexConfig
@@ -128,10 +127,8 @@ def main() -> None:
             qs_acc, k=10, query_cut=10, heap_factor=hf, two_phase=tp
         )
         r["accuracy_at_10"] = accuracy_at_k(got, exact_truth, 10)
-        qvecs = srch.resolve_queries(spark, qs_acc, idx[name].vocab)
-        r["stats"] = srch.search_stats(
-            spark, idx[name].postings, idx[name].forward, qvecs,
-            k=10, query_cut=10, heap_factor=hf, two_phase=tp,
+        r["stats"] = idx[name].serving_replica().search_stats(
+            qs_acc, k=10, query_cut=10, heap_factor=hf, two_phase=tp,
         )
         results[key] = r
         print(f"# {key}: {json.dumps(r)}", flush=True)

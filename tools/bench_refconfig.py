@@ -121,9 +121,8 @@ acc = (per_q.join(inter, "query_id", "left")
     .agg(F.avg(F.coalesce(F.col("count"), F.lit(0)) / F.col("n_ex")).alias("a"))
     .collect()[0]["a"])
 
-stats = srch.search_stats(spark, idx.postings, idx.forward,
-    srch.resolve_queries(spark, qs[:50], idx.vocab),
-    k=10, query_cut=10, heap_factor=0.8)
+stats = idx.serving_replica().search_stats(
+    qs[:50], k=10, query_cut=10, heap_factor=0.8)
 
 spark.stop()
 print("RESULT " + json.dumps({
