@@ -110,16 +110,12 @@ def _replica_self_search(
 
     def gen(it):
         import numpy as np
-        import pandas as pd
 
         r = bc.value
         for pdf in it:
             if pdf.empty:
                 continue
-            out_qid: list[str] = []
-            out_rank: list[np.ndarray] = []
-            out_doc: list[np.ndarray] = []
-            out_score: list[np.ndarray] = []
+            hits = []
             qids = pdf["query_id"].to_numpy()
             t_col = pdf["q_terms"].to_numpy()
             w_col = pdf["q_weights"].to_numpy()
@@ -132,22 +128,10 @@ def _replica_self_search(
                 hit = r._search_resolved(
                     qt, qw, k, query_cut, heap_factor, two_phase
                 )
-                if hit is None:
-                    continue
-                pos, sc = hit
-                out_qid.extend([qids[i]] * pos.size)
-                out_rank.append(np.arange(1, pos.size + 1, dtype=np.int32))
-                out_doc.append(r.doc_ids[pos])
-                out_score.append(sc)
-            if out_qid:
-                yield pd.DataFrame(
-                    {
-                        "query_id": out_qid,
-                        "rank": np.concatenate(out_rank),
-                        "doc_id": np.concatenate(out_doc),
-                        "score": np.concatenate(out_score),
-                    }
-                )
+                if hit is not None:
+                    hits.append((qids[i], *hit))
+            if hits:
+                yield r._results_frame(hits)
 
     return queries_df.mapInPandas(
         gen, "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"

@@ -394,15 +394,18 @@ class ServingReplica:
         searchsorted over the corpus id array.  When the weight LUT is
         active, batch_search has already scattered THIS query's weights
         into it (same value as the searchsorted gather)."""
-        starts = self.fwd_starts[pos]
         lens = self.fwd_lens[pos]
-        flat = _flat_slices(starts, lens)
+        ends = np.cumsum(lens)
+        offsets = ends - lens
+        # _flat_slices inlined, so the offsets serve the gather AND the sums
+        flat = np.arange(int(ends[-1]) if ends.size else 0, dtype=np.int64)
+        flat += np.repeat(self.fwd_starts[pos] - offsets, lens)
         if self._qw_lut is not None:
-            qw_elem = self._qw_lut[self.fwd_terms[flat]]
+            contrib = self._qw_lut[self.fwd_terms[flat]]
         else:
-            qw_elem = _gather_qw(qt, qw, self.fwd_terms[flat])
-        contrib = qw_elem * self.fwd_weights[flat]
-        offsets = np.cumsum(lens) - lens
+            contrib = _gather_qw(qt, qw, self.fwd_terms[flat])
+        # both gathers return fresh arrays: the product is formed in place
+        contrib *= self.fwd_weights[flat]
         return codec.segment_sums(contrib, offsets, lens)
 
     def _search_resolved(
@@ -458,12 +461,11 @@ class ServingReplica:
         sv_cat = np.concatenate([self.s_vals[a:b] for a, b in spans])
         lens_cat = self.s_lens[blk]
         if lut is not None:
-            qw_st = lut[st_cat]
+            prod = lut[st_cat]
         else:
-            qw_st = _gather_qw(qt, qw, st_cat)
-        ub = codec.segment_sums(
-            qw_st * sv_cat, np.cumsum(lens_cat) - lens_cat, lens_cat
-        )
+            prod = _gather_qw(qt, qw, st_cat)
+        prod *= sv_cat
+        ub = codec.segment_sums(prod, np.cumsum(lens_cat) - lens_cat, lens_cat)
         if stats is not None:
             stats[0] += ub.size
 
@@ -476,23 +478,23 @@ class ServingReplica:
                 if kth > theta:
                     theta = kth
 
+        p1_docs = None
         if two_phase:
             # phase 1: best-UB block per matched term (first argmax =
             # lowest (salt, block), matching the engine's tie order),
             # exact-score the union, k-th best tightens θ
-            p1_parts = []
-            for o, n in segs:
-                if n == 0:
-                    continue
-                bi = blk[o + int(np.argmax(ub[o:o + n]))]
-                s = self.m_starts[bi]
-                p1_parts.append(self.m_pos[s:s + self.m_lens[bi]])
-            if p1_parts:
-                p1_docs = np.unique(np.concatenate(p1_parts))
-                scores = self._score_docs(qt, qw, p1_docs)
-                if scores.size >= k:
+            best = np.array(
+                [blk[o + int(np.argmax(ub[o:o + n]))] for o, n in segs if n],
+                dtype=np.int64,
+            )
+            p1 = np.unique(
+                self.m_pos[_flat_slices(self.m_starts[best], self.m_lens[best])]
+            )
+            if p1.size:
+                p1_docs, p1_scores = p1, self._score_docs(qt, qw, p1)
+                if p1.size >= k:
                     kth = float(
-                        np.partition(scores, scores.size - k)[scores.size - k]
+                        np.partition(p1_scores, p1.size - k)[p1.size - k]
                     )
                     if kth > theta:
                         theta = kth
@@ -517,7 +519,18 @@ class ServingReplica:
         )
         if stats is not None:
             stats[2] += cands.size
-        scores = self._score_docs(qt, qw, cands)
+        if p1_docs is None:
+            scores = self._score_docs(qt, qw, cands)
+        else:
+            # each doc is scored once per query (the reference's `visited`
+            # set): a doc's score is a pure function of its forward row, so
+            # the phase-1 floats are reused for the candidates phase 1
+            # scored, found by a searchsorted (both arrays sorted, unique)
+            at = np.minimum(np.searchsorted(p1_docs, cands), p1_docs.size - 1)
+            scores = p1_scores[at]
+            fresh = p1_docs[at] != cands
+            if fresh.any():
+                scores[fresh] = self._score_docs(qt, qw, cands[fresh])
         top = np.lexsort((cands, -scores))[:k]
         if lut is not None:
             lut[qt] = 0.0
@@ -630,18 +643,21 @@ class ServingReplica:
                     "score": pd.Series([], dtype=np.float64),
                 }
             )
+        sizes = [pos.size for _, pos, _ in hits]
         return pd.DataFrame(
             {
-                "query_id": [q for q, pos, _ in hits for _ in range(pos.size)],
+                "query_id": np.repeat(
+                    np.array([q for q, _, _ in hits], dtype=object), sizes
+                ),
                 "rank": np.concatenate(
-                    [np.arange(1, pos.size + 1, dtype=np.int32)
-                     for _, pos, _ in hits]
+                    [np.arange(1, n + 1, dtype=np.int32) for n in sizes]
                 ),
                 "doc_id": self.doc_ids[
                     np.concatenate([pos for _, pos, _ in hits])
                 ],
                 "score": np.concatenate([sc for _, _, sc in hits]),
-            }
+            },
+            copy=False,
         )
 
     def search(

@@ -121,6 +121,85 @@ def test_replica_bruteforce_bitwise_identical_to_crossjoin(spark, corpus):
     assert got == _rows(idx.serving_replica().bruteforce(queries, k=50))
 
 
+# (config, heap_factor, query_cut): the benchmark's serving config and the
+# salted config of test_replica_bitwise_identical_to_engine
+_KERNEL_CFGS = {
+    "serving": (IndexConfig(n_postings=1000, pruning="fixed",
+                            blocking="kmeans", centroid_fraction=0.1,
+                            min_cluster_size=2, kmeans_doc_cut=15,
+                            summary_energy=0.5, quant_ceil=False), 0.9, 10),
+    "salted": (IndexConfig(n_postings=40, summary_energy=0.6,
+                           blocking="geometric", block_b0=2, block_cap=4,
+                           blocks_per_row=2), 0.8, 8),
+}
+
+
+@pytest.fixture(scope="module")
+def kernel_indexes(spark, corpus):
+    return {
+        name: SeismicSparkIndex.build(spark, corpus, cfg)
+        for name, (cfg, _, _) in _KERNEL_CFGS.items()
+    }
+
+
+@pytest.mark.parametrize("two_phase", [True, False])
+@pytest.mark.parametrize("name", sorted(_KERNEL_CFGS))
+def test_replica_scores_each_doc_once_per_query(kernel_indexes, name,
+                                                two_phase):
+    """The kernel exact-scores a doc at most once per query, like the
+    reference's `visited` set: two-phase reuses the phase-1 floats for the
+    final candidates phase 1 already scored."""
+    _, hf, qc = _KERNEL_CFGS[name]
+    queries = synth_queries(600, n_queries=30, seed=3)
+    rep = ServingReplica.from_index(kernel_indexes[name])
+    cands = rep.search_stats(queries, k=10, query_cut=qc, heap_factor=hf,
+                             two_phase=two_phase)["candidates"]
+    calls = []
+    score = rep._score_docs
+
+    def recording(qt, qw, pos):
+        calls.append(pos.copy())
+        return score(qt, qw, pos)
+
+    rep._score_docs = recording
+    scored = first = 0
+    for q in queries:
+        calls.clear()
+        rep.search(*q, k=10, query_cut=qc, heap_factor=hf,
+                   two_phase=two_phase)
+        pos = np.concatenate(calls) if calls else np.empty(0, np.int64)
+        assert np.unique(pos).size == pos.size, q[0]
+        scored += pos.size
+        first += calls[0].size if calls else 0
+    if two_phase:
+        # phase 1 (the first call) overlapped the final candidates
+        assert scored < first + cands
+    else:
+        assert scored == cands > 0
+
+
+def test_replica_lut_off_matches_lut(kernel_indexes):
+    """With the dense query-weight LUT off (an id space over
+    `_LUT_MAX_DIM`), the searchsorted `_gather_qw` fallback feeds the same
+    in-place products: answers equal the LUT path's bitwise, in both
+    phases and in bruteforce."""
+    idx = kernel_indexes["serving"]
+    queries = synth_queries(600, n_queries=20, seed=3)
+    lut_rep = idx.serving_replica()
+    rep = ServingReplica.from_index(idx)
+    rep._lut_dim = 0
+    for tp in (True, False):
+        got = _rows(rep.batch_search(queries, k=10, heap_factor=0.9,
+                                     two_phase=tp))
+        assert got
+        assert got == _rows(lut_rep.batch_search(queries, k=10,
+                                                 heap_factor=0.9,
+                                                 two_phase=tp))
+    got = _rows(rep.bruteforce(queries, k=10))
+    assert got and got == _rows(lut_rep.bruteforce(queries, k=10))
+    assert rep._qw_lut is None and lut_rep._qw_lut is not None
+
+
 def test_replica_from_saved_index(spark, corpus, tmp_path):
     cfg = IndexConfig(n_postings=30, summary_energy=0.7, blocking="geometric")
     queries = synth_queries(600, n_queries=6, seed=9)
