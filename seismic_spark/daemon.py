@@ -26,13 +26,6 @@ try:  # pragma: no cover - trivial import preload
 except Exception:  # pragma: no cover
     pass
 
-try:  # pragma: no cover - allocator policy, inherited by forked workers
-    from seismic_spark.memtune import tune_process_allocators
-
-    tune_process_allocators()
-except Exception:  # pragma: no cover
-    pass
-
 from pyspark.daemon import manager
 
 if __name__ == "__main__":

@@ -55,7 +55,6 @@ knife-edge skip decisions (ub vs hf·θ) can never diverge between them.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -74,8 +73,8 @@ QUERIES_SCHEMA = "query_id STRING, q_terms ARRAY<INT>, q_weights ARRAY<DOUBLE>"
 
 _KEY_SHIFT = np.int64(1) << np.int64(32)  # (row, term) → sortable combined key
 # driver-side vocab map gate for resolve_queries (strings + ids; ~60 MB at
-# the 1M default) — over it, token resolution stays a per-batch join
-_VOCAB_MAP_MAX_TERMS = int(os.environ.get("SEISMIC_VOCAB_MAP_MAX_TERMS", str(1 << 20)))
+# 1M terms) — over it, token resolution stays a per-batch join
+_VOCAB_MAP_MAX_TERMS = 1 << 20
 
 
 # ------------------------------------------------------ query resolution ----

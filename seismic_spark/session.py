@@ -26,14 +26,6 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 8
     if shuffle_partitions is None:
         shuffle_partitions = max(32, cores)
-    # allocator policy: retain freed pages for reuse in THIS (driver)
-    # process and, via env, in the JVM it spawns — see memtune.py (the §9
-    # page-throttle lesson applied process-wide; SEISMIC_MALLOC_TUNE=0
-    # disables)
-    from seismic_spark.memtune import export_child_env, tune_process_allocators
-
-    tune_process_allocators()
-    export_child_env()
     # The preloaded daemon module (spark.python.daemon.module below) is
     # spawned as `python -m seismic_spark.daemon` with the DRIVER's env —
     # put the package root on PYTHONPATH before the JVM launches so the

@@ -9,8 +9,6 @@ formulation it replaced (results must be identical, not just close):
 - single-aggregate minhash vs the stacked explode formulation.
 """
 
-import os
-
 import numpy as np
 import pytest
 from pyspark.sql import Window
@@ -238,7 +236,6 @@ def test_resolve_queries_cached_matches_join(spark, idx):
         assert np.array_equal(with_cache[q][0], join_path[q][0])
         assert np.array_equal(with_cache[q][1], join_path[q][1])
     # overflow gate: cap 0 forces the join path and remembers the overflow
-    old = os.environ.get("SEISMIC_VOCAB_MAP_MAX_TERMS")
     try:
         cap0 = {}
         orig = srch._VOCAB_MAP_MAX_TERMS
@@ -250,5 +247,3 @@ def test_resolve_queries_cached_matches_join(spark, idx):
             assert np.array_equal(over[q][1], join_path[q][1])
     finally:
         srch._VOCAB_MAP_MAX_TERMS = orig
-        if old is not None:
-            os.environ["SEISMIC_VOCAB_MAP_MAX_TERMS"] = old

@@ -8,6 +8,8 @@ replica exists so interactive serving can skip the Spark scheduler without
 changing a single result bit (seismic_spark/serving.py; the reference's own
 in-process serving, inverted_index.rs:38, pylib/mod.rs:59-291)."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -436,3 +438,17 @@ def test_build_knn_reuses_one_replica_broadcast(spark, corpus, monkeypatch):
     assert idx._replica_bc is not None
     idx.unpersist_serving()
     assert idx._replica_bc is None
+
+
+def test_get_spark_leaves_allocator_environment_alone(spark, monkeypatch):
+    """`get_spark` sets no glibc allocator policy: the driver's environment,
+    which the JVM and the Python workers inherit, keeps no `MALLOC_*`
+    threshold it did not already have."""
+    from seismic_spark.session import get_spark
+
+    for var in ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_"):
+        monkeypatch.delenv(var, raising=False)
+    # the fixture's own arguments, so the reused session keeps its configs
+    assert get_spark("seismic-spark-tests", cores=8, shuffle_partitions=8) is spark
+    assert "MALLOC_MMAP_THRESHOLD_" not in os.environ
+    assert "MALLOC_TRIM_THRESHOLD_" not in os.environ

@@ -45,10 +45,7 @@ def main() -> None:
 
     from seismic_spark.index import SeismicSparkIndex
     from seismic_spark.postings import IndexConfig
-    from seismic_spark.memtune import export_child_env, tune_process_allocators
 
-    tune_process_allocators()
-    export_child_env()
     marks["imports"] = round(time.time() - t_start, 2)
 
     t0 = time.time()
