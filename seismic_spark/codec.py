@@ -241,12 +241,14 @@ def segment_sums(x: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndar
     """
     starts = np.asarray(starts, dtype=np.int64)
     lens = np.asarray(lens, dtype=np.int64)
+    x = np.asarray(x, dtype=np.float64)
+    if lens.all():
+        # no empty segment: the very reduceat below, without the scatter
+        return np.add.reduceat(x, starts)
     out = np.zeros(starts.size, dtype=np.float64)
     nonempty = lens > 0
     if nonempty.any():
-        out[nonempty] = np.add.reduceat(
-            np.asarray(x, dtype=np.float64), starts[nonempty]
-        )
+        out[nonempty] = np.add.reduceat(x, starts[nonempty])
     return out
 
 

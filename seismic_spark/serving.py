@@ -75,6 +75,16 @@ def _flat_slices(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     return np.arange(total, dtype=np.int64) + np.repeat(starts - offsets, lens)
 
 
+def _first_max(x: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Index into ``x`` of the first maximum of each non-empty segment
+    [starts_i, starts_i+lens_i) — np.argmax's tie order, from one segment
+    max.  The segments must tile ``x`` in order (starts = cumsum - lens)."""
+    nz = lens > 0
+    starts = starts[nz]
+    at = (x == np.maximum.reduceat(x, starts).repeat(lens[nz])).nonzero()[0]
+    return at[at.searchsorted(starts)]
+
+
 def _list_flat(col) -> tuple:
     """Arrow list column → (flat child Array, lens int64[n]).  `flatten()`
     adjusts for any slice offset, `list_value_length` gives per-row lengths
@@ -371,18 +381,14 @@ class ServingReplica:
         silently dropped (P3), duplicates merged by weight sum over a pinned
         (term asc, weight asc) element order (search.merge_sorted_terms), ids
         sorted ascending."""
-        pairs = [
-            (self.vocab[t], float(w))
-            for t, w in zip(terms, weights)
-            if t in self.vocab
-        ]
+        pairs = [(i, float(w))
+                 for i, w in zip(map(self.vocab.get, terms), weights)
+                 if i is not None]
         if not pairs:
             return None
         # single source of truth for the pinned merge — see
         # search.merge_sorted_terms' bitwise-identity contract
-        return srch.merge_sorted_terms(
-            [p[0] for p in pairs], [p[1] for p in pairs]
-        )
+        return srch.merge_sorted_terms(*zip(*pairs))
 
     def _score_docs(
         self, qt: np.ndarray, qw: np.ndarray, pos: np.ndarray
@@ -441,14 +447,18 @@ class ServingReplica:
             # scatter this query's weights (zeroed again at every exit)
             lut[qt] = qw
 
-        # every matched term's blocks (one segment each) and rows
+        # every matched term's blocks (one segment each, at `offs` in `blk`)
+        # and rows (no flatten when every term has one row: none is salted)
         rows0, rows1 = self.term_rows[ti], self.term_rows[ti + 1]
         b0 = self.row_blocks[rows0]
         nbt = self.row_blocks[rows1] - b0
-        blk = _flat_slices(b0, nbt)
-        rows = _flat_slices(rows0, rows1 - rows0)
-        # (offset in `blk`, block count) of each matched term's segment
-        segs = list(zip((np.cumsum(nbt) - nbt).tolist(), nbt.tolist()))
+        offs = np.cumsum(nbt) - nbt
+        # _flat_slices inlined, so the offsets serve the blocks AND phases 0-1
+        blk = np.arange(offs[-1] + nbt[-1], dtype=np.int64)
+        blk += np.repeat(b0 - offs, nbt)
+        nrows = rows1 - rows0
+        rows = (rows0 if int(nrows.sum()) == nrows.size
+                else _flat_slices(rows0, nrows))
 
         # per-block summary UBs: the summary elements are gathered by
         # concatenating each row's slice (a fancy-index gather over them
@@ -471,22 +481,21 @@ class ServingReplica:
 
         # phase 0: per term, the k-th largest block-max lower bound
         theta = -np.inf
-        lb = np.repeat(cw, nbt) * self.bmax[blk]
-        for o, n in segs:
-            if n >= k:
-                kth = float(np.partition(lb[o:o + n], n - k)[n - k])
-                if kth > theta:
-                    theta = kth
+        nl = nbt.tolist()
+        if max(nl) >= k:
+            lb = np.repeat(cw, nbt) * self.bmax[blk]
+            for o, n in zip(offs.tolist(), nl):
+                if n >= k:
+                    kth = float(np.partition(lb[o:o + n], n - k)[n - k])
+                    if kth > theta:
+                        theta = kth
 
         p1_docs = None
         if two_phase:
             # phase 1: best-UB block per matched term (first argmax =
             # lowest (salt, block), matching the engine's tie order),
             # exact-score the union, k-th best tightens θ
-            best = np.array(
-                [blk[o + int(np.argmax(ub[o:o + n]))] for o, n in segs if n],
-                dtype=np.int64,
-            )
+            best = blk[_first_max(ub, offs, nbt)]
             p1 = np.unique(
                 self.m_pos[_flat_slices(self.m_starts[best], self.m_lens[best])]
             )
@@ -549,13 +558,7 @@ class ServingReplica:
         skip predicate, same rescore floats, same (score desc, doc_id asc)
         tie order).  Size-gated `SeismicSparkIndex.batch_search` answers
         through here."""
-        if two_phase is None:
-            # same default rule as SeismicSparkIndex.batch_search
-            two_phase = (
-                self.config.summary_energy < 1.0
-                or not self.config.quant_ceil
-                or heap_factor < 1.0
-            )
+        two_phase = self._two_phase(heap_factor, two_phase)
         hits = []
         for qid, qt, qw in self._resolved_queries(queries):
             hit = self._search_resolved(qt, qw, k, query_cut, heap_factor,
@@ -633,31 +636,28 @@ class ServingReplica:
 
     def _results_frame(self, hits: list) -> pd.DataFrame:
         """(query_id, top-k positions, scores) per query → the engine's
-        (query_id, rank, doc_id, score) frame."""
-        if not hits:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series([], dtype=str),
-                    "rank": pd.Series([], dtype=np.int32),
-                    "doc_id": pd.Series([], dtype=np.int64),
-                    "score": pd.Series([], dtype=np.float64),
-                }
+        (query_id, rank, doc_id, score) frame: object/int32/int64/float64
+        columns over a RangeIndex."""
+        if len(hits) == 1:  # one served query: its arrays as they are
+            qid, pos, scores = hits[0]
+            qids = np.full(pos.size, qid, dtype=object)
+            ranks = np.arange(1, pos.size + 1, dtype=np.int32)
+        elif hits:
+            sizes = [p.size for _, p, _ in hits]
+            qids = np.repeat(np.array([q for q, _, _ in hits], dtype=object),
+                             sizes)
+            ranks = np.concatenate(
+                [np.arange(1, n + 1, dtype=np.int32) for n in sizes]
             )
-        sizes = [pos.size for _, pos, _ in hits]
+            pos = np.concatenate([p for _, p, _ in hits])
+            scores = np.concatenate([sc for _, _, sc in hits])
+        else:
+            qids, ranks = np.empty(0, object), np.empty(0, np.int32)
+            pos, scores = np.empty(0, np.int64), np.empty(0, np.float64)
         return pd.DataFrame(
-            {
-                "query_id": np.repeat(
-                    np.array([q for q, _, _ in hits], dtype=object), sizes
-                ),
-                "rank": np.concatenate(
-                    [np.arange(1, n + 1, dtype=np.int32) for n in sizes]
-                ),
-                "doc_id": self.doc_ids[
-                    np.concatenate([pos for _, pos, _ in hits])
-                ],
-                "score": np.concatenate([sc for _, _, sc in hits]),
-            },
-            copy=False,
+            {"query_id": qids, "rank": ranks, "doc_id": self.doc_ids[pos],
+             "score": scores},
+            index=pd.RangeIndex(pos.size), copy=False,
         )
 
     def search(
@@ -670,9 +670,23 @@ class ServingReplica:
         heap_factor: float = 1.0,
         two_phase: bool | None = None,
     ) -> pd.DataFrame:
-        return self.batch_search(
-            [(query_id, terms, weights)], k, query_cut, heap_factor, two_phase
+        """One query — `batch_search` of ``[(query_id, terms, weights)]``,
+        with no repeated-qid merge to do."""
+        resolved = self._resolve(terms, weights)
+        hit = None if resolved is None else self._search_resolved(
+            *resolved, k, query_cut, heap_factor,
+            self._two_phase(heap_factor, two_phase),
         )
+        return self._results_frame([] if hit is None else [(query_id, *hit)])
+
+    def _two_phase(self, heap_factor: float, two_phase: bool | None) -> bool:
+        """``two_phase``, or when None the default rule of
+        SeismicSparkIndex.batch_search."""
+        if two_phase is not None:
+            return two_phase
+        cfg = self.config
+        return (cfg.summary_energy < 1.0 or not cfg.quant_ceil
+                or heap_factor < 1.0)
 
     def search_text(
         self,
@@ -689,7 +703,5 @@ class ServingReplica:
         from collections import Counter
 
         c = Counter(toks)
-        return self.batch_search(
-            [(query_id, list(c), [float(v) for v in c.values()])],
-            k, query_cut, heap_factor, two_phase,
-        )
+        return self.search(query_id, list(c), [float(v) for v in c.values()],
+                           k, query_cut, heap_factor, two_phase)

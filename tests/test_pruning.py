@@ -67,3 +67,22 @@ def test_segment_sums_matches_single_segment():
         seg = x[starts[i]:starts[i] + lens[i]]
         solo = codec.segment_sums(seg, np.array([0]), np.array([lens[i]]))[0]
         assert ss[i] == solo  # bitwise position independence
+
+
+def test_segment_sums_direct_branch_matches_general():
+    """With no empty segment `segment_sums` returns reduceat's output as
+    it is; an empty segment inserted anywhere sends the same data through
+    the general branch, and every float agrees bitwise."""
+    rng = np.random.default_rng(5)
+    for _ in range(100):
+        lens = rng.integers(1, 40, size=rng.integers(1, 30))
+        x = rng.normal(size=int(lens.sum())) * 10.0 ** rng.integers(
+            -3, 4, size=int(lens.sum())
+        )
+        direct = codec.segment_sums(x, np.cumsum(lens) - lens, lens)
+        at = int(rng.integers(0, lens.size + 1))
+        lens0 = np.insert(lens, at, 0)
+        general = codec.segment_sums(x, np.cumsum(lens0) - lens0, lens0)
+        assert general[at] == 0.0
+        assert np.array_equal(np.delete(general, at).view(np.int64),
+                              direct.view(np.int64))

@@ -11,13 +11,14 @@ in-process serving, inverted_index.rs:38, pylib/mod.rs:59-291)."""
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from seismic_spark import search as srch
 from seismic_spark.index import SeismicSparkIndex
 from seismic_spark.postings import IndexConfig
-from seismic_spark.serving import ServingReplica
+from seismic_spark.serving import ServingReplica, _first_max
 from seismic_spark.sources.pages import synth_pages, synth_queries
 
 
@@ -200,6 +201,55 @@ def test_replica_lut_off_matches_lut(kernel_indexes):
     got = _rows(rep.bruteforce(queries, k=10))
     assert got and got == _rows(lut_rep.bruteforce(queries, k=10))
     assert rep._qw_lut is None and lut_rep._qw_lut is not None
+
+
+def test_replica_frame_contract(kernel_indexes):
+    """`search`, `batch_search` and `bruteforce` return one frame layout:
+    columns (query_id, rank, doc_id, score) as object/int32/int64/float64
+    over a RangeIndex — for a hit, an unknown-token query, an empty query
+    and a multi-query batch.  A one-query `search` equals `batch_search`
+    of that query exactly."""
+    rep = kernel_indexes["serving"].serving_replica()
+    queries = synth_queries(600, n_queries=4, seed=3)
+    unknown = ("q_unknown", ["zz-not-a-token"], [1.0])
+    empty = ("q_empty", [], [])
+    hit = rep.search(*queries[0], k=10, heap_factor=0.9)
+    batch = rep.batch_search(queries + [unknown, empty], k=10,
+                             heap_factor=0.9)
+    brute = rep.bruteforce(queries + [unknown, empty], k=10)
+    misses = [rep.search(*unknown), rep.search(*empty),
+              rep.batch_search([unknown, empty]), rep.bruteforce([empty])]
+    assert len(hit) and all(len(f) == 0 for f in misses)
+    assert batch["query_id"].nunique() > 1 and brute["query_id"].nunique() > 1
+    for frame in [hit, batch, brute, rep.bruteforce([queries[0]])] + misses:
+        assert list(frame.columns) == ["query_id", "rank", "doc_id", "score"]
+        assert [str(t) for t in frame.dtypes] == [
+            "object", "int32", "int64", "float64"
+        ]
+        assert isinstance(frame.index, pd.RangeIndex)
+        assert frame.index.equals(pd.RangeIndex(len(frame)))
+    pd.testing.assert_frame_equal(
+        hit, rep.batch_search(queries[:1], k=10, heap_factor=0.9),
+        check_exact=True,
+    )
+
+
+def test_first_max_matches_per_segment_argmax():
+    """The kernel's best-UB block per term (one segment max, then the
+    first position equal to it) is the per-segment `np.argmax`: with
+    forced ties and empty segments the first maximum wins, i.e. the lowest
+    (salt, block)."""
+    rng = np.random.default_rng(7)
+    cases = [np.zeros(3, dtype=np.int64)] + [
+        rng.integers(0, 6, size=rng.integers(1, 12)) for _ in range(300)
+    ]
+    for lens in cases:
+        starts = np.cumsum(lens) - lens
+        # three distinct values over up to 60 elements: ties everywhere
+        x = rng.integers(0, 3, size=int(lens.sum())) * 0.1
+        want = [int(s) + int(np.argmax(x[s:s + n]))
+                for s, n in zip(starts, lens) if n]
+        assert _first_max(x, starts, lens).tolist() == want
 
 
 def test_replica_from_saved_index(spark, corpus, tmp_path):
