@@ -7,7 +7,7 @@ top-k search — re-expressed as DataFrame jobs + Arrow-vectorized pandas UDFs.
 
 Layout
 ------
-- :mod:`seismic_spark.codec`       delta-gap + varint, f16 round-trip, u8 affine quantization
+- :mod:`seismic_spark.codec`       delta-gap + varint, value-type round-trips, u8 affine quantization
 - :mod:`seismic_spark.session`     SparkSession builder tuned for the engine
 - :mod:`seismic_spark.sources`     pages/documents readers + deterministic synth `pages` table
 - :mod:`seismic_spark.textprep`    HTML→text, tokenize, BM25 weights (vectorized)

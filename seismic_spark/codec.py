@@ -227,6 +227,28 @@ def dotvbyte_unpack(
     return t, c.astype(np.float64) * delta
 
 
+def unpack_forward(batch, scale_max: float):
+    """A ``save(packed_values=True)`` forward batch — a pyarrow RecordBatch
+    of (doc_id, t_packed, w_codes) — back to the (doc_id, terms INT list,
+    weights DOUBLE list) schema in one vectorized pass: every row's values
+    are :func:`dotvbyte_unpack` of it.  The gaps decode is
+    :func:`delta_decode_multi`'s, fed zero-copy from the binary column."""
+    import pyarrow as pa
+
+    ids, counts = delta_decode_concat(*binary_flat(batch.column("t_packed")))
+    codes, _ = binary_flat(batch.column("w_codes"))
+    delta = float(scale_max) / 255 if scale_max > 0.0 else 0.0
+    offsets = pa.array(np.concatenate(([0], np.cumsum(counts))), pa.int32())
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("doc_id"),
+            pa.ListArray.from_arrays(offsets, pa.array(ids, pa.int32())),
+            pa.ListArray.from_arrays(offsets, codes.astype(np.float64) * delta),
+        ],
+        ["doc_id", "terms", "weights"],
+    )
+
+
 # ---------------------------------------------------------- segment sums ----
 
 
@@ -268,11 +290,6 @@ def f32_floor(value: float) -> np.float32:
     if float(v32) > v64:
         v32 = np.nextafter(v32, np.float32(-np.inf))
     return v32
-
-
-def f16_round_trip(values: np.ndarray) -> np.ndarray:
-    """float32 -> float16 -> float32, bit-compatible with f16 value storage."""
-    return np.asarray(values, dtype=np.float32).astype(np.float16).astype(np.float32)
 
 
 def bf16_round_trip(values: np.ndarray) -> np.ndarray:

@@ -35,10 +35,6 @@ def affine_hash(h: Column, a: int, b: int) -> Column:
     return (F.lit(a) * (h % MERSENNE) + F.lit(b)) % MERSENNE
 
 
-def affine_hash_sql(hexpr: str, a: int, b: int) -> str:
-    return f"(({a} * (({hexpr}) % {MERSENNE}) + {b}) % {MERSENNE})"
-
-
 def hash_params(n: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for n universal hashes."""
     params = []

@@ -49,16 +49,17 @@ def _footer_schema(path: str):
     """The schema Spark wrote into the footer of a data file directly under
     ``path``, or None when there is none: a directory-partitioned table
     (its files sit in ``col=value/`` subdirectories, and the partition
-    column is not in the footer) or a file from another writer."""
+    column is not in the footer) or a file from another writer.  Raises
+    when ``path`` is not a directory or the footer does not read."""
     import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    try:
-        part = next(
-            f for f in sorted(os.listdir(path))
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    except (OSError, StopIteration):
+    part = next(
+        (f for f in sorted(os.listdir(path))
+         if f.endswith(".parquet") and not f.startswith(("_", "."))),
+        None,
+    )
+    if part is None:
         return None
     raw = (pq.read_metadata(os.path.join(path, part)).metadata or {}).get(
         _SPARK_SCHEMA_KEY
@@ -73,6 +74,36 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     schema = _footer_schema(path)
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
+
+
+def _unpacked_forward(forward: DataFrame, scale: float) -> DataFrame:
+    """A ``packed_values`` forward scan back in the standard (doc_id,
+    terms, weights) schema, one codec.unpack_forward per Arrow batch, so
+    search code is storage-agnostic."""
+    from seismic_spark import codec
+
+    return forward.mapInArrow(
+        lambda batches: (codec.unpack_forward(b, scale) for b in batches),
+        "doc_id BIGINT, terms ARRAY<INT>, weights ARRAY<DOUBLE>",
+    )
+
+
+def _table(name: str) -> property:
+    """Index table ``name``: the DataFrame (or None) in its slot
+    ``_tables[name]``.  A slot may instead hold a planner, a zero-argument
+    callable that `load` leaves there: the first access calls it and
+    caches its DataFrame in the slot."""
+
+    def get(self):
+        t = self._tables[name]
+        if callable(t):
+            t = self._tables[name] = t()
+        return t
+
+    def set_(self, df) -> None:
+        self._tables[name] = df
+
+    return property(get, set_)
 
 
 def _check_missing_tokens(dropped_pairs, missing_tokens: str) -> None:
@@ -102,6 +133,15 @@ def _check_missing_tokens(dropped_pairs, missing_tokens: str) -> None:
 class SeismicSparkIndex:
     """Distributed Seismic-style index over (vocab, forward, postings) tables."""
 
+    vocab = _table("vocab")
+    forward = _table("forward")
+    postings = _table("postings")
+    # external-string-id ↔ internal-BIGINT-id map (vector builds, P6)
+    docmap = _table("docmap")
+    # (doc_id, content) ride-along — the reference's document_content
+    # store (inverted_index_wrapper.rs:93-107, load_content=True default)
+    content = _table("content")
+
     def __init__(
         self,
         spark: SparkSession,
@@ -114,20 +154,16 @@ class SeismicSparkIndex:
         term_buckets: int = 0,
     ) -> None:
         self.spark = spark
-        self.vocab = vocab
-        self.forward = forward
-        self.postings = postings
+        self._tables = {
+            "vocab": vocab, "forward": forward, "postings": postings,
+            "docmap": None, "content": None,
+        }
         self.n_docs = n_docs
         self.avgdl = avgdl
         self.config = config
         # >0 when the postings snapshot is directory-partitioned by
         # term_bucket = term_id % term_buckets (save/load) — search prunes
         self.term_buckets = term_buckets
-        # external-string-id ↔ internal-BIGINT-id map (vector builds, P6)
-        self.docmap: DataFrame | None = None
-        # (doc_id, content) ride-along — the reference's document_content
-        # store (inverted_index_wrapper.rs:93-107, load_content=True default)
-        self.content: DataFrame | None = None
         # per-INSTANCE vocab cache (search.resolve_queries): the driver-side
         # {term: term_id} map, collected once for the queries Spark answers
         self._vocab_cache: dict = {}
@@ -140,13 +176,14 @@ class SeismicSparkIndex:
         # byte accounting is too — load() pre-populates it from meta.json so
         # replica hydration skips the full-table pre-scan (r6, VERDICT #5)
         self._usage_cache: dict[str, int] | None = None
-        # parquet locations of UNTRANSFORMED table snapshots (set by load()
-        # and CheckpointedBuild): replica hydration reads these directly
-        # with multithreaded Arrow instead of collecting through the Spark
-        # driver socket (r6, VERDICT #5 — "hydrate from the snapshot files").
-        # Only populated for tables whose DataFrame is a plain scan of the
-        # files (never for a packed forward, which load() unpacks in-plan).
+        # parquet locations of table snapshots (set by load() and
+        # CheckpointedBuild): replica hydration reads these directly with
+        # multithreaded Arrow instead of collecting through the Spark
+        # driver socket (r6, VERDICT #5 — "hydrate from the snapshot files")
         self.storage_paths: dict[str, str] = {}
+        # the u8 grid's max weight of a packed_values forward snapshot
+        # (load), which hydration decodes from the files; else None
+        self.packed_scale: float | None = None
 
     # ------------------------------------------------------------- build ----
 
@@ -569,7 +606,9 @@ class SeismicSparkIndex:
         hydration that raises ``MemoryError`` is logged and answered by
         Spark instead."""
         est = int(self.n_docs * max(float(self.avgdl), 1.0) * 16)
-        if self.postings is None or not 0 < est <= _LOCAL_SCORE_MAX_BYTES:
+        # the slot, not the property: an unplanned table stays unplanned
+        if (self._tables["postings"] is None
+                or not 0 < est <= _LOCAL_SCORE_MAX_BYTES):
             return None
         try:
             return self.serving_replica()
@@ -581,9 +620,10 @@ class SeismicSparkIndex:
 
     def unpersist_serving(self) -> None:
         """Release the index's cached frames and its κ-NN replica
-        broadcast."""
-        for df in (self.forward, self.postings, self.vocab):
-            df.unpersist()
+        broadcast.  Tables not yet planned are left unplanned."""
+        for name in ("forward", "postings", "vocab"):
+            if isinstance(self._tables[name], DataFrame):
+                self._tables[name].unpersist()
         if self._replica_bc is not None:
             # unpersist, not destroy: a lazy κ-NN frame may still read it
             self._replica_bc.unpersist(blocking=False)
@@ -926,76 +966,46 @@ class SeismicSparkIndex:
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "SeismicSparkIndex":
-        """S7 analogue.  A ``packed_values`` forward snapshot is unpacked
-        lazily (one vectorized decode per Arrow batch) back to the standard
-        (doc_id, terms, weights) schema — search code is storage-agnostic.
-        Tables are planned from their footer schemas, so loading launches
-        no Spark job (except for a ``partitions_by_term_hash`` postings
-        table, whose schema is inferred)."""
+        """S7 analogue.  ``load`` plans nothing: it reads ``meta.json`` and
+        each table's footer schema with pyarrow, so a missing or unreadable
+        table raises here, and each table's DataFrame is planned on its
+        first use.  A ``packed_values`` forward is planned as a scan
+        unpacked per Arrow batch back to the standard (doc_id, terms,
+        weights) schema — search code is storage-agnostic.  Replica
+        hydration reads every table straight from the files, so
+        ``load`` → ``serving_replica()`` plans no DataFrame and launches no
+        Spark job."""
+        from functools import partial
+
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
-        forward = _read_parquet(spark, os.path.join(path, "forward"))
-        if "packed_scale" in meta:
-            import numpy as np
-            import pandas as pd
-
-            from seismic_spark import codec
-
-            scale = float(meta["packed_scale"])
-
-            delta = scale / 255 if scale > 0.0 else 0.0
-
-            def unpack(it):
-                # one continuation-bit pass per Arrow batch (the decode twin
-                # of save's delta_encode_multi packer; a per-row
-                # dotvbyte_unpack loop would pay numpy call overhead per doc
-                # on EVERY forward scan — exact_score runs one per search)
-                for pdf in it:
-                    if pdf.empty:
-                        continue
-                    ids, counts = codec.delta_decode_multi(
-                        [bytes(b) for b in pdf["t_packed"]]
-                    )
-                    w_codes = np.frombuffer(
-                        b"".join(bytes(b) for b in pdf["w_codes"]),
-                        dtype=np.uint8,
-                    )
-                    bounds = np.cumsum(counts)[:-1]
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": pdf["doc_id"].to_numpy(),
-                            "terms": np.split(ids.astype(np.int64), bounds),
-                            "weights": np.split(
-                                w_codes.astype(np.float64) * delta, bounds
-                            ),
-                        }
-                    )
-
-            forward = forward.mapInPandas(
-                unpack, "doc_id BIGINT, terms ARRAY<INT>, weights ARRAY<DOUBLE>"
-            )
+        names = ["vocab", "forward", "postings"] + [
+            name for name in ("docmap", "content") if meta.get(f"has_{name}")
+        ]
+        paths = {name: os.path.join(path, name) for name in names}
+        tables = {}
+        for name, tpath in paths.items():
+            _footer_schema(tpath)  # fail fast: a table that does not read
+            tables[name] = partial(_read_parquet, spark, tpath)
+        scale = meta.get("packed_scale")
+        if scale is not None:
+            scan = tables["forward"]
+            tables["forward"] = lambda: _unpacked_forward(scan(), scale)
         idx = cls(
-            spark,
-            _read_parquet(spark, os.path.join(path, "vocab")),
-            forward,
-            _read_parquet(spark, os.path.join(path, "postings")),
-            meta["n_docs"],
-            meta["avgdl"],
-            IndexConfig(**meta["config"]),
+            spark, tables["vocab"], tables["forward"], tables["postings"],
+            meta["n_docs"], meta["avgdl"], IndexConfig(**meta["config"]),
             term_buckets=int(meta.get("term_buckets", 0)),
         )
-        if meta.get("has_docmap"):
-            idx.docmap = _read_parquet(spark, os.path.join(path, "docmap"))
-        if meta.get("has_content"):
-            idx.content = _read_parquet(spark, os.path.join(path, "content"))
+        idx.docmap = tables.get("docmap")
+        idx.content = tables.get("content")
         if "space_usage" in meta:
             # snapshot carries its own byte accounting — replica hydration's
             # budget gate then costs zero Spark jobs (r6, VERDICT #5)
             idx._usage_cache = {
                 k: int(v) for k, v in meta["space_usage"].items()
             }
-        idx.storage_paths["vocab"] = os.path.join(path, "vocab")
-        idx.storage_paths["postings"] = os.path.join(path, "postings")
-        if "packed_scale" not in meta:  # packed forward is unpacked in-plan
-            idx.storage_paths["forward"] = os.path.join(path, "forward")
+        idx.storage_paths = {
+            name: paths[name] for name in ("vocab", "forward", "postings")
+        }
+        idx.packed_scale = scale
         return idx

@@ -8,7 +8,7 @@ stream with late-data handling, usable both as a real stream and in batch
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,24 +33,4 @@ def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
             "n",
             "sum_value",
         )
-    )
-
-
-def start_event_stream(
-    spark: SparkSession, events_dir: str, out_dir: str, checkpoint: str
-):
-    """File-source streaming variant: drain available files, append rollups."""
-    schema = (
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
-        "value DOUBLE, props STRING"
-    )
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    rolled = hourly_rollup(stream)
-    return (
-        rolled.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )

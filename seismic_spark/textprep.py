@@ -140,12 +140,6 @@ def bm25_weights(
     )
 
 
-def f16_round_trip_col(weights_df: DataFrame, col: str = "weight") -> DataFrame:
-    """Round-trip a weight column through float16 (P5 analogue — the
-    reference's default f16 value storage, computed in f32)."""
-    return value_round_trip_col(weights_df, "f16", col=col)
-
-
 def value_round_trip_col(
     weights_df: DataFrame,
     value_type: str,

@@ -141,6 +141,37 @@ def test_dotvbyte_pack_roundtrip(seed):
     assert list(t2) == [3] and list(w2) == [0.0]
 
 
+@pytest.mark.parametrize("seed", [0, 42])
+def test_unpack_forward_matches_per_row_unpack(seed):
+    """The batched packed-forward decode (the Spark scan of a loaded
+    packed snapshot and replica hydration from its files) gives each row
+    exactly its per-row dotvbyte_unpack — empty rows and a sliced batch
+    included."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    scale = 25.0
+    rows = []
+    for _ in range(40):
+        n = int(rng.integers(0, 60))
+        t = np.sort(rng.choice(10**6, size=n, replace=False)).astype(np.int64)
+        rows.append(codec.dotvbyte_pack(t, rng.uniform(0.0, 25.0, n), scale))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(np.arange(len(rows)), pa.int64()),
+         pa.array([tb for tb, _ in rows], pa.binary()),
+         pa.array([wb for _, wb in rows], pa.binary())],
+        ["doc_id", "t_packed", "w_codes"],
+    )
+    for lo in (0, 7):
+        out = codec.unpack_forward(batch.slice(lo), scale)
+        assert out.column("doc_id").to_pylist() == list(range(lo, len(rows)))
+        for (tb, wb), t, w in zip(rows[lo:], out.column("terms").to_pylist(),
+                                  out.column("weights").to_pylist()):
+            t_want, w_want = codec.dotvbyte_unpack(tb, wb, scale)
+            assert t == t_want.tolist() and w == w_want.tolist()
+    assert codec.unpack_forward(batch.slice(0, 0), scale).num_rows == 0
+
+
 @pytest.mark.parametrize("seed", [3, 42])
 def test_delta_encode_multi_matches_per_row(seed):
     """The batched build-path encode is byte-identical to per-row

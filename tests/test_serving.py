@@ -380,6 +380,94 @@ def test_restart_to_serving_launches_no_spark_job(spark, corpus, tmp_path):
         )
 
 
+@pytest.fixture(scope="module")
+def snapshots(spark, corpus, tmp_path_factory):
+    """An in-session fixedu8 index (its values sit on the packed grid, so
+    a packed snapshot is lossless) and its snapshots saved plain, packed
+    and term-bucketed."""
+    idx = SeismicSparkIndex.build(
+        spark, corpus,
+        IndexConfig(n_postings=30, summary_energy=0.6, value_type="fixedu8"),
+    )
+    root = tmp_path_factory.mktemp("snapshots")
+    paths = {}
+    for name, kw in (("plain", {}), ("packed", {"packed_values": True}),
+                     ("term_buckets", {"partitions_by_term_hash": 4})):
+        paths[name] = str(root / name)
+        idx.save(paths[name], **kw)
+    return idx, paths
+
+
+def _frame(pdf):
+    return pdf.sort_values(["query_id", "rank"]).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("name", ["plain", "packed", "term_buckets"])
+def test_load_plans_each_table_on_first_spark_use(spark, snapshots, name,
+                                                  monkeypatch):
+    """`load` → `serving_replica()` → `search` plans no DataFrame over the
+    index tables and runs no Spark job (a packed forward is decoded from
+    its files too), and neither do a replica-gated `batch_search` and
+    `bruteforce`.  With the gate off, the next `batch_search` plans each
+    table it uses exactly once.  Every answer is bitwise the in-session
+    index's."""
+    from seismic_spark import index as index_mod
+
+    idx, paths = snapshots
+    planned = []
+    read = index_mod._read_parquet
+
+    def counting(session, path):
+        planned.append(os.path.basename(path))
+        return read(session, path)
+
+    monkeypatch.setattr(index_mod, "_read_parquet", counting)
+    queries = synth_queries(600, n_queries=6, seed=23)
+    live = idx.serving_replica()
+
+    sc = spark.sparkContext
+    group = f"test-lazy-load-{name}"
+    sc.setJobGroup(group, "load + hydrate + search")
+    try:
+        loaded = SeismicSparkIndex.load(spark, paths[name])
+        rep = loaded.serving_replica()
+        answers = [rep.search(*q, k=10, heap_factor=0.9) for q in queries]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    for q, got in zip(queries, answers):
+        pd.testing.assert_frame_equal(
+            got, live.search(*q, k=10, heap_factor=0.9), check_exact=True
+        )
+    want = _frame(live.batch_search(queries, k=10, heap_factor=0.9))
+    assert len(want)
+    gated = loaded.batch_search(queries, k=10, heap_factor=0.9).toPandas()
+    brute = loaded.bruteforce(queries, k=10).toPandas()
+    assert planned == []
+    pd.testing.assert_frame_equal(_frame(gated), want, check_exact=True)
+    pd.testing.assert_frame_equal(
+        _frame(brute), _frame(live.bruteforce(queries, k=10)), check_exact=True
+    )
+
+    monkeypatch.setattr(index_mod, "_LOCAL_SCORE_MAX_BYTES", 0)
+    for _ in range(2):
+        got = loaded.batch_search(queries, k=10, heap_factor=0.9).toPandas()
+        assert sorted(planned) == ["forward", "postings", "vocab"]
+        pd.testing.assert_frame_equal(_frame(got), want, check_exact=True)
+
+
+def test_load_raises_on_a_missing_table(spark, snapshots, tmp_path):
+    """A snapshot missing a table its meta.json implies fails in `load`,
+    not at the table's first use."""
+    import shutil
+
+    path = str(tmp_path / "idx")
+    shutil.copytree(snapshots[1]["plain"], path)
+    shutil.rmtree(os.path.join(path, "postings"))
+    with pytest.raises(FileNotFoundError, match="postings"):
+        SeismicSparkIndex.load(spark, path)
+
+
 def test_replica_falls_back_and_logs_when_snapshot_read_fails(
     spark, corpus, tmp_path, caplog
 ):
