@@ -541,12 +541,7 @@ class SeismicSparkIndex:
         replica is not safe for concurrent calls."""
         if n_knn > 0 and getattr(self, "knn", None) is None:
             raise ValueError("n_knn > 0 requires build_knn() first")
-        if two_phase is None:
-            two_phase = (
-                self.config.summary_energy < 1.0
-                or not self.config.quant_ceil
-                or heap_factor < 1.0
-            )
+        two_phase = srch.resolve_two_phase(self.config, heap_factor, two_phase)
         rep = self._in_process_replica()
         if rep is None or n_knn > 0:
             qvecs = srch.resolve_queries(
@@ -664,14 +659,11 @@ class SeismicSparkIndex:
         self, query_id: str, text: str, k: int = 10, query_cut: int = 10,
         heap_factor: float = 1.0, two_phase: bool | None = None, n_knn: int = 0,
     ) -> DataFrame:
-        """Free-text query: tokenize and weight terms by query-side idf·tf."""
-        toks = [t for t in text.lower().split(" ") if t]
-        from collections import Counter
-
-        c = Counter(toks)
+        """Free-text query: lowercase, split on spaces, and weight each
+        distinct token by its count (:func:`search.text_query`)."""
         return self.batch_search(
-            [(query_id, list(c), [float(v) for v in c.values()])], k, query_cut,
-            heap_factor, two_phase, n_knn,
+            [(query_id, *srch.text_query(text))], k, query_cut, heap_factor,
+            two_phase, n_knn,
         )
 
     def bruteforce(

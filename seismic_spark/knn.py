@@ -90,7 +90,7 @@ def _replica_self_search(
     `test_build_knn_replica_matches_join` pins this path against the join
     path on real data).
 
-    Per-row duplicate/merge semantics match the engine's `_repair_qkey`
+    Per-row duplicate/merge semantics match the engine's `_query_keys`
     batch-side repair: forward rows are duplicate-free and term-sorted by
     construction, and `merge_sorted_terms` is the identity on such rows —
     the merge only exists as belt-and-braces for non-forward callers.

@@ -10,20 +10,18 @@ evolves inside one thread; a naive port would need a driver round-trip to
 share it.  Instead θ is derived **inside the plan**, so the whole batch is
 ONE Spark job:
 
-  Phase-0 bound (always on): for a query term t with weight qw_t, every doc
-  in a block b of t's posting list scores at least qw_t × (its own stored
-  weight); the block's best doc scores ≥ qw_t × bmax_b.  Blocks of one list
-  hold DISTINCT docs, so the k-th largest qw_t·bmax over t's blocks is
-  witnessed by k distinct docs → it lower-bounds the final k-th best score.
-  θ_q = max over matched terms of that per-term k-th largest.
-
-  Blocks with ``summary_ub < heap_factor × θ_q`` are skipped; survivors are
-  decoded, deduped across lists (the reference's `visited` set), exactly
-  re-scored against full doc vectors, and top-k'ed per query.
+  The pruning rules exist once, in this module, and both placements call
+  them — the serving replica (serving.py) with its one query, the fused
+  operator once per query group: the phase-0 bound θ_q from the matched
+  terms' block maxima (:func:`phase0_theta`, always on), the skip
+  ``summary_ub >= heap_factor × θ_q`` (:func:`blocks_kept`), and each
+  list's best block (:func:`_first_max`).  Survivors are decoded, deduped
+  across lists (the reference's `visited` set), exactly re-scored against
+  full doc vectors, and top-k'ed per query.
 
   Phase-1 tightening (``two_phase=True`` — the first_sorted analogue,
   posting_list.rs:149-185): θ₂ = the k-th best exact score among the docs
-  of every matched list's best-ub block, and θ_q ← max(θ_q, θ₂).  Because
+  of every matched list's best block, and θ_q ← max(θ_q, θ₂).  Because
   the tighter θ only removes blocks from the phase-0 kept set, the same
   pass decodes the phase-0 survivors plus the best blocks, tags each
   (query, doc) with the largest ub of its decoded blocks (``dub``) and
@@ -55,6 +53,7 @@ knife-edge skip decisions (ub vs hf·θ) can never diverge between them.
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Iterator
 
 import numpy as np
@@ -180,9 +179,9 @@ def cut_terms(queries_df: DataFrame, query_cut: int) -> DataFrame:
     bench scale, serializing everything downstream of it in the same stage
     (event-log measured: a 5.9 s single-task stage in the κ-NN chain).
     Zero-copy Arrow flattening; duplicate term ids within a row merge
-    through the pinned (term asc, weight asc) reduceat order
-    (merge_sorted_terms' contract), value-identical to the old groupBy-sum
-    for the duplicate-free rows every engine path produces.
+    through :func:`merge_sorted_terms` (:func:`_query_keys`),
+    value-identical to the old groupBy-sum for the duplicate-free rows
+    every engine path produces.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -192,23 +191,10 @@ def cut_terms(queries_df: DataFrame, query_cut: int) -> DataFrame:
             n = rb.num_rows
             if n == 0:
                 continue
-            qt = rb.column(rb.schema.get_field_index("q_terms"))
-            qw = rb.column(rb.schema.get_field_index("q_weights"))
-            lens = pc.list_value_length(qt).to_numpy().astype(np.int64)
-            t_flat = qt.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            w_flat = qw.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            row_rep = np.repeat(np.arange(n, dtype=np.int64), lens)
-            key = row_rep * _KEY_SHIFT + t_flat
-            # merge duplicate (row, term): (term asc, weight asc) reduceat —
-            # THE pinned merge order (see merge_sorted_terms)
-            order = np.lexsort((w_flat, key))
-            k_s, w_s = key[order], w_flat[order]
-            if k_s.size > 1 and np.any(np.diff(k_s) == 0):
-                starts = np.flatnonzero(
-                    np.concatenate(([True], np.diff(k_s) != 0))
-                )
-                w_s = np.add.reduceat(w_s, starts)
-                k_s = k_s[starts]
+            k_s, w_s = _query_keys(
+                rb.column(rb.schema.get_field_index("q_terms")),
+                rb.column(rb.schema.get_field_index("q_weights")),
+            )
             row_m = k_s // _KEY_SHIFT
             t_m = k_s - row_m * _KEY_SHIFT
             # top-query_cut per row by (weight desc, term asc)
@@ -240,42 +226,87 @@ def cut_terms(queries_df: DataFrame, query_cut: int) -> DataFrame:
 # ------------------------------------------------- flattened batch utils ----
 
 
-def _repair_qkey(
-    qkey: np.ndarray, qw_all: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """In-place-order repair of a flattened query-key array
-    (``row·2^32 + term_id``, sorted asc when every row's q_terms is) + a
-    duplicate merge.  A user-supplied queries DataFrame (QUERIES_SCHEMA)
-    with UNSORTED q_terms is repaired here (stable argsort, weights permuted
-    identically); duplicate term ids within one row are MERGED by summing
-    their weights (reduceat in original-order-within-group) — for a dot
-    product ``q·d`` a repeated component contributes ``(w1+w2)·dv``, so the
-    merge is score-identical to the caller's intent and never aborts the
-    batch."""
-    if qkey.size > 1:
-        d = np.diff(qkey)
-        if not np.all(d > 0):
-            order = np.argsort(qkey, kind="stable")
-            qkey, qw_all = qkey[order], qw_all[order]
-            dup = np.diff(qkey) == 0
-            if np.any(dup):
-                starts = np.flatnonzero(
-                    np.concatenate(([True], ~dup))
-                )
-                qw_all = np.add.reduceat(qw_all, starts)
-                qkey = qkey[starts]
-    return qkey, qw_all
+def _query_keys(q_terms, q_weights) -> tuple[np.ndarray, np.ndarray]:
+    """A batch's Arrow ``q_terms``/``q_weights`` list columns as sorted
+    ``row·2^32 + term_id`` keys and their weights.  Unsorted or repeated
+    q_terms (a user-supplied QUERIES_SCHEMA frame) go through
+    :func:`merge_sorted_terms`: a repeated component contributes
+    ``(w1+w2)·dv`` to ``q·d``, summed as every other placement sums it."""
+    import pyarrow.compute as pc
+
+    lens = pc.list_value_length(q_terms).to_numpy().astype(np.int64)
+    terms = q_terms.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+    weights = (
+        q_weights.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    )
+    keys = np.repeat(np.arange(lens.size, dtype=np.int64), lens) * _KEY_SHIFT
+    keys += terms
+    if keys.size > 1 and not np.all(np.diff(keys) > 0):
+        return merge_sorted_terms(keys, weights)
+    return keys, weights
 
 
 def _gather_qw(
-    qkey: np.ndarray, qw_all: np.ndarray, row_of: np.ndarray, terms: np.ndarray
+    keys: np.ndarray, weights: np.ndarray, probe: np.ndarray
 ) -> np.ndarray:
-    """Per-element query weight (0.0 when the term isn't in that row's query)."""
-    skey = row_of * _KEY_SHIFT + terms
-    idx = np.searchsorted(qkey, skey)
-    idx_c = np.minimum(idx, max(qkey.size - 1, 0))
-    hit = qkey[idx_c] == skey if qkey.size else np.zeros(skey.size, dtype=bool)
-    return np.where(hit, qw_all[idx_c] if qw_all.size else 0.0, 0.0)
+    """Per-probe query weight, 0.0 where no key matches (``keys`` sorted,
+    unique): term ids for the replica's one query, ``row·2^32 + term``
+    keys for a Spark batch (:func:`_query_keys`)."""
+    idx = np.minimum(np.searchsorted(keys, probe), max(keys.size - 1, 0))
+    hit = keys[idx] == probe if keys.size else np.zeros(probe.size, dtype=bool)
+    return np.where(hit, weights[idx] if weights.size else 0.0, 0.0)
+
+
+# ------------------------------------------------------- pruning rules ------
+# Seismic's pruning rules (inverted_index.rs:153-234, posting_list.rs:115-215),
+# written once for both placements: ServingReplica._search_resolved calls
+# them with its one query, _fused_candidates once per query group.  Each
+# matched term's blocks are one segment, in (salt asc, block asc) order, and
+# the segments of a query tile its block arrays.
+
+
+def phase0_theta(
+    qw: np.ndarray, lens: np.ndarray, bmax: np.ndarray, at, k: int
+) -> float:
+    """One query's phase-0 bound θ₀.  Matched term t (cut weight
+    ``qw[t]``) owns ``lens[t]`` consecutive blocks of ``bmax[at]``, the
+    widened f32 block maxima.  The best doc of block b scores at least
+    qw_t × bmax_b and one list's blocks hold distinct docs, so the k-th
+    largest such product lower-bounds the k-th best score.  θ₀ is its max
+    over the terms, −∞ when no term has k blocks (``bmax`` is then not
+    read)."""
+    theta = -np.inf
+    nl = lens.tolist()
+    if max(nl, default=0) >= k:
+        lb = np.repeat(qw, lens) * bmax[at]
+        o = 0
+        for n in nl:
+            if n >= k:
+                kth = float(np.partition(lb[o:o + n], n - k)[n - k])
+                if kth > theta:
+                    theta = kth
+            o += n
+    return theta
+
+
+def blocks_kept(ub: np.ndarray, heap_factor: float, theta: float) -> np.ndarray:
+    """The block skip: a block is scanned iff its summary upper bound
+    ``ub >= heap_factor × θ``.  With no bound yet (θ = −∞) every block is
+    kept, heap_factor 0 included (0·−∞ is NaN, which no ub passes)."""
+    if theta == -np.inf:
+        return np.ones(ub.size, dtype=bool)
+    return ub >= heap_factor * theta
+
+
+def _first_max(x: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Index into ``x`` of the first maximum of each non-empty segment
+    [starts_i, starts_i+lens_i) — np.argmax's tie order, from one segment
+    max.  The segments must tile ``x`` in order (starts = cumsum - lens).
+    Over block UBs: each term's best block, ties to the lowest (salt, block)."""
+    nz = lens > 0
+    starts = starts[nz]
+    at = (x == np.maximum.reduceat(x, starts).repeat(lens[nz])).nonzero()[0]
+    return at[at.searchsorted(starts)]
 
 
 # -------------------------------------------------------------- scoring -----
@@ -324,18 +355,13 @@ def exact_score(
             if n == 0:
                 continue
             cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            qlens = pc.list_value_length(cols["q_terms"]).to_numpy().astype(np.int64)
-            qt_all = cols["q_terms"].flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            qw_all = cols["q_weights"].flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            qrow = np.repeat(np.arange(n, dtype=np.int64), qlens)
-            qkey = qrow * _KEY_SHIFT + qt_all
-            qkey, qw_all = _repair_qkey(qkey, qw_all)
+            qkey, qw_all = _query_keys(cols["q_terms"], cols["q_weights"])
 
             lens = pc.list_value_length(cols["terms"]).to_numpy().astype(np.int64)
             t_all = cols["terms"].flatten().to_numpy(zero_copy_only=False).astype(np.int64)
             w_all = cols["weights"].flatten().to_numpy(zero_copy_only=False).astype(np.float64)
             row_rep = np.repeat(np.arange(n, dtype=np.int64), lens)
-            qw_elem = _gather_qw(qkey, qw_all, row_rep, t_all)
+            qw_elem = _gather_qw(qkey, qw_all, row_rep * _KEY_SHIFT + t_all)
             contrib = qw_elem * w_all
             starts = np.cumsum(lens) - lens
             scores = codec.segment_sums(contrib, starts, lens)
@@ -375,8 +401,8 @@ def topk(scored: DataFrame, k: int) -> DataFrame:
 
 
 def _block_ubs(postings_matched: DataFrame) -> DataFrame:
-    """Per (query, posting-row, block): summary upper-bound dot (Q2), the
-    block-max lower bound, and the block's encoded doc ids.
+    """Per (query, posting-row, block): the term's cut weight, the block
+    max, the summary upper-bound dot (Q2), and the block's encoded doc ids.
 
     Fully vectorized per Arrow batch: all blocks of all rows are flattened
     into concatenated summary-element arrays; one searchsorted resolves every
@@ -384,8 +410,8 @@ def _block_ubs(postings_matched: DataFrame) -> DataFrame:
     per-block Python math.
     """
     out_schema = (
-        "query_id STRING, term_id INT, salt INT, block INT, ub DOUBLE, "
-        "lb DOUBLE, gaps BINARY"
+        "query_id STRING, term_id INT, salt INT, block INT, qw DOUBLE, "
+        "bmax FLOAT, ub DOUBLE, gaps BINARY"
     )
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -396,29 +422,17 @@ def _block_ubs(postings_matched: DataFrame) -> DataFrame:
         # (summary lists per block per row); flatten()/list_value_length are
         # O(1) buffer views and the gap blobs pass through as one untouched
         # Arrow binary column.  All float math is unchanged dtype-for-dtype,
-        # so every ub/lb is bitwise identical to the pandas formulation.
+        # so every ub is bitwise identical to the pandas formulation.
         for rb in it:
             nrow = rb.num_rows
             if nrow == 0:
                 continue
             cols = {name: rb.column(i) for i, name in enumerate(rb.schema.names)}
-            qlens = pc.list_value_length(cols["q_terms"]).to_numpy().astype(np.int64)
-            qt_all = cols["q_terms"].flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            qw_all = cols["q_weights"].flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-            qrow = np.repeat(np.arange(nrow, dtype=np.int64), qlens)
-            qkey, qw_all = _repair_qkey(qrow * _KEY_SHIFT + qt_all, qw_all)
+            qkey, qw_all = _query_keys(cols["q_terms"], cols["q_weights"])
 
             # ---- block level -------------------------------------------
             nb = pc.list_value_length(cols["blocks"]).to_numpy().astype(np.int64)
             row_of_block = np.repeat(np.arange(nrow, dtype=np.int64), nb)
-            blocks_flat = cols["blocks"].flatten()
-            bmax_all = (
-                cols["block_max"].flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-            )
-            qw_row = cols["qw"].to_numpy(zero_copy_only=False)
-            lb = qw_row[row_of_block] * bmax_all
 
             # ---- summary-element level ----------------------------------
             st_inner = cols["summary_terms"].flatten()  # list<int> per block
@@ -437,8 +451,8 @@ def _block_ubs(postings_matched: DataFrame) -> DataFrame:
                 np.repeat(mins_all, slen)
                 + codes_all.astype(np.float32) * np.repeat(quants_all, slen)
             ).astype(np.float32)
-            row_of_elem = np.repeat(row_of_block, slen)
-            qw_elem = _gather_qw(qkey, qw_all, row_of_elem, st_all)
+            elem_key = np.repeat(row_of_block, slen) * _KEY_SHIFT + st_all
+            qw_elem = _gather_qw(qkey, qw_all, elem_key)
             contrib = qw_elem * vals.astype(np.float64)
             elem_starts = np.cumsum(slen) - slen
             ub = codec.segment_sums(contrib, elem_starts, slen)
@@ -448,13 +462,15 @@ def _block_ubs(postings_matched: DataFrame) -> DataFrame:
                 pc.take(cols["query_id"], idx),
                 pc.take(cols["term_id"], idx),
                 pc.take(cols["salt"], idx),
-                blocks_flat,
+                cols["blocks"].flatten(),
+                pc.take(cols["qw"], idx),
+                cols["block_max"].flatten(),
                 pa.array(ub),
-                pa.array(lb),
                 cols["doc_gaps"].flatten(),
             ]
             names = [
-                "query_id", "term_id", "salt", "block", "ub", "lb", "gaps",
+                "query_id", "term_id", "salt", "block", "qw", "bmax", "ub",
+                "gaps",
             ]
             yield pa.RecordBatch.from_arrays(arrays, names)
 
@@ -474,69 +490,60 @@ def _fused_candidates(
 
     One repartition("query_id") is the only exchange the gap blobs cross
     (guide §2.4 + §2.3); the θ aggregation, filter, decode and dedup all
-    happen in one vectorized pass over each query's rows.
+    happen in one vectorized pass over each query's rows.  Each batch's
+    rows are sorted by (query, term, salt, block), the replica's block
+    order, in numpy (a four-key Spark sort cost ~20% of a 400-query
+    pruned batch), and each query group goes through the pruning rules
+    above (:func:`phase0_theta`, :func:`blocks_kept`).  Dedup is per query
+    group, which is a full dedup because one query's rows are fully
+    co-located.
 
-    θ₀ = max over matched terms of the k-th largest per-(query, term) lb —
-    the k-th largest VALUE is tie-order independent, so np.lexsort + segment
-    ranks select exactly the lb the replica's np.partition selects, and the
-    skip predicate ``ub >= heap_factor × θ₀`` is the same IEEE-f64
-    comparison.  Queries with NO term reaching k blocks keep all their
-    blocks (θ₀ = −∞).  Dedup is per query group, which is a full dedup
-    because one query's rows are fully co-located.
-
-    ``two_phase`` also decodes the best-ub block of each (query, term) —
-    tie order (ub desc, salt asc, block asc), the replica's first argmax —
-    and emits, per (query, doc), ``theta0``, ``dub`` (the largest ub of the
-    doc's decoded blocks) and ``p1`` (whether one of them is a best block),
-    for :func:`_phase1_filter` after the exact-score pass.
+    ``two_phase`` also decodes each (query, term)'s best block
+    (:func:`_first_max`) and emits, per (query, doc), ``theta0``, ``dub``
+    (the largest ub of the doc's decoded blocks) and ``p1`` (whether one of
+    them is a best block), for :func:`_phase1_filter` after the exact-score
+    pass.
     """
     hf = float(heap_factor)
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame | None:
+        n = len(pdf)
         qids = pdf["query_id"].to_numpy()
-        g_starts = np.flatnonzero(np.concatenate(([True], qids[1:] != qids[:-1])))
-        g_lens = np.diff(np.concatenate((g_starts, [len(pdf)])))
+        new_q = np.concatenate(([True], qids[1:] != qids[:-1]))
+        g_starts = np.flatnonzero(new_q)
+        g_lens = np.diff(np.append(g_starts, n))
         q_of = np.repeat(np.arange(g_starts.size, dtype=np.int64), g_lens)
-        term = pdf["term_id"].to_numpy(dtype=np.int64)
-        ub = pdf["ub"].to_numpy(dtype=np.float64)
-        lb = pdf["lb"].to_numpy(dtype=np.float64)
-
-        # per-(query, term) k-th largest lb, maxed per query (θ phase 0)
-        order = np.lexsort((-lb, term, q_of))
-        qo, to, lbo = q_of[order], term[order], lb[order]
-        seg = np.concatenate(
-            ([True], (qo[1:] != qo[:-1]) | (to[1:] != to[:-1]))
+        # rows by (query, term, salt, block): the query groups stay where
+        # they are, and each (query, term) becomes one segment
+        order = np.lexsort((
+            pdf["block"].to_numpy(), pdf["salt"].to_numpy(),
+            pdf["term_id"].to_numpy(), q_of,
+        ))
+        term = pdf["term_id"].to_numpy(dtype=np.int64)[order]
+        ub = pdf["ub"].to_numpy(dtype=np.float64)[order]
+        seg = np.flatnonzero(
+            new_q | np.concatenate(([True], term[1:] != term[:-1]))
         )
-        seg_starts = np.flatnonzero(seg)
-        seg_lens = np.diff(np.concatenate((seg_starts, [lbo.size])))
-        rank = np.arange(lbo.size, dtype=np.int64) - np.repeat(
-            seg_starts, seg_lens
-        )
-        kth = rank == k - 1
-        theta = np.full(g_starts.size, -np.inf)
-        kq, kv = qo[kth], lbo[kth]
-        if kq.size:
-            gs = np.flatnonzero(np.concatenate(([True], kq[1:] != kq[:-1])))
-            theta[kq[gs]] = np.maximum.reduceat(kv, gs)
+        seg_lens = np.diff(np.append(seg, n))
+        g_seg = np.searchsorted(seg, g_starts)
+        qw = pdf["qw"].to_numpy(dtype=np.float64)[order][seg]
+        bmax = pdf["bmax"].to_numpy(dtype=np.float64)[order]
 
-        keep = np.ones(len(pdf), dtype=bool)
-        hasrow = theta[q_of] > -np.inf
-        keep[hasrow] = ub[hasrow] >= hf * theta[q_of][hasrow]
+        theta = np.empty(g_starts.size)
+        keep = np.empty(n, dtype=bool)
+        for g, (s0, s1, r0, r1) in enumerate(zip(
+            g_seg.tolist(), np.append(g_seg[1:], seg.size).tolist(),
+            g_starts.tolist(), np.append(g_starts[1:], n).tolist(),
+        )):
+            theta[g] = phase0_theta(qw[s0:s1], seg_lens[s0:s1], bmax,
+                                    slice(r0, r1), k)
+            keep[r0:r1] = blocks_kept(ub[r0:r1], hf, theta[g])
         if two_phase:
-            # best-ub block per (query, term): (ub desc, salt asc, block asc)
-            ob = np.lexsort((
-                pdf["block"].to_numpy(dtype=np.int64),
-                pdf["salt"].to_numpy(dtype=np.int64),
-                -ub, term, q_of,
-            ))
-            qb, tb = q_of[ob], term[ob]
-            best = np.zeros(len(pdf), dtype=bool)
-            best[ob[np.concatenate(
-                ([True], (qb[1:] != qb[:-1]) | (tb[1:] != tb[:-1]))
-            )]] = True
+            best = np.zeros(n, dtype=bool)
+            best[_first_max(ub, seg, seg_lens)] = True
             keep |= best
 
-        gaps_col = pdf["gaps"].to_numpy()
+        gaps_col = pdf["gaps"].to_numpy()[order]
         kept_idx = np.flatnonzero(keep)
         if kept_idx.size == 0:
             return None
@@ -583,7 +590,8 @@ def _fused_candidates(
                 yield out
 
     parted = (
-        ubs.select("query_id", "term_id", "salt", "block", "ub", "lb", "gaps")
+        ubs.select("query_id", "term_id", "salt", "block", "qw", "bmax", "ub",
+                   "gaps")
         .repartition("query_id")
         .sortWithinPartitions("query_id")
     )
@@ -682,8 +690,10 @@ def merge_sorted_terms(t, w) -> QVec:
     the summation order is a pure function of the (term, weight) multiset,
     so the merged float is reproducible regardless of input order.  Every
     caller that merges duplicate query terms MUST route through here
-    (_merge_dup_qvecs, resolve_queries, serving.ServingReplica._resolve) —
-    a divergent copy silently breaks the documented bitwise guarantees.
+    (_merge_dup_qvecs, resolve_queries, _query_keys — hence cut_terms,
+    _block_ubs and exact_score — and serving.ServingReplica._resolve) — a
+    divergent copy silently breaks the documented bitwise guarantees.
+    Terms may be ``row·2^32 + term_id`` keys (:func:`_query_keys`).
     """
     t = np.asarray(t, dtype=np.int64)
     w = np.asarray(w, dtype=np.float64)
@@ -712,6 +722,25 @@ def _merge_dup_qvecs(qvecs: dict[str, QVec]) -> dict[str, QVec]:
     return {qid: merge_sorted_terms(t, w) for qid, (t, w) in qvecs.items()}
 
 
+def resolve_two_phase(
+    config, heap_factor: float, two_phase: bool | None
+) -> bool:
+    """``two_phase``, or when None the default rule that
+    ``SeismicSparkIndex.batch_search`` documents: on when summaries are
+    estimates (summary_energy < 1, or quant_ceil off) or heap_factor < 1."""
+    if two_phase is not None:
+        return two_phase
+    return (config.summary_energy < 1.0 or not config.quant_ceil
+            or heap_factor < 1.0)
+
+
+def text_query(text: str) -> tuple[list[str], list[float]]:
+    """Free text → (tokens, weights): lowercased, split on spaces, each
+    distinct token weighted by its count, in first-occurrence order."""
+    counts = Counter(t for t in text.lower().split(" ") if t)
+    return list(counts), [float(v) for v in counts.values()]
+
+
 def batch_search(
     spark: SparkSession,
     postings: DataFrame,
@@ -729,7 +758,7 @@ def batch_search(
     broadcast) or a DataFrame with QUERIES_SCHEMA (bulk path, e.g. every doc
     as a query for κ-NN).  ``q_terms`` SHOULD be sorted ascending per row
     with distinct ids; unsorted rows are repaired batch-side and duplicate
-    ids merged by weight sum (see _repair_qkey).  Returns (query_id, rank,
+    ids merged by weight sum (see _query_keys).  Returns (query_id, rank,
     doc_id, score); no driver-side loops or mid-plan actions.
 
     Both phases and both query shapes run one formulation: block-UB scan →

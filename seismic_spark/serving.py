@@ -16,11 +16,11 @@ interactive batches with pure numpy — **bit-identical results** to
 cannot reach.  The float parity is not best-effort: every upper bound and
 every exact score is a `codec.segment_sums` (np.add.reduceat) over the same
 f64 contribution arrays the executors build (search.py `_block_ubs` /
-`exact_score`), θ is selected by comparisons over the same f64 values the
-Spark plan aggregates, and the skip predicate `ub >= heap_factor·θ` is the
-same IEEE f64 comparison — so the survivor set, candidate set, and
-every score agree bitwise (pinned by tests/test_serving.py at exact AND
-approximate configs, including post-save/load hydration).
+`exact_score`), and the pruning rules — θ₀, the skip, the best block — are
+search.py's own functions, which the Spark operator calls too.  So the
+survivor set, candidate set, and every score agree bitwise (pinned by
+tests/test_serving.py at exact AND approximate configs, including
+post-save/load hydration).
 
 The replica holds the index as a fixed set of flat numpy arrays, the
 reference's own array-resident layout: term → postings-row → block ranges
@@ -49,21 +49,13 @@ import pandas as pd
 
 from seismic_spark import codec
 from seismic_spark import search as srch
+from seismic_spark.search import (
+    _first_max, _gather_qw, blocks_kept, phase0_theta,
+)
 
 __all__ = ["ServingReplica"]
 
 _log = logging.getLogger(__name__)
-
-
-def _gather_qw(qt: np.ndarray, qw: np.ndarray, terms: np.ndarray) -> np.ndarray:
-    """Per-element query weight, 0.0 at misses — single-query twin of
-    search._gather_qw (same searchsorted/clip/where construction)."""
-    if terms.size == 0:
-        return np.empty(0, dtype=np.float64)
-    idx = np.searchsorted(qt, terms)
-    idx_c = np.minimum(idx, max(qt.size - 1, 0))
-    hit = (qt[idx_c] == terms) if qt.size else np.zeros(terms.size, dtype=bool)
-    return np.where(hit, qw[idx_c] if qw.size else 0.0, 0.0)
 
 
 def _flat_slices(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -73,16 +65,6 @@ def _flat_slices(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
         return np.empty(0, dtype=np.int64)
     offsets = np.cumsum(lens) - lens
     return np.arange(total, dtype=np.int64) + np.repeat(starts - offsets, lens)
-
-
-def _first_max(x: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Index into ``x`` of the first maximum of each non-empty segment
-    [starts_i, starts_i+lens_i) — np.argmax's tie order, from one segment
-    max.  The segments must tile ``x`` in order (starts = cumsum - lens)."""
-    nz = lens > 0
-    starts = starts[nz]
-    at = (x == np.maximum.reduceat(x, starts).repeat(lens[nz])).nonzero()[0]
-    return at[at.searchsorted(starts)]
 
 
 def _list_flat(col) -> tuple:
@@ -237,11 +219,11 @@ class ServingReplica:
         self.fwd_lens = fwd_lens
         self.fwd_terms = fwd_terms
         self.fwd_weights = fwd_weights
-        # per-query dense weight table (r6, VERDICT #4): batch_search
-        # scatters the CURRENT query's ~10 weights into it before the UB /
-        # rescore gathers and zeroes them after, so every per-element
-        # query-weight lookup is ONE fancy-index gather instead of a
-        # 4-pass searchsorted/clip/eq/where — the same value (stored
+        # per-query dense weight table (r6, VERDICT #4): _search_resolved
+        # and bruteforce scatter the CURRENT query's ~10 weights into it
+        # before the UB / rescore gathers and zero them after, so every
+        # per-element query-weight lookup is ONE fancy-index gather instead
+        # of a 4-pass searchsorted/clip/eq/where — the same value (stored
         # weight at hits, 0.0 at misses), so floats are unchanged.  All
         # gathered id spaces (summary terms, forward terms ⊆ corpus
         # components; query ids ⊆ vocab ids) are covered by dim.  `_lut()`
@@ -409,7 +391,7 @@ class ServingReplica:
         each doc's float is bitwise the executor's.  ``pos`` is forward
         POSITIONS (see ``m_pos``) — a direct index, no per-call
         searchsorted over the corpus id array.  When the weight LUT is
-        active, batch_search has already scattered THIS query's weights
+        active, the caller has already scattered THIS query's weights
         into it (same value as the searchsorted gather)."""
         lens = self.fwd_lens[pos]
         ends = np.cumsum(lens)
@@ -490,22 +472,12 @@ class ServingReplica:
         if stats is not None:
             stats[0] += ub.size
 
-        # phase 0: per term, the k-th largest block-max lower bound
-        theta = -np.inf
-        nl = nbt.tolist()
-        if max(nl) >= k:
-            lb = np.repeat(cw, nbt) * self.bmax[blk]
-            for o, n in zip(offs.tolist(), nl):
-                if n >= k:
-                    kth = float(np.partition(lb[o:o + n], n - k)[n - k])
-                    if kth > theta:
-                        theta = kth
+        theta = phase0_theta(cw, nbt, self.bmax, blk, k)
 
         p1_docs = None
         if two_phase:
-            # phase 1: best-UB block per matched term (first argmax =
-            # lowest (salt, block), matching the engine's tie order),
-            # exact-score the union, k-th best tightens θ
+            # phase 1: best-UB block per matched term, exact-score the
+            # union, k-th best tightens θ
             best = blk[_first_max(ub, offs, nbt)]
             p1 = np.unique(
                 self.m_pos[_flat_slices(self.m_starts[best], self.m_lens[best])]
@@ -519,11 +491,7 @@ class ServingReplica:
                     if kth > theta:
                         theta = kth
 
-        keep = (
-            ub >= heap_factor * theta
-            if theta != -np.inf
-            else np.ones(ub.size, dtype=bool)
-        )
+        keep = blocks_kept(ub, heap_factor, theta)
         if stats is not None:
             stats[1] += int(keep.sum())
         if not keep.any():
@@ -569,7 +537,7 @@ class ServingReplica:
         skip predicate, same rescore floats, same (score desc, doc_id asc)
         tie order).  Size-gated `SeismicSparkIndex.batch_search` answers
         through here."""
-        two_phase = self._two_phase(heap_factor, two_phase)
+        two_phase = srch.resolve_two_phase(self.config, heap_factor, two_phase)
         hits = []
         for qid, qt, qw in self._resolved_queries(queries):
             hit = self._search_resolved(qt, qw, k, query_cut, heap_factor,
@@ -686,18 +654,9 @@ class ServingReplica:
         resolved = self._resolve(terms, weights)
         hit = None if resolved is None else self._search_resolved(
             *resolved, k, query_cut, heap_factor,
-            self._two_phase(heap_factor, two_phase),
+            srch.resolve_two_phase(self.config, heap_factor, two_phase),
         )
         return self._results_frame([] if hit is None else [(query_id, *hit)])
-
-    def _two_phase(self, heap_factor: float, two_phase: bool | None) -> bool:
-        """``two_phase``, or when None the default rule of
-        SeismicSparkIndex.batch_search."""
-        if two_phase is not None:
-            return two_phase
-        cfg = self.config
-        return (cfg.summary_energy < 1.0 or not cfg.quant_ceil
-                or heap_factor < 1.0)
 
     def search_text(
         self,
@@ -708,11 +667,7 @@ class ServingReplica:
         heap_factor: float = 1.0,
         two_phase: bool | None = None,
     ) -> pd.DataFrame:
-        """Free-text query, same query-side weighting as the index's
-        search_text (token counts; resolution drops unknowns)."""
-        toks = [t for t in text.lower().split(" ") if t]
-        from collections import Counter
-
-        c = Counter(toks)
-        return self.search(query_id, list(c), [float(v) for v in c.values()],
-                           k, query_cut, heap_factor, two_phase)
+        """Free-text query, weighted as the index's search_text weights it
+        (:func:`search.text_query`; resolution drops unknowns)."""
+        return self.search(query_id, *srch.text_query(text), k, query_cut,
+                           heap_factor, two_phase)

@@ -154,3 +154,61 @@ def test_index_wrapper_auto_fast_path_matches_inplan(spark, idx_est):
         ).collect()
     )
     assert via_idx == inplan
+
+
+def test_phase0_theta_matches_sorted_reference():
+    """θ₀ is the max over terms of the k-th largest ``qw_t × bmax`` of the
+    term's blocks (−∞ when no term has k blocks): equal to a per-segment
+    sort, with ``bmax[at]`` given as a fancy index and as a slice."""
+    rng = np.random.default_rng(12)
+    for _ in range(400):
+        k = int(rng.integers(1, 6))
+        # empty segments, and three value levels so ties are everywhere
+        lens = rng.integers(0, 9, size=int(rng.integers(1, 8)))
+        bmax = rng.integers(1, 4, size=int(lens.sum())) * 0.25
+        qw = rng.integers(1, 3, size=lens.size) * 0.5
+        lb = np.repeat(qw, lens) * bmax
+        starts = np.cumsum(lens) - lens
+        want = max(
+            [sorted(lb[s:s + n], reverse=True)[k - 1]
+             for s, n in zip(starts, lens) if n >= k],
+            default=-np.inf,
+        )
+        perm = rng.permutation(bmax.size)
+        scattered = np.empty_like(bmax)
+        scattered[perm] = bmax
+        assert srch.phase0_theta(qw, lens, scattered, perm, k) == want
+        padded = np.concatenate(([9.0], bmax, [9.0]))
+        at = slice(1, 1 + bmax.size)
+        assert srch.phase0_theta(qw, lens, padded, at, k) == want
+
+
+def test_blocks_kept_without_bound_keeps_every_block():
+    """With no bound (θ = −∞) every block is kept, heap_factor 0 included
+    (0·−∞ is NaN); with a bound the skip is ``ub >= hf·θ``."""
+    ub = np.array([-1.0, 0.0, 0.5, 2.0])
+    for hf in (0.0, 0.7, 1.0):
+        assert srch.blocks_kept(ub, hf, -np.inf).all()
+        assert srch.blocks_kept(ub, hf, 1.0).tolist() == (ub >= hf).tolist()
+    assert srch.blocks_kept(np.empty(0), 0.0, -np.inf).size == 0
+
+
+def test_dataframe_query_repeating_a_term_matches_replica(spark, idx_est):
+    """A QUERIES_SCHEMA frame repeating a term three times, unsorted: the
+    Spark path merges the weights (0.3, 0.1, 0.7) once, as the replica
+    does, so every bound and score is bitwise the replica's (summed in
+    input order they give 1.0999999999999999, sorted 1.1)."""
+    rep = idx_est.serving_replica()
+    tokens = ["term_3", "term_17", "term_3", "term_3"]
+    weights = [0.3, 0.5, 0.1, 0.7]
+    ids = [rep.vocab[t] for t in tokens]
+    qdf = spark.createDataFrame(
+        [("qd", ids, weights)], srch.QUERIES_SCHEMA
+    )
+    kw = dict(k=10, query_cut=5, heap_factor=0.8, two_phase=False)
+    got = _key(srch.batch_search(
+        spark, idx_est.postings, idx_est.forward, qdf, **kw
+    ).collect())
+    want = _key(rep.batch_search([("qd", tokens, weights)], **kw)
+                .itertuples(index=False))
+    assert got == want and got

@@ -250,6 +250,22 @@ def test_first_max_matches_per_segment_argmax():
         want = [int(s) + int(np.argmax(x[s:s + n]))
                 for s, n in zip(starts, lens) if n]
         assert _first_max(x, starts, lens).tolist() == want
+    # the Spark operator's layout: several queries' (query, term) segments
+    # tiled into one array, answered by one call
+    layouts = [rng.integers(0, 6, size=rng.integers(1, 6)) for _ in range(40)]
+    lens = np.concatenate(layouts)
+    starts = np.cumsum(lens) - lens
+    x = rng.integers(0, 3, size=int(lens.sum())) * 0.1
+    got = _first_max(x, starts, lens)
+    assert got.tolist() == [int(s) + int(np.argmax(x[s:s + n]))
+                            for s, n in zip(starts, lens) if n]
+    per_query, base = [], 0
+    for q in layouts:
+        n = int(q.sum())
+        per_query += (base + _first_max(x[base:base + n],
+                                        np.cumsum(q) - q, q)).tolist()
+        base += n
+    assert got.tolist() == per_query
 
 
 def test_replica_from_saved_index(spark, corpus, tmp_path):
