@@ -274,7 +274,8 @@ def phase0_theta(
     qw_t × bmax_b and one list's blocks hold distinct docs, so the k-th
     largest such product lower-bounds the k-th best score.  θ₀ is its max
     over the terms, −∞ when no term has k blocks (``bmax`` is then not
-    read)."""
+    read).  The Spark operator passes :func:`_block_ubs`'s ``lb`` products
+    as ``bmax``, with weights 1.0."""
     theta = -np.inf
     nl = lens.tolist()
     if max(nl, default=0) >= k:
@@ -401,8 +402,8 @@ def topk(scored: DataFrame, k: int) -> DataFrame:
 
 
 def _block_ubs(postings_matched: DataFrame) -> DataFrame:
-    """Per (query, posting-row, block): the term's cut weight, the block
-    max, the summary upper-bound dot (Q2), and the block's encoded doc ids.
+    """Per (query, posting-row, block): summary upper-bound dot (Q2), the
+    block-max lower bound, and the block's encoded doc ids.
 
     Fully vectorized per Arrow batch: all blocks of all rows are flattened
     into concatenated summary-element arrays; one searchsorted resolves every
@@ -410,8 +411,8 @@ def _block_ubs(postings_matched: DataFrame) -> DataFrame:
     per-block Python math.
     """
     out_schema = (
-        "query_id STRING, term_id INT, salt INT, block INT, qw DOUBLE, "
-        "bmax FLOAT, ub DOUBLE, gaps BINARY"
+        "query_id STRING, term_id INT, salt INT, block INT, ub DOUBLE, "
+        "lb DOUBLE, gaps BINARY"
     )
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -422,7 +423,7 @@ def _block_ubs(postings_matched: DataFrame) -> DataFrame:
         # (summary lists per block per row); flatten()/list_value_length are
         # O(1) buffer views and the gap blobs pass through as one untouched
         # Arrow binary column.  All float math is unchanged dtype-for-dtype,
-        # so every ub is bitwise identical to the pandas formulation.
+        # so every ub/lb is bitwise identical to the pandas formulation.
         for rb in it:
             nrow = rb.num_rows
             if nrow == 0:
@@ -433,6 +434,14 @@ def _block_ubs(postings_matched: DataFrame) -> DataFrame:
             # ---- block level -------------------------------------------
             nb = pc.list_value_length(cols["blocks"]).to_numpy().astype(np.int64)
             row_of_block = np.repeat(np.arange(nrow, dtype=np.int64), nb)
+            blocks_flat = cols["blocks"].flatten()
+            bmax_all = (
+                cols["block_max"].flatten()
+                .to_numpy(zero_copy_only=False)
+                .astype(np.float64)
+            )
+            qw_row = cols["qw"].to_numpy(zero_copy_only=False)
+            lb = qw_row[row_of_block] * bmax_all
 
             # ---- summary-element level ----------------------------------
             st_inner = cols["summary_terms"].flatten()  # list<int> per block
@@ -462,15 +471,13 @@ def _block_ubs(postings_matched: DataFrame) -> DataFrame:
                 pc.take(cols["query_id"], idx),
                 pc.take(cols["term_id"], idx),
                 pc.take(cols["salt"], idx),
-                cols["blocks"].flatten(),
-                pc.take(cols["qw"], idx),
-                cols["block_max"].flatten(),
+                blocks_flat,
                 pa.array(ub),
+                pa.array(lb),
                 cols["doc_gaps"].flatten(),
             ]
             names = [
-                "query_id", "term_id", "salt", "block", "qw", "bmax", "ub",
-                "gaps",
+                "query_id", "term_id", "salt", "block", "ub", "lb", "gaps",
             ]
             yield pa.RecordBatch.from_arrays(arrays, names)
 
@@ -526,8 +533,11 @@ def _fused_candidates(
         )
         seg_lens = np.diff(np.append(seg, n))
         g_seg = np.searchsorted(seg, g_starts)
-        qw = pdf["qw"].to_numpy(dtype=np.float64)[order][seg]
-        bmax = pdf["bmax"].to_numpy(dtype=np.float64)[order]
+        lb = pdf["lb"].to_numpy(dtype=np.float64)[order]
+        # _block_ubs already multiplied the cut weights in (one lb column
+        # keeps the exchanged rows narrower than qw + bmax), so each term
+        # weighs 1.0 here, which leaves every product bitwise as it is
+        one = np.ones(seg.size)
 
         theta = np.empty(g_starts.size)
         keep = np.empty(n, dtype=bool)
@@ -535,7 +545,7 @@ def _fused_candidates(
             g_seg.tolist(), np.append(g_seg[1:], seg.size).tolist(),
             g_starts.tolist(), np.append(g_starts[1:], n).tolist(),
         )):
-            theta[g] = phase0_theta(qw[s0:s1], seg_lens[s0:s1], bmax,
+            theta[g] = phase0_theta(one[s0:s1], seg_lens[s0:s1], lb,
                                     slice(r0, r1), k)
             keep[r0:r1] = blocks_kept(ub[r0:r1], hf, theta[g])
         if two_phase:
@@ -590,8 +600,7 @@ def _fused_candidates(
                 yield out
 
     parted = (
-        ubs.select("query_id", "term_id", "salt", "block", "qw", "bmax", "ub",
-                   "gaps")
+        ubs.select("query_id", "term_id", "salt", "block", "ub", "lb", "gaps")
         .repartition("query_id")
         .sortWithinPartitions("query_id")
     )
