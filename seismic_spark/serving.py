@@ -26,7 +26,19 @@ The replica holds the index as a fixed set of flat numpy arrays, the
 reference's own array-resident layout: term → postings-row → block ranges
 over element arrays left in snapshot order (the layout is documented on
 `ServingReplica`).  No per-term Python object exists, so hydration has no
-loop over terms and default pickling ships the arrays as they are.
+loop over terms and pickling ships the arrays as they are.
+
+Block upper bounds come from the query's own summary entries when the
+matched lists are long, as the reference scores summaries component by
+component (`QuantizedSummary::distances`, quantized_summary.rs:64-160).
+On first use the replica inverts the summaries into a component index
+keyed by (postings row, component), and a query probes it only with
+(matched row, query term) pairs.  A block whose summary holds m ≤ 2 query
+components gets exactly the float the dense `segment_sums` gives: every
+skipped product is ±0, and adding ±0 is exact, so the sum is ±0, a or a + b
+in any association (and −0.0 == 0.0 in every comparison a bound feeds).
+Blocks with m ≥ 3, and queries whose rows hold few elements per probe,
+take the dense scan (`ServingReplica._summary_ubs`).
 
 Deployment shape at scale (the 100 TB story): one replica per serving host,
 hydrated from the shared index tables on storage — the same snapshot the
@@ -56,6 +68,14 @@ from seismic_spark.search import (
 __all__ = ["ServingReplica"]
 
 _log = logging.getLogger(__name__)
+
+# ServingReplica's component index before `_hit_index` builds it
+_NO_HIT_INDEX = {
+    "_hit_keys": np.empty(0, dtype=np.int64),
+    "_hit_blocks": np.empty(0, dtype=np.int32),
+    "_hit_vals": np.empty(0, dtype=np.float32),
+    "_block_s_start": np.empty(0, dtype=np.int64),
+}
 
 
 def _flat_slices(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -163,14 +183,34 @@ class ServingReplica:
       CSR directly instead of a per-candidate searchsorted over the corpus
       id array (~0.2 ms/query at 1M docs).
 
-    Default pickling ships these arrays as they are (the κ-NN broadcast,
-    knn._replica_self_search).
+    The summaries' component index, built by :meth:`_hit_index` on the
+    first query that takes the hit route (:meth:`_summary_ubs`), and empty
+    until then:
+
+    - per summary element, sorted by (row, component): ``_hit_keys`` int64
+      ``row << 32 | component``, ``_hit_blocks`` int32 its block and
+      ``_hit_vals`` f32 its value — 16 B per element, about 36 MB on
+      the benchmark shard's 2.3M elements;
+    - per block: ``_block_s_start`` int64, its first element in
+      ``s_terms``/``s_vals``, for the blocks summed densely.
+
+    A block with m ≤ 2 hits sums to the dense route's float, since every
+    product it skips is ±0 (see the module docstring).
+
+    Pickling (the κ-NN broadcast, knn._replica_self_search) ships the
+    arrays above as they are and leaves out the query-weight LUT and the
+    component index, so a receiver builds its own.
     """
 
     # Dense query-weight LUT gate: one f64 slot per component id (32 MB at
     # the 4M default).  Larger id spaces fall back to the searchsorted
     # gather — value-identical either way.
     _LUT_MAX_DIM = 1 << 22
+    # Block-UB route (`_summary_ubs`): the component index answers a query
+    # whose matched rows hold at least this many summary elements per
+    # (row, query term) probe, the dense scan any other.  The floats are
+    # the same either way; 0 forces the hit route and inf the dense one.
+    _HITS_MIN_PER_PROBE = 200
 
     def __init__(
         self,
@@ -234,11 +274,15 @@ class ServingReplica:
             dim = max(dim, max(vocab.values()) + 1)
         self._lut_dim = dim if dim <= self._LUT_MAX_DIM else 0
         self._qw_lut = None
+        # the summaries' component index (`_hit_index`), built by the first
+        # query that takes the hit route
+        self.__dict__.update(_NO_HIT_INDEX)
 
     def __getstate__(self) -> dict:
-        # the LUT is all zeros between queries: a pickle (the κ-NN
-        # broadcast) leaves it out and the receiver allocates its own
-        return {**self.__dict__, "_qw_lut": None}
+        # the LUT is all zeros between queries, and the component index is
+        # rebuilt from the arrays: a pickle (the κ-NN broadcast) leaves both
+        # out, and the receiver makes its own on first use
+        return {**self.__dict__, "_qw_lut": None, **_NO_HIT_INDEX}
 
     def _lut(self) -> np.ndarray | None:
         """The dense query-weight LUT (allocated here on first use), or
@@ -407,6 +451,100 @@ class ServingReplica:
         contrib *= self.fwd_weights[flat]
         return codec.segment_sums(contrib, offsets, lens)
 
+    def _hit_index(self) -> None:
+        """Build the summaries' component index, the replica's copy of the
+        per-list inverted map in Seismic's `QuantizedSummary`
+        (quantized_summary.rs:14-24): one entry per summary element, sorted
+        by ``row << 32 | component`` (``_hit_keys`` int64), holding its
+        block (``_hit_blocks`` int32) and value (``_hit_vals``, the f32 the
+        f64 ``s_vals`` widen exactly) — 16 B per element — plus each
+        block's first element in ``s_terms``/``s_vals``
+        (``_block_s_start``)."""
+        nb = np.diff(self.row_blocks)
+        blk_row = np.repeat(np.arange(nb.size), nb)
+        # a row's blocks hold its summary elements consecutively, in order
+        cs = np.concatenate(([0], np.cumsum(self.s_lens)))
+        s_start = (self.row_s_start[blk_row] + cs[:-1]
+                   - cs[self.row_blocks[:-1]][blk_row])
+        by_start = np.argsort(s_start, kind="stable")
+        # every element's block, in snapshot order
+        e_blk = np.repeat(by_start.astype(np.int32), self.s_lens[by_start])
+        key = blk_row[e_blk] << 32
+        key |= self.s_terms
+        order = np.argsort(key, kind="stable")
+        self._hit_blocks = e_blk[order]
+        del e_blk
+        self._hit_vals = self.s_vals.astype(np.float32)[order]
+        self._hit_keys = key[order]
+        self._block_s_start = s_start
+
+    def _summary_ubs(
+        self,
+        qt: np.ndarray,
+        qw: np.ndarray,
+        lut: np.ndarray | None,
+        rows: np.ndarray,
+        blk: np.ndarray,
+    ) -> np.ndarray:
+        """Summary upper bound of each matched block ``blk`` (the blocks of
+        postings rows ``rows``, in order): the `codec.segment_sums` of its
+        elements' products (query weight of the component × value) in
+        snapshot order, as the executors' `_block_ubs` forms it.
+
+        Two routes give the same floats.  The dense route forms every
+        element's product.  When the rows hold at least
+        `_HITS_MIN_PER_PROBE` elements per (row, query term) probe, the hit
+        route looks the probes up in the component index instead, as
+        `QuantizedSummary::distances` walks only the query's components
+        (quantized_summary.rs:64-160).  Every product it skips is ±0, and
+        adding ±0 to a number is exact, so a block with m ≤ 2 hits sums to
+        exactly ±0, a or a + b, whatever association reduceat uses; the
+        UBs only feed comparisons, where −0.0 == 0.0.  Blocks with m ≥ 3
+        hits are summed densely."""
+        starts = self.row_s_start[rows].tolist()
+        stops = self.row_s_stop[rows].tolist()
+        if sum(stops) - sum(starts) < (self._HITS_MIN_PER_PROBE
+                                       * rows.size * qt.size):
+            # the rows' elements are gathered by concatenating each row's
+            # slice (a fancy-index gather over them measured 0.34 ms/query)
+            spans = list(zip(starts, stops))
+            return self._dense_ubs(
+                qt, qw, lut,
+                np.concatenate([self.s_terms[a:b] for a, b in spans]),
+                np.concatenate([self.s_vals[a:b] for a, b in spans]),
+                self.s_lens[blk],
+            )
+        if self._block_s_start.size == 0:
+            self._hit_index()
+        probes = ((rows << 32)[:, None] | qt).ravel()
+        lo = self._hit_keys.searchsorted(probes)
+        n = self._hit_keys.searchsorted(probes, "right") - lo
+        at = _flat_slices(lo, n)
+        # block b of row rows[i] is at b + shift[i] in `blk`
+        nb = self.row_blocks[rows + 1] - self.row_blocks[rows]
+        shift = np.cumsum(nb) - nb - self.row_blocks[rows]
+        pos = self._hit_blocks[at] + np.repeat(np.repeat(shift, qt.size), n)
+        prod = np.repeat(np.tile(qw, rows.size), n) * self._hit_vals[at]
+        # bincount adds each block's hits in order onto 0.0
+        ub = np.bincount(pos, prod, minlength=blk.size)
+        multi = np.flatnonzero(np.bincount(pos, minlength=blk.size) > 2)
+        if multi.size:
+            b = blk[multi]
+            el = _flat_slices(self._block_s_start[b], self.s_lens[b])
+            ub[multi] = self._dense_ubs(qt, qw, lut, self.s_terms[el],
+                                        self.s_vals[el], self.s_lens[b])
+        return ub
+
+    @staticmethod
+    def _dense_ubs(qt, qw, lut, s_terms, s_vals, lens) -> np.ndarray:
+        """Segment sums of (query weight × value) over summary elements laid
+        out block after block with ``lens`` elements each.  segment_sums
+        is a pure function of each segment, so every float is bitwise the
+        per-term formulation's."""
+        prod = lut[s_terms] if lut is not None else _gather_qw(qt, qw, s_terms)
+        prod *= s_vals
+        return codec.segment_sums(prod, np.cumsum(lens) - lens, lens)
+
     def _search_resolved(
         self,
         qt: np.ndarray,
@@ -453,22 +591,7 @@ class ServingReplica:
         rows = (rows0 if int(nrows.sum()) == nrows.size
                 else _flat_slices(rows0, nrows))
 
-        # per-block summary UBs: the summary elements are gathered by
-        # concatenating each row's slice (a fancy-index gather over them
-        # measured 0.34 ms/query), then ONE gather + segment-sums call over
-        # every matched block.  segment_sums is a pure function of each
-        # segment, so every ub float is bitwise the per-term formulation's.
-        spans = list(zip(self.row_s_start[rows].tolist(),
-                         self.row_s_stop[rows].tolist()))
-        st_cat = np.concatenate([self.s_terms[a:b] for a, b in spans])
-        sv_cat = np.concatenate([self.s_vals[a:b] for a, b in spans])
-        lens_cat = self.s_lens[blk]
-        if lut is not None:
-            prod = lut[st_cat]
-        else:
-            prod = _gather_qw(qt, qw, st_cat)
-        prod *= sv_cat
-        ub = codec.segment_sums(prod, np.cumsum(lens_cat) - lens_cat, lens_cat)
+        ub = self._summary_ubs(qt, qw, lut, rows, blk)
         if stats is not None:
             stats[0] += ub.size
 
