@@ -125,6 +125,7 @@ class CheckpointedBuild:
         id_col: str,
         n_batches: int,
         base_fp: str,
+        n_docs: int,
     ) -> DataFrame:
         """`batched_indexing` analogue (pylib/mod.rs:327-384): build postings
         in term-range waves, each written + lineage-tracked independently, so
@@ -172,7 +173,8 @@ class CheckpointedBuild:
                 cut_computed = True
             wave_dtw = dtw.filter(F.pmod(F.col("term_id"), F.lit(n_batches)) == w)
             pst.build_postings(
-                wave_dtw, forward, cfg, n_terms, id_col, global_cut=global_cut
+                wave_dtw, forward, cfg, n_terms, id_col, global_cut=global_cut,
+                n_docs=n_docs,
             ).write.mode("overwrite").parquet(wave_dir)
             self.lineage[stage] = {
                 "status": "complete",
@@ -238,14 +240,7 @@ class CheckpointedBuild:
             )
             # same value-storage round-trip as the direct build path
             # (index.py) — a checkpointed build must not diverge from it
-            if cfg.value_type not in ("f64", None):
-                scale_max = None
-                if cfg.value_type in ("fixedu8", "fixedu16"):
-                    scale_max = float(
-                        dtw.agg(F.max("weight")).collect()[0][0] or 0.0
-                    )
-                dtw = textprep.value_round_trip_col(dtw, cfg.value_type, scale_max)
-            return dtw
+            return textprep.value_round_trip_col(dtw, cfg.value_type)
 
         dtw = self._run_stage("weights", base_fp, _weights)
         forward = self._run_stage(
@@ -253,13 +248,15 @@ class CheckpointedBuild:
         )
         if batched_indexing and batched_indexing > 1:
             postings = self._run_postings_batched(
-                dtw, forward, cfg, n_terms, id_col, batched_indexing, base_fp
+                dtw, forward, cfg, n_terms, id_col, batched_indexing, base_fp,
+                n_docs,
             )
         else:
             postings = self._run_stage(
                 "postings",
                 base_fp,
-                lambda: pst.build_postings(dtw, forward, cfg, n_terms, id_col),
+                lambda: pst.build_postings(dtw, forward, cfg, n_terms, id_col,
+                                           n_docs=n_docs),
             )
 
         self.metrics["total_sec"] = round(time.time() - t_start, 2)

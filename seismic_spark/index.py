@@ -27,16 +27,14 @@ from seismic_spark.postings import IndexConfig
 
 _log = logging.getLogger(__name__)
 
-# In-process gate: an index whose forward table fits this byte budget
-# (est. n_docs·avgdl·16 B) answers batch_search, bruteforce and build_knn
-# from its one cached ServingReplica — the reference's own in-process
-# architecture (inverted_index.rs:38), applied when one process holds the
-# corpus.  Above the cap nothing is hydrated and the Spark formulations run
-# unchanged, so the gate is scale-safe.  avgdl counts TOKENS, so for
-# tokenized corpora the estimate overshoots true forward bytes ~5–10×.
-_LOCAL_SCORE_MAX_BYTES = int(
-    os.environ.get("SEISMIC_LOCAL_SCORE_MAX_BYTES", str(384 << 20))
-)
+# In-process gate: an index whose replica is predicted at or under this
+# many bytes (ServingReplica.predicted_nbytes of its space_usage())
+# answers batch_search, bruteforce and build_knn from its one cached
+# ServingReplica — the reference's own in-process architecture
+# (inverted_index.rs:38), applied when one process holds the corpus.
+# Above it nothing is hydrated and the Spark formulations run unchanged,
+# so the gate is scale-safe.
+_LOCAL_SCORE_MAX_BYTES = 384 << 20
 
 _RESULTS_SCHEMA = "query_id STRING, rank INT, doc_id BIGINT, score DOUBLE"
 
@@ -252,15 +250,8 @@ class SeismicSparkIndex:
                 missing_tokens,
             )
         dtw = textprep.bm25_weights(tf_df, vocab, n_docs, avgdl, id_col)
-        if cfg.value_type not in ("f64", None):
-            scale_max = None
-            if cfg.value_type in ("fixedu8", "fixedu16"):
-                scale_max = float(
-                    dtw.agg(F.max("weight")).collect()[0][0] or 0.0
-                )
-            dtw = textprep.value_round_trip_col(dtw, cfg.value_type, scale_max)
         # persist: consumed twice (forward build + pruning windows)
-        dtw = dtw.persist()
+        dtw = textprep.value_round_trip_col(dtw, cfg.value_type).persist()
         forward = fwd.build_forward(dtw, id_col).persist()
         if with_postings:
             postings = pst.build_postings(
@@ -423,12 +414,7 @@ class SeismicSparkIndex:
             F.count(F.lit(1)).alias("n"), F.avg(F.size("terms")).alias("a")
         ).collect()[0]
         n_docs, avgdl = int(row["n"]), row["a"] or 0.0
-        if cfg.value_type not in ("f64", None):
-            scale_max = None
-            if cfg.value_type in ("fixedu8", "fixedu16"):
-                scale_max = float(dtw.agg(F.max("weight")).collect()[0][0] or 0.0)
-            dtw = textprep.value_round_trip_col(dtw, cfg.value_type, scale_max)
-        dtw = dtw.persist()
+        dtw = textprep.value_round_trip_col(dtw, cfg.value_type).persist()
         forward = fwd.build_forward(dtw).persist()
         if with_postings:
             postings = pst.build_postings(dtw, forward, cfg, n_terms, n_docs=n_docs)
@@ -579,31 +565,34 @@ class SeismicSparkIndex:
         in-process).
 
         Hydrated once per index instance and cached: later calls re-check
-        `space_usage()` against ``max_bytes`` and return the same object,
-        the one size-gated `batch_search`, `bruteforce` and `build_knn`
-        answer from.  Its answers are bit-identical to the Spark
-        formulations (tests/test_serving.py).  Raises ``MemoryError`` when
-        `space_usage()` exceeds ``max_bytes`` — shard the corpus at build
-        time for indexes beyond one host (doc-disjoint top-k merges
-        exactly)."""
-        from seismic_spark.serving import ServingReplica, check_budget
+        the budget and return the same object, the one size-gated
+        `batch_search`, `bruteforce` and `build_knn` answer from.  Its
+        answers are bit-identical to the Spark formulations
+        (tests/test_serving.py).  Raises ``MemoryError`` when its predicted
+        size (`ServingReplica.predicted_nbytes`) exceeds ``max_bytes`` —
+        shard the corpus at build time for indexes beyond one host
+        (doc-disjoint top-k merges exactly)."""
+        from seismic_spark.serving import ServingReplica
 
         if self._replica is None:
             self._replica = ServingReplica.from_index(self, max_bytes=max_bytes)
         else:
-            check_budget(self, max_bytes)
+            ServingReplica.check_fits(self, max_bytes)
         return self._replica
 
     def _in_process_replica(self):
         """THE in-process-versus-Spark decision behind `batch_search`,
-        `bruteforce` and `build_knn`: the cached replica when the index is
-        under ``_LOCAL_SCORE_MAX_BYTES``, else None ("use Spark").  A
-        hydration that raises ``MemoryError`` is logged and answered by
-        Spark instead."""
-        est = int(self.n_docs * max(float(self.avgdl), 1.0) * 16)
+        `bruteforce` and `build_knn`: the cached replica when its predicted
+        size is at most ``_LOCAL_SCORE_MAX_BYTES``, else None ("use
+        Spark").  A hydration that raises ``MemoryError`` is logged and
+        answered by Spark instead."""
+        from seismic_spark.serving import ServingReplica
+
         # the slot, not the property: an unplanned table stays unplanned
-        if (self._tables["postings"] is None
-                or not 0 < est <= _LOCAL_SCORE_MAX_BYTES):
+        if self._tables["postings"] is None or not self.n_docs:
+            return None
+        size = ServingReplica.predicted_nbytes(self.space_usage(), self.n_docs)
+        if size > _LOCAL_SCORE_MAX_BYTES:
             return None
         try:
             return self.serving_replica()
@@ -729,10 +718,7 @@ class SeismicSparkIndex:
             F.col("z.terms").alias("term_id"),
             F.col("z.weights").alias("weight"),
         )
-        scale_max = None
-        if value_type in ("fixedu8", "fixedu16"):
-            scale_max = float(dtw.agg(F.max("weight")).collect()[0][0] or 0.0)
-        dtw = textprep.value_round_trip_col(dtw, value_type, scale_max).persist()
+        dtw = textprep.value_round_trip_col(dtw, value_type).persist()
         cfg = replace(self.config, value_type=value_type)
         n_terms = self.vocab.count() if cfg.pruning == "global" else 0
         forward = fwd_mod.build_forward(dtw).persist()

@@ -48,8 +48,9 @@ replicas.  A corpus too large for one host is doc-sharded at BUILD time
 (build one index per doc shard; top-k over doc-disjoint shards merges
 exactly by (score desc, doc_id asc) — the standard search-tier layout), so
 the replica's memory bound composes horizontally.  `from_index` enforces an
-explicit byte budget against the index's own space accounting (Q12) so a
-hydration that would not fit fails loudly instead of paging.
+explicit byte budget on the replica's own size, predicted from the index's
+space accounting (Q12, `ServingReplica.predicted_nbytes`), so a hydration
+that would not fit fails loudly instead of paging.
 """
 
 from __future__ import annotations
@@ -137,20 +138,6 @@ def _read_snapshot(idx, table: str, columns: list[str]):
     return getattr(idx, table).select(*columns).toArrow()
 
 
-def check_budget(idx, max_bytes: int) -> None:
-    """Raise ``MemoryError`` when the index's own space accounting (Q12,
-    `space_usage()`) exceeds ``max_bytes`` — hydration is an explicit
-    capacity decision, exactly like deploying the reference's RAM-resident
-    index to a host."""
-    total = idx.space_usage()["total"]
-    if total > max_bytes:
-        raise MemoryError(
-            f"index reports {total} bytes (space_usage), over the replica "
-            f"budget max_bytes={max_bytes}; shard the corpus at build time "
-            "or raise the budget"
-        )
-
-
 class ServingReplica:
     """In-memory twin of a `SeismicSparkIndex` for interactive serving.
 
@@ -201,6 +188,21 @@ class ServingReplica:
     arrays above as they are and leaves out the query-weight LUT and the
     component index, so a receiver builds its own.
     """
+
+    @staticmethod
+    def predicted_nbytes(usage: dict[str, int], n_docs: int) -> int:
+        """Bytes of the arrays above, the component index included, from an
+        index's `space_usage()` breakdown ``usage`` — no scan, as the
+        reference sizes its structures (inverted_index.rs:103-149).  Its
+        byte counts are element counts: blocks B = offsets/8, summary
+        elements S = codes, members M = weights/2 and forward elements
+        F = (forward − 8·n_docs)/12.  Hydration builds 32·B + 16·S + 4·M +
+        24·n_docs + 16·F bytes, the component index adds 16·S + 8·B, and
+        the row and term arrays take at most 40·B + 16 (terms ≤ rows ≤
+        blocks).  The query-weight LUT (≤ 32 MB) is not counted."""
+        b, s, m = usage["offsets"] // 8, usage["codes"], usage["weights"] // 2
+        f = (usage["forward"] - 8 * n_docs) // 12
+        return 80 * b + 32 * s + 4 * m + 24 * n_docs + 16 * f + 16
 
     # Dense query-weight LUT gate: one f64 slot per component id (32 MB at
     # the 4M default).  Larger id spaces fall back to the searchsorted
@@ -294,6 +296,18 @@ class ServingReplica:
     # ------------------------------------------------------- hydration ----
 
     @classmethod
+    def check_fits(cls, idx, max_bytes: int) -> None:
+        """Raise ``MemoryError`` when ``idx``'s replica, as
+        :meth:`predicted_nbytes` sizes it, is over ``max_bytes``."""
+        need = cls.predicted_nbytes(idx.space_usage(), idx.n_docs)
+        if need > max_bytes:
+            raise MemoryError(
+                f"replica predicted at {need} bytes from space_usage, over "
+                f"the budget max_bytes={max_bytes}; shard the corpus at "
+                "build time or raise the budget"
+            )
+
+    @classmethod
     def from_index(cls, idx, max_bytes: int = 4 << 30) -> "ServingReplica":
         """Hydrate from a built or loaded `SeismicSparkIndex`.
 
@@ -301,9 +315,9 @@ class ServingReplica:
         from the snapshot files when the index has them (a loaded index
         hydrates without a Spark job); gaps are varint-decoded and summaries
         dequantized ONCE here, so the query path touches only ready numpy
-        arrays.  Raises ``MemoryError`` over ``max_bytes`` (`check_budget`).
+        arrays.  Raises ``MemoryError`` over ``max_bytes`` (`check_fits`).
         """
-        check_budget(idx, max_bytes)
+        cls.check_fits(idx, max_bytes)
         vtbl = _read_snapshot(idx, "vocab", ["term", "term_id"])
         vocab = dict(
             zip(vtbl.column("term").to_pylist(),

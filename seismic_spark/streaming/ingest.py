@@ -223,14 +223,10 @@ def compact(
     dtw = textprep.bm25_weights(
         textprep.term_frequencies(tokens, id_col), vocab, n_docs, avgdl, id_col
     )
-    if cfg.value_type not in ("f64", None):
-        scale_max = None
-        if cfg.value_type in ("fixedu8", "fixedu16"):
-            scale_max = float(dtw.agg(F.max("weight")).collect()[0][0] or 0.0)
-        dtw = textprep.value_round_trip_col(dtw, cfg.value_type, scale_max)
-    dtw = snap("weights", dtw)
+    dtw = snap("weights", textprep.value_round_trip_col(dtw, cfg.value_type))
     forward = snap("forward", fwd.build_forward(dtw, id_col))
-    snap("postings", pst.build_postings(dtw, forward, cfg, n_terms, id_col))
+    snap("postings", pst.build_postings(dtw, forward, cfg, n_terms, id_col,
+                                        n_docs=n_docs))
 
     for stage in ("tokens", "vocab", "weights", "forward", "postings"):
         dst = os.path.join(index_path, stage)

@@ -149,8 +149,9 @@ def value_round_trip_col(
     """Apply the configured value-storage round-trip to a weight column —
     the P5 value-type matrix (build_inverted_index.rs:246-291,
     TomlInstructions.md:79-103): f64 (none), f32, f16 (default in the
-    reference), bf16, fixedu8, fixedu16.  Fixed-point types need the
-    corpus-wide max weight (``scale_max``) for the Q-grid."""
+    reference), bf16, fixedu8, fixedu16.  Fixed-point types scale their
+    Q-grid by the corpus-wide max weight, ``scale_max``; when it is not
+    given, one aggregate over ``col`` computes it here."""
     import numpy as np
     from pyspark.sql.types import DoubleType
 
@@ -159,7 +160,7 @@ def value_round_trip_col(
     if value_type in ("f64", "none", None):
         return weights_df
     if value_type in ("fixedu8", "fixedu16") and scale_max is None:
-        raise ValueError(f"{value_type} requires scale_max (corpus max weight)")
+        scale_max = float(weights_df.agg(F.max(col)).collect()[0][0] or 0.0)
 
     @pandas_udf(DoubleType())
     def rt(w: pd.Series) -> pd.Series:
