@@ -262,12 +262,15 @@ class CheckpointedBuild:
         self.metrics["total_sec"] = round(time.time() - t_start, 2)
         self.metrics["n_docs"] = n_docs
         self.metrics["docs_per_sec"] = round(n_docs / self.metrics["total_sec"], 1)
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump({"n_docs": n_docs, "avgdl": avgdl, "config": asdict(cfg)}, f)
-        self._flush()
         idx = SeismicSparkIndex(
             self.spark, vocab, forward, postings, n_docs, avgdl, cfg
         )
+        # the byte accounting rides in meta.json, as save() writes it, so a
+        # reload sizes its replica without the two aggregate scans
+        with open(os.path.join(self.path, "meta.json"), "w") as f:
+            json.dump({"n_docs": n_docs, "avgdl": avgdl, "config": asdict(cfg),
+                       "space_usage": idx.space_usage()}, f)
+        self._flush()
         # the stage snapshots ARE plain parquet scans of these dirs —
         # replica hydration can read them directly with Arrow (r6)
         idx.storage_paths["vocab"] = self._dir("vocab")

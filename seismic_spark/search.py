@@ -703,7 +703,14 @@ def merge_sorted_terms(t, w) -> QVec:
     _block_ubs and exact_score — and serving.ServingReplica._resolve) — a
     divergent copy silently breaks the documented bitwise guarantees.
     Terms may be ``row·2^32 + term_id`` keys (:func:`_query_keys`).
+
+    Python sequences with no repeated term are sorted as pairs in Python:
+    with distinct terms, (term asc) is the whole pinned order and there is
+    nothing to sum, so the arrays are the lexsort's without its round-trip.
     """
+    if isinstance(t, (list, tuple)) and t and len(set(t)) == len(t):
+        t, w = zip(*sorted(zip(t, w)))
+        return np.array(t, dtype=np.int64), np.array(w, dtype=np.float64)
     t = np.asarray(t, dtype=np.int64)
     w = np.asarray(w, dtype=np.float64)
     order = np.lexsort((w, t))

@@ -40,6 +40,17 @@ in any association (and −0.0 == 0.0 in every comparison a bound feeds).
 Blocks with m ≥ 3, and queries whose rows hold few elements per probe,
 take the dense scan (`ServingReplica._summary_ubs`).
 
+Around that arithmetic, a one-query `search` pays a fixed cost: resolving
+its tokens and building its pandas frame, which was about a third of a
+short query's time.  A query with no repeated term is sorted as (id,
+weight) pairs in Python (`search.merge_sorted_terms`), with no numpy
+round-trip.  A query with at most `query_cut` terms skips the cut sort, as
+no float depends on the cut terms' order.  The phase-1 docs and the
+candidates are deduplicated by sorting the fresh gathers in place.  The
+result frame is assembled from its four column blocks, as pyarrow's
+`to_pandas` does, instead of by the `pd.DataFrame` constructor
+(`ServingReplica._results_frame`).
+
 Deployment shape at scale (the 100 TB story): one replica per serving host,
 hydrated from the shared index tables on storage — the same snapshot the
 cluster built; Spark remains the build/refresh tier and the bulk-query tier
@@ -59,6 +70,7 @@ import logging
 
 import numpy as np
 import pandas as pd
+from pandas.core.internals import BlockManager, make_block
 
 from seismic_spark import codec
 from seismic_spark import search as srch
@@ -77,6 +89,13 @@ _NO_HIT_INDEX = {
     "_hit_vals": np.empty(0, dtype=np.float32),
     "_block_s_start": np.empty(0, dtype=np.int64),
 }
+# summary elements `_hit_index` sorts per step (whole rows, so a row
+# longer than this is one step): its temporaries stay a few MB, whatever
+# the size of the index it builds
+_HIT_INDEX_STEP = 1 << 18
+# the result frame's columns; `_results_frame` gives each frame a view, so
+# no two frames share one Index object (its name is mutable)
+_FRAME_COLUMNS = pd.Index(["query_id", "rank", "doc_id", "score"])
 
 
 def _flat_slices(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -86,6 +105,16 @@ def _flat_slices(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
         return np.empty(0, dtype=np.int64)
     offsets = np.cumsum(lens) - lens
     return np.arange(total, dtype=np.int64) + np.repeat(starts - offsets, lens)
+
+
+def _unique_fresh(a: np.ndarray) -> np.ndarray:
+    """``np.unique(a)`` of an array no one else holds, sorted in place: the
+    values that differ from their left neighbour."""
+    a.sort()
+    first = np.empty(a.size, dtype=bool)
+    first[:1] = True
+    np.not_equal(a[1:], a[:-1], out=first[1:])
+    return a[first]
 
 
 def _list_flat(col) -> tuple:
@@ -473,24 +502,40 @@ class ServingReplica:
         block (``_hit_blocks`` int32) and value (``_hit_vals``, the f32 the
         f64 ``s_vals`` widen exactly) — 16 B per element — plus each
         block's first element in ``s_terms``/``s_vals``
-        (``_block_s_start``)."""
+        (``_block_s_start``).
+
+        Rows are sorted a step of whole rows at a time, in row order, into
+        the three arrays allocated up front.  The key leads with the row,
+        so the steps' sorted runs concatenate to the whole sort, and a
+        stable sort within a step orders equal keys by snapshot position,
+        as one stable sort of every element would."""
+        n = self.row_s_stop - self.row_s_start
+        first = np.concatenate(([0], np.cumsum(n)))  # row r's slots start
+        keys = np.empty(first[-1], dtype=np.int64)
+        blocks = np.empty(first[-1], dtype=np.int32)
+        vals = np.empty(first[-1], dtype=np.float32)
+        cuts = np.unique(np.append(
+            first.searchsorted(np.arange(0, first[-1], _HIT_INDEX_STEP)), n.size
+        )).tolist()
+        for r0, r1 in zip(cuts, cuts[1:]):
+            at = slice(first[r0], first[r1])
+            el = _flat_slices(self.row_s_start[r0:r1], n[r0:r1])
+            key = np.repeat(np.arange(r0, r1, dtype=np.int64) << 32, n[r0:r1])
+            key |= self.s_terms[el]
+            order = np.argsort(key, kind="stable")
+            keys[at] = key[order]
+            # the step's elements lie block after block, rows in order
+            b0, b1 = self.row_blocks[r0], self.row_blocks[r1]
+            blocks[at] = np.repeat(np.arange(b0, b1, dtype=np.int32),
+                                   self.s_lens[b0:b1])[order]
+            vals[at] = self.s_vals[el[order]]
         nb = np.diff(self.row_blocks)
         blk_row = np.repeat(np.arange(nb.size), nb)
         # a row's blocks hold its summary elements consecutively, in order
         cs = np.concatenate(([0], np.cumsum(self.s_lens)))
-        s_start = (self.row_s_start[blk_row] + cs[:-1]
-                   - cs[self.row_blocks[:-1]][blk_row])
-        by_start = np.argsort(s_start, kind="stable")
-        # every element's block, in snapshot order
-        e_blk = np.repeat(by_start.astype(np.int32), self.s_lens[by_start])
-        key = blk_row[e_blk] << 32
-        key |= self.s_terms
-        order = np.argsort(key, kind="stable")
-        self._hit_blocks = e_blk[order]
-        del e_blk
-        self._hit_vals = self.s_vals.astype(np.float32)[order]
-        self._hit_keys = key[order]
-        self._block_s_start = s_start
+        self._hit_keys, self._hit_blocks, self._hit_vals = keys, blocks, vals
+        self._block_s_start = (self.row_s_start[blk_row] + cs[:-1]
+                               - cs[self.row_blocks[:-1]][blk_row])
 
     def _summary_ubs(
         self,
@@ -579,9 +624,14 @@ class ServingReplica:
         if self.terms.size == 0:
             return None
         # cut_terms: top-query_cut by (weight desc, term_id asc), then the
-        # cut terms that have postings (ti: their index into self.terms)
-        cut = np.lexsort((qt, -qw))[:query_cut]
-        ct, cw = qt[cut], qw[cut]
+        # cut terms that have postings (ti: their index into self.terms).
+        # No float depends on the cut terms' order (θ₀ is a max over terms,
+        # a UB a per-block sum, the dedups sort), so a query with no more
+        # than query_cut terms keeps them all in term order, unsorted.
+        ct, cw = qt, qw
+        if qt.size > query_cut:
+            cut = np.lexsort((qt, -qw))[:query_cut]
+            ct, cw = qt[cut], qw[cut]
         ti = np.minimum(np.searchsorted(self.terms, ct), self.terms.size - 1)
         hit = self.terms[ti] == ct
         if not hit.any():
@@ -616,7 +666,7 @@ class ServingReplica:
             # phase 1: best-UB block per matched term, exact-score the
             # union, k-th best tightens θ
             best = blk[_first_max(ub, offs, nbt)]
-            p1 = np.unique(
+            p1 = _unique_fresh(
                 self.m_pos[_flat_slices(self.m_starts[best], self.m_lens[best])]
             )
             if p1.size:
@@ -639,7 +689,7 @@ class ServingReplica:
         # unique/dedup set and the (score desc, doc asc) tie order are
         # exactly the id formulation's; only the k winners map back
         kept = blk[keep]
-        cands = np.unique(
+        cands = _unique_fresh(
             self.m_pos[_flat_slices(self.m_starts[kept], self.m_lens[kept])]
         )
         if stats is not None:
@@ -753,7 +803,14 @@ class ServingReplica:
     def _results_frame(self, hits: list) -> pd.DataFrame:
         """(query_id, top-k positions, scores) per query → the engine's
         (query_id, rank, doc_id, score) frame: object/int32/int64/float64
-        columns over a RangeIndex."""
+        columns over a RangeIndex.
+
+        The frame is assembled from its four blocks, one per column, as
+        pyarrow's `to_pandas` assembles one on pandas 2.x
+        (pyarrow/pandas_compat.py `table_to_dataframe`): the
+        `pd.DataFrame` constructor spends more on inferring and checking
+        its input than a 10-row frame costs.  Every column is an array made
+        for this answer, so the frame holds no array the replica keeps."""
         if len(hits) == 1:  # one served query: its arrays as they are
             qid, pos, scores = hits[0]
             qids = np.full(pos.size, qid, dtype=object)
@@ -770,11 +827,13 @@ class ServingReplica:
         else:
             qids, ranks = np.empty(0, object), np.empty(0, np.int32)
             pos, scores = np.empty(0, np.int64), np.empty(0, np.float64)
-        return pd.DataFrame(
-            {"query_id": qids, "rank": ranks, "doc_id": self.doc_ids[pos],
-             "score": scores},
-            index=pd.RangeIndex(pos.size), copy=False,
-        )
+        n = pos.size
+        blocks = [
+            make_block(col.reshape(1, n), placement=slice(i, i + 1))
+            for i, col in enumerate((qids, ranks, self.doc_ids[pos], scores))
+        ]
+        mgr = BlockManager(blocks, [_FRAME_COLUMNS.view(), pd.RangeIndex(n)])
+        return pd.DataFrame._from_mgr(mgr, mgr.axes)
 
     def search(
         self,

@@ -225,8 +225,13 @@ def compact(
     )
     dtw = snap("weights", textprep.value_round_trip_col(dtw, cfg.value_type))
     forward = snap("forward", fwd.build_forward(dtw, id_col))
-    snap("postings", pst.build_postings(dtw, forward, cfg, n_terms, id_col,
-                                        n_docs=n_docs))
+    postings = snap("postings", pst.build_postings(dtw, forward, cfg, n_terms,
+                                                   id_col, n_docs=n_docs))
+    # the byte accounting rides in meta.json, as save() writes it, so the
+    # load() below sizes its replica without the two aggregate scans
+    usage = SeismicSparkIndex(
+        spark, vocab, forward, postings, n_docs, avgdl, cfg
+    ).space_usage()
 
     for stage in ("tokens", "vocab", "weights", "forward", "postings"):
         dst = os.path.join(index_path, stage)
@@ -243,7 +248,8 @@ def compact(
     # PRE-compaction data from the CacheManager
     spark.catalog.refreshByPath(index_path)
     with open(os.path.join(index_path, "meta.json"), "w") as f:
-        json.dump({"n_docs": n_docs, "avgdl": avgdl, "config": asdict(cfg)}, f)
+        json.dump({"n_docs": n_docs, "avgdl": avgdl, "config": asdict(cfg),
+                   "space_usage": usage}, f)
     # pre-compaction lineage fingerprints no longer describe the snapshots —
     # replace them so a resumed CheckpointedBuild can't silently reuse stale
     # stages against the original (smaller) corpus

@@ -5,9 +5,11 @@ import json
 import os
 import shutil
 
+import pandas as pd
 import pytest
 
 from seismic_spark.checkpoint import CheckpointedBuild
+from seismic_spark.index import SeismicSparkIndex
 from seismic_spark.postings import IndexConfig
 
 
@@ -148,3 +150,35 @@ def test_batched_global_pruning_matches_unbatched(spark, docs_df, tmp_path):
         )
 
     assert full_snapshot(batched) == full_snapshot(plain)
+
+
+def test_reloaded_checkpoint_hydrates_with_no_spark_job(spark, docs_df,
+                                                        tmp_path):
+    """A checkpointed snapshot carries its byte accounting in meta.json, as
+    a saved one does, so `load` → `serving_replica()` of it runs no Spark
+    job (the size check reads meta.json, not two aggregate scans) and the
+    replica answers exactly as the in-session index's."""
+    path = str(tmp_path / "ckpt_serve")
+    idx = CheckpointedBuild(spark, path).build(
+        docs_df, IndexConfig(n_postings=100, blocking="fixed", block_size=4)
+    )
+    with open(os.path.join(path, "meta.json")) as f:
+        assert json.load(f)["space_usage"] == idx.space_usage()
+
+    sc = spark.sparkContext
+    group = "test-checkpoint-restart-to-serving"
+    sc.setJobGroup(group, "load + hydrate")
+    try:
+        rep = SeismicSparkIndex.load(spark, path).serving_replica()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    queries = [("q0", ["term_1", "alpha"], [1.0, 0.5]),
+               ("q1", ["term_4", "term_2", "beta"], [0.7, 1.2, 0.3])]
+    want = idx.serving_replica().batch_search(queries, k=5, heap_factor=0.9)
+    assert want["query_id"].nunique() == 2
+    pd.testing.assert_frame_equal(
+        rep.batch_search(queries, k=5, heap_factor=0.9), want,
+        check_exact=True,
+    )

@@ -52,7 +52,7 @@ CASES = [c[:2] for c in CORPORA] + [
 
 
 @pytest.mark.parametrize("seed,cfg", CASES, ids=[
-    "geo", "kmeans_salted", "exact_fixedu8", "fixed_salted"])
+    "geo", "salted", "exact_fixedu8", "fixed_salted"])
 def test_predicted_nbytes_bounds_the_hydrated_arrays(spark, tmp_path, seed,
                                                      cfg):
     """Built and from a saved snapshot (packed for the fixed-u8 corpus,

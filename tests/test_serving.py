@@ -9,6 +9,7 @@ changing a single result bit (seismic_spark/serving.py; the reference's own
 in-process serving, inverted_index.rs:38, pylib/mod.rs:59-291)."""
 
 import os
+import pickle
 
 import numpy as np
 import pandas as pd
@@ -203,12 +204,15 @@ def test_replica_lut_off_matches_lut(kernel_indexes):
     assert rep._qw_lut is None and lut_rep._qw_lut is not None
 
 
-def test_replica_frame_contract(kernel_indexes):
+def test_replica_frame_contract(spark, kernel_indexes):
     """`search`, `batch_search` and `bruteforce` return one frame layout:
     columns (query_id, rank, doc_id, score) as object/int32/int64/float64
     over a RangeIndex — for a hit, an unknown-token query, an empty query
     and a multi-query batch.  A one-query `search` equals `batch_search`
-    of that query exactly."""
+    of that query exactly.  Each frame, assembled from its blocks, equals
+    the public `pd.DataFrame` constructor's frame of its columns, works
+    with the usual pandas and Spark operations, and owns its arrays: a
+    write to it leaves the replica's `doc_ids` as they were."""
     rep = kernel_indexes["serving"].serving_replica()
     queries = synth_queries(600, n_queries=4, seed=3)
     unknown = ("q_unknown", ["zz-not-a-token"], [1.0])
@@ -232,6 +236,42 @@ def test_replica_frame_contract(kernel_indexes):
         hit, rep.batch_search(queries[:1], k=10, heap_factor=0.9),
         check_exact=True,
     )
+
+    doc_ids = rep.doc_ids.copy()
+    for frame in [hit, batch, brute] + misses:
+        public = pd.DataFrame({c: frame[c].to_numpy() for c in frame.columns})
+        pd.testing.assert_frame_equal(frame, public, check_exact=True)
+        pd.testing.assert_frame_equal(
+            frame.sort_values(["score", "doc_id"]),
+            public.sort_values(["score", "doc_id"]), check_exact=True,
+        )
+        pd.testing.assert_frame_equal(
+            frame.groupby("query_id").agg({"score": "max", "rank": "count"}),
+            public.groupby("query_id").agg({"score": "max", "rank": "count"}),
+            check_exact=True,
+        )
+        both = pd.concat([frame, public], ignore_index=True)
+        assert len(both) == 2 * len(frame)
+        pd.testing.assert_frame_equal(both.iloc[len(frame):]
+                                      .reset_index(drop=True), public,
+                                      check_exact=True)
+        pd.testing.assert_frame_equal(
+            pickle.loads(pickle.dumps(frame)), public,
+            check_exact=True,
+        )
+        if len(frame):
+            sdf = spark.createDataFrame(frame)
+            assert sdf.dtypes == [("query_id", "string"), ("rank", "int"),
+                                  ("doc_id", "bigint"), ("score", "double")]
+            assert _rows(sdf) == _rows(frame)
+        frame["extra"] = frame["rank"] * 2
+        assert list(frame.columns) == ["query_id", "rank", "doc_id", "score",
+                                       "extra"]
+        frame.loc[:, "doc_id"] = -1
+        frame["doc_id"] = frame["doc_id"] - 1
+        assert (frame["doc_id"] == -2).all()
+        assert list(public.columns) == ["query_id", "rank", "doc_id", "score"]
+    assert np.array_equal(rep.doc_ids, doc_ids)
 
 
 def test_first_max_matches_per_segment_argmax():

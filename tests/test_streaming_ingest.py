@@ -4,6 +4,7 @@ re-ingested URL never duplicates forward/posting rows, and search sees the
 new docs — the `add_document` contract (inverted_index_wrapper.rs:680-719)
 at micro-batch granularity."""
 
+import json
 import os
 
 import pytest
@@ -151,6 +152,10 @@ def test_compact_equals_from_scratch(spark, tmp_path):
     assert snap(idx) == snap(scratch)
     assert idx.n_docs == scratch.n_docs
     assert idx.avgdl == scratch.avgdl
+    # both snapshots record their byte accounting, so neither reload scans
+    for path in (ipath, str(tmp_path / "scratch")):
+        with open(os.path.join(path, "meta.json")) as f:
+            assert json.load(f)["space_usage"] == scratch.space_usage()
     vs = sorted((r.term, r.term_id, r.df) for r in idx.vocab.collect())
     vg = sorted((r.term, r.term_id, r.df) for r in scratch.vocab.collect())
     assert vs == vg

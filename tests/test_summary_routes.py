@@ -76,7 +76,7 @@ def corpora(spark):
 
 
 @pytest.mark.parametrize("seed", [c[0] for c in CORPORA],
-                         ids=["geo", "kmeans_salted", "exact_fixedu8"])
+                         ids=["geo", "salted", "exact_fixedu8"])
 def test_routes_agree_on_random_corpora(spark, monkeypatch, corpora, seed):
     """Forced hit route, forced dense route and the default answer every
     query bitwise alike, with equal `search_stats` and UB arrays, in both
